@@ -105,6 +105,24 @@ object Bench {
     "d21_simhash_wide", "m10_media_dedup_wide", "d22_simhash_dual",
     "e29_pq_refine")
 
+  /** The r12 comparator set the compact stdout line always carries. */
+  private[graft] val pinned = Seq(
+    "e9_ann_recall", "d2_ngram_jaccard", "e25_ivf_balanced", "e13_ivf_pq",
+    "e29_pq_refine", "x34_bpe_encode", "g1_pagerank", "d15_band_tuning",
+    "g5_bfs_hops", "g4_label_prop", "x33_bpe_vocab", "m8_phash_dct",
+    "d16_tfidf_dedup", "g9_knn_graph", "g3_kcore")
+
+  /** The compact line's (query, seconds) entries: the slowest 15 timed
+    * queries, then every pinned query the run attempted. A failed pinned
+    * query keeps its -1 sentinel rather than vanishing from the line.
+    */
+  private[graft] def compactEntries(results: Seq[(String, Double)]): Seq[(String, Double)] = {
+    val byName = results.toMap
+    val slowNames = results.filter(_._2 >= 0).sortBy(-_._2).take(15).map(_._1)
+    (slowNames ++ pinned.filter(p => byName.contains(p) && !slowNames.contains(p)))
+      .map(k => k -> byName(k))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -479,16 +497,8 @@ object Bench {
     // leave by genuinely leaving the registry) and unions the current
     // slowest 15 on top. ~30 entries ≈ 1.3 KB — inside the driver's
     // 2000-char stdout tail with the canary block.
-    val pinned = Seq(
-      "e9_ann_recall", "d2_ngram_jaccard", "e25_ivf_balanced", "e13_ivf_pq",
-      "e29_pq_refine", "x34_bpe_encode", "g1_pagerank", "d15_band_tuning",
-      "g5_bfs_hops", "g4_label_prop", "x33_bpe_vocab", "m8_phash_dct",
-      "d16_tfidf_dedup", "g9_knn_graph", "g3_kcore")
-    val byName = results.collect { case (k, v, _, _) if v >= 0 => k -> v }.toMap
-    val slowNames = results.filter(_._2 >= 0).sortBy(-_._2).take(15).map(_._1)
-    val compactNames =
-      (slowNames ++ pinned.filter(p => byName.contains(p) && !slowNames.contains(p)))
-    val slow = compactNames.map(k => "\"" + k + "\":" + f(byName(k)))
+    val slow = compactEntries(results.map(r => r._1 -> r._2))
+      .map { case (k, v) => "\"" + k + "\":" + f(v) }
       .mkString("{", ",", "}")
     val nFail = results.count(_._2 < 0)
     println(s"""{"metric":"total","value":${f(total)},"unit":"sec","queries":$slow,"sf":"$sfDir","n_queries":${results.size},"n_failed":$nFail,$canaries,"note":"slowest 15 of ${results.size} + the pinned r12 comparator set (stable under improvement); full per-query map with cores_eff and view tags on the previous stdout line; canary = fixed CPU-bound fold timed first/mid/last (host-window normalizer)"}""")

@@ -482,8 +482,11 @@ object ScaleProbe {
         spark.catalog.clearCache()
         emb.persist(); emb.count()
         val t0 = System.nanoTime()
+        // balancedCells returns the slim (vec_id, cid, scid, arank)
+        // assignment; re-attach the vectors as balancedPairs does
         val fin = graft.queries.SimilarityQueries
           .balancedCells(inflated, nCent, cap)
+          .join(inflated, Seq("vec_id"))
           .select(col("vec_id"), col("v"), col("cid"), col("scid"),
             graft.functions.FastVec.norm(col("v")).as("nv"))
           .persist()

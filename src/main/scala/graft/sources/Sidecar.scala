@@ -20,8 +20,9 @@ object Sidecar {
   /** Read the registry (empty dataset if the directory doesn't exist yet). */
   def read(spark: SparkSession, dir: String): Dataset[String] = {
     import spark.implicits._
-    val fs = org.apache.hadoop.fs.FileSystem.get(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(dir)))
+    // the path's own filesystem, not fs.defaultFS (see Compact.partitionStats)
+    val path = new org.apache.hadoop.fs.Path(dir)
+    if (path.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(path))
       spark.read.textFile(dir).filter(length(trim(col("value"))) > 0).map(_.trim)
     else spark.emptyDataset[String]
   }
