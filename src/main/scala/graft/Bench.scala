@@ -297,31 +297,22 @@ object Bench {
     // min — a least-noise estimate, flagged in the JSON. Sub-second
     // queries fluctuating ±50% contributed several seconds of pure noise
     // to single-shot totals.
-    def clearSlate(): Unit = {
-      graft.queries.DedupQueries.clearMemo()
-      graft.queries.GraphQueries.clearMemo()
-      graft.queries.SimilarityQueries.clearPcaMemo()
-      graft.queries.SimilarityQueries.clearAdcMemo()
-      spark.catalog.clearCache()
-    }
+    def clearSlate(): Unit = Memo.reset(spark)
     // Pre-build every session view BEFORE the timed loop (r8 verdict #7):
     // each one-time build cost is reported separately in view_build_sec,
     // so no per-query row silently carries the build of whichever view it
     // happened to touch first (the driver's r8 headline had d15 at 5.1 s
-    // for exactly that reason). Disable with SPARK_GRAFT_NO_PREBUILD=1 to
-    // measure cold first-consumer behavior.
-    if (!sys.env.contains("SPARK_GRAFT_NO_PREBUILD")) {
-      val t0 = System.nanoTime()
-      graft.queries.DedupQueries.prebuildViews(spark, sfDir)
-      graft.queries.GraphQueries.prebuildViews(spark, sfDir)
-      graft.queries.SimilarityQueries.prebuildViews(spark, sfDir)
-      graft.queries.PipelineExtras.prebuildViews(spark, sfDir)
-      System.err.println(
-        f"[bench] view pre-build ${(System.nanoTime() - t0) / 1e9}%.1f s " +
-          "(per-table costs in view_build_sec)")
-      clearSlate()
-      System.gc()
-    }
+    // for exactly that reason).
+    val t0 = System.nanoTime()
+    graft.queries.DedupQueries.prebuildViews(spark, sfDir)
+    graft.queries.GraphQueries.prebuildViews(spark, sfDir)
+    graft.queries.SimilarityQueries.prebuildViews(spark, sfDir)
+    graft.queries.PipelineExtras.prebuildViews(spark, sfDir)
+    System.err.println(
+      f"[bench] view pre-build ${(System.nanoTime() - t0) / 1e9}%.1f s " +
+        "(per-table costs in view_build_sec)")
+    clearSlate()
+    System.gc()
     canary() // untimed codegen warm: canary_first must measure the host, not JIT
     val canaryFirst = canary()
     // Mid-session canary stamps (r12 verdict #2): the open/close canaries

@@ -82,14 +82,6 @@ object DispatchProbe {
     (System.nanoTime() - t0) / 1e9
   }
 
-  private def clearSlate(s: SparkSession): Unit = {
-    graft.queries.DedupQueries.clearMemo()
-    graft.queries.GraphQueries.clearMemo()
-    graft.queries.SimilarityQueries.clearPcaMemo()
-    graft.queries.SimilarityQueries.clearAdcMemo()
-    s.catalog.clearCache()
-  }
-
   /** Operator-shape fingerprint: counts of physical node names in the
     * formatted plan, partition numbers stripped — two legs whose maps
     * match run the same plan, only sized differently.
@@ -116,13 +108,13 @@ object DispatchProbe {
         val walls = subset.map { name =>
           val q = SparkEntry.queries(name)
           def once(): Double = {
-            clearSlate(s)
+            Memo.reset(s)
             val t0 = System.nanoTime()
             q(s, sfDir).count()
             (System.nanoTime() - t0) / 1e9
           }
           val w = math.min(once(), once())
-          clearSlate(s); System.gc()
+          Memo.reset(s); System.gc()
           name -> w
         }
         val c1 = canary(s)
@@ -131,7 +123,7 @@ object DispatchProbe {
           .mkString("{", ",", "}")
         val shapes = subset.map { name =>
           s""""$name":"${shape(s, sfDir, name)}"""" }.mkString("{", ",", "}")
-        clearSlate(s)
+        Memo.reset(s)
         println(f"""PROBEJSON {"probe":"dispatch","leg":"$leg","cpus":$cpus,"total_sec":$total%.3f,"canary_first_sec":$c0%.3f,"canary_last_sec":$c1%.3f,"queries":$qs,"plan_shape":$shapes}""")
       } finally s.stop()
     }

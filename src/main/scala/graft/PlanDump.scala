@@ -55,11 +55,7 @@ object PlanDump {
       } catch { case e: Throwable =>
         System.err.println(s"[plandump] $name failed: ${e.getMessage}")
       }
-      graft.queries.DedupQueries.clearMemo()
-      graft.queries.GraphQueries.clearMemo()
-      graft.queries.SimilarityQueries.clearPcaMemo()
-      graft.queries.SimilarityQueries.clearAdcMemo()
-      spark.catalog.clearCache()
+      Memo.reset(spark)
     }
     spark.stop()
   }

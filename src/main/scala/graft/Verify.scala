@@ -52,13 +52,10 @@ object Verify {
       // (d17's docs projection, e22's proj, c15's census, …) are done once
       // the parquet write above materialized the result, but nothing
       // unpersists them — over the full-registry session the
-      // MEMORY_AND_DISK entries accumulate and evict each other. Memos are
-      // cleared together with the cache so no memoized plan silently
-      // recomputes through a dropped persist.
-      graft.queries.DedupQueries.clearMemo()
-      graft.queries.GraphQueries.clearMemo()
-      graft.queries.SimilarityQueries.clearPcaMemo()
-      spark.catalog.clearCache()
+      // MEMORY_AND_DISK entries accumulate and evict each other. Cleared
+      // by `Memo.reset`, which drops the memos together with the cache so
+      // no memoized plan silently recomputes through a dropped persist.
+      Memo.reset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

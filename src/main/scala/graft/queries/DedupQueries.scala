@@ -142,16 +142,11 @@ object DedupQueries {
     * pipeline once at write time; every later consumer reads a
     * hash-partitioned sorted scan with no Exchange on its side
     * (PlanSpec-asserted). Not a correctness shortcut — the table IS
-    * `MinHashLSH.nearDupPairs`' output; `clearMemo` (bench hygiene) drops
-    * only RAM handles and the table survives, exactly like the warehouse
-    * table a cluster deployment would keep.
+    * `MinHashLSH.nearDupPairs`' output; [[graft.Memo.reset]] (bench
+    * hygiene) leaves the table in place, exactly like the warehouse table
+    * a cluster deployment would keep.
     */
   private val PairBuckets = 16
-
-  /** Drop the in-memory handles (benchmark hygiene — the bucketed tables
-    * stay, see [[graft.sources.MatView.clearMemo]]).
-    */
-  def clearMemo(): Unit = graft.sources.MatView.clearMemo()
 
   /** The corpus's n-gram shingle table (doc_id, shingle) as a write-once
     * bucketed view — the INVERTED-INDEX posting table every dedup pass
@@ -264,22 +259,27 @@ object DedupQueries {
     */
   private[graft] def d2Pairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    // The builder runs at most once per session: persist the shingle-view
-    // scan for its ~6 subtree consumers (prefix index, both verify sides,
-    // both count sides), release it once the table is written.
-    var shp: Option[org.apache.spark.sql.DataFrame] = None
-    val out = graft.sources.MatView.of(s, s"graft_d2pairs_$tag", "a", PairBuckets) {
-      val sh = shTable(s, dir, 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sh.count()
-      shp = Some(sh)
+    graft.sources.MatView.of(s, s"graft_d2pairs_$tag", "a", PairBuckets) {
+      val sh = sh5Persisted(s, dir)
       MinHashLSH
         .verifyJaccard(MinHashLSH.prefixFilteredPairs(sh, "doc_id"), sh, "doc_id")
         .filter(col("jaccard") >= 0.5)
     }
-    shp.foreach(_.unpersist())
-    out
   }
+
+  /** The 5-gram shingle view read into RAM for the d2/d9 pair builders'
+    * ~6 subtree consumers each (prefix index, both verify sides, both
+    * count sides). One [[graft.Memo]] entry both builders share, so
+    * neither can evict the other's input mid-join; released by
+    * [[graft.Memo.reset]].
+    */
+  private def sh5Persisted(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
+    graft.Memo(s, s"sh5Persisted:$dir") {
+      val sh = shTable(s, dir, 5)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      sh.count()
+      sh
+    }
 
   /** d9's verified containment pair table (asymmetric prefix filter at
     * t = 4/5, exact-verified ≥ 0.8) as a write-once bucketed view — same
@@ -290,18 +290,12 @@ object DedupQueries {
     */
   private[graft] def d9Pairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    var shp: Option[org.apache.spark.sql.DataFrame] = None
-    val out = graft.sources.MatView.of(s, s"graft_d9pairs_$tag", "a", PairBuckets) {
-      val sh = shTable(s, dir, 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sh.count()
-      shp = Some(sh)
+    graft.sources.MatView.of(s, s"graft_d9pairs_$tag", "a", PairBuckets) {
+      val sh = sh5Persisted(s, dir)
       MinHashLSH
         .verifyContainment(MinHashLSH.containmentPairs(sh, "doc_id", 4, 5), sh, "doc_id")
         .filter(col("containment") >= 0.8)
     }
-    shp.foreach(_.unpersist())
-    out
   }
 
   /** d5's cluster-label table (doc_id → min-reachable-id cluster) over

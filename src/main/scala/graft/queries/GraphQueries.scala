@@ -50,21 +50,12 @@ object GraphQueries {
     * is a bucketed warehouse table; here it lives under /tmp per JVM.
     *
     * Not a correctness shortcut: each query's semantics are unchanged —
-    * the table IS `partCoEdges` symmetrized, and `clearMemo` (bench
-    * hygiene) drops only the in-memory handles; the on-disk materialized
-    * view intentionally survives, exactly like a warehouse table would.
+    * the table IS `partCoEdges` symmetrized, and [[graft.Memo.reset]]
+    * (bench hygiene) leaves the on-disk materialized view in place,
+    * exactly like a warehouse table would survive; a re-measure re-plans
+    * from the table scan, not from this session's RAM.
     */
   private val CoBuckets = 16
-
-  /** Drop the memoized in-memory handles (benchmark hygiene — called by
-    * Bench next to `DedupQueries.clearMemo`). The bucketed TABLES stay
-    * ([[graft.sources.MatView]] owns them): they are the materialized view
-    * a cluster deployment would keep in its warehouse; a re-measure after
-    * clearMemo re-plans from the table scan, not from this session's RAM.
-    */
-  def clearMemo(): Unit = {
-    graft.sources.MatView.clearMemo(); labelCache.clear(); triCache.clear()
-  }
 
   /** Materialize this family's views once per session (Bench pre-build —
     * r8 verdict #7; build cost lands in view_build_sec).
@@ -275,15 +266,11 @@ object GraphQueries {
     * shared by g2 (raw counts) and g11 (clustering coefficient). One
     * definition, one session persist of the oriented edge set: the two
     * previously-inlined copies each built and cached it (double work in a
-    * run executing both, drift risk under future edits). Cleared by
-    * [[clearMemo]]; the oriented set's RAM is reclaimed by the caller's
-    * `catalog.clearCache()` (Bench's clean-slate protocol).
+    * run executing both, drift risk under future edits). Cleared, with
+    * the oriented set's persist, by [[graft.Memo.reset]].
     */
-  private val triCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private def triCensus(s: SparkSession, dir: String): DataFrame =
-    triCache.getOrElseUpdate((s, dir), {
+    graft.Memo(s, s"triCensus:$dir") {
       val (edges, deg) = coEdgesDeg(s, dir)
       val ranked = edges
         .join(deg.select(col("id").as("u"), col("d").as("du")), Seq("u"))
@@ -303,7 +290,7 @@ object GraphQueries {
         .join(o.select(col("b").as("b2"), col("a").as("b1")), Seq("b1", "b2"))
       tri.select(explode(array(col("a"), col("b1"), col("b2"))).as("id"))
         .groupBy("id").agg(count(lit(1)).as("n_tri"))
-    })
+    }
 
   private val KcoreK = 2
   private val KcoreRounds = 4
@@ -815,14 +802,10 @@ object GraphQueries {
   )
 
   /** Memoized g4 label assignment shared by g4/g8 (the edge-memo rule:
-    * one propagation per session, cleared by [[clearMemo]]).
+    * one propagation per session, cleared by [[graft.Memo.reset]]).
     */
-  private val labelCache = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), DataFrame]
-
   private def coLabels(s: SparkSession, dir: String): DataFrame =
-    labelCache.getOrElseUpdate((s, dir),
-      labelAssign(coAdjDeg(s, dir)._1, LpRounds))
+    graft.Memo(s, s"coLabels:$dir")(labelAssign(coAdjDeg(s, dir)._1, LpRounds))
 
   private val HitsMass = 1000000L
   private val HitsRounds = 3

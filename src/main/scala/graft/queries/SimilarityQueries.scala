@@ -602,47 +602,14 @@ object SimilarityQueries {
     * `subv` lineage that was never unpersisted): the build persists its
     * per-subspace table only for its own duration, materializes the
     * n-row result, unpersists the intermediate, and hands every later
-    * caller the same persisted result. [[clearAdcMemo]] restores Bench's
-    * clean-slate discipline.
+    * caller the same persisted result. A [[graft.Memo]] entry, so
+    * racing callers (e9's leg pool) share one build; cleared by
+    * [[graft.Memo.reset]].
     */
-  /** One-shot build cell (r12 verdict #7): TrieMap.getOrElseUpdate may
-    * evaluate the by-name default on TWO racing threads and drop the
-    * loser — with a raw DataFrame value that ran `pqAdcBuild` twice and
-    * leaked the loser's persisted table until [[clearAdcMemo]]. Racing
-    * threads may allocate two Cells (free — the build is not run), but
-    * only the stored winner's `df` is ever forced, and `lazy val` gives
-    * exactly-once build under JVM synchronization. `ifBuilt` lets cleanup
-    * unpersist without FORCING an unbuilt cell.
-    */
-  private final class AdcCell(build: () => org.apache.spark.sql.DataFrame) {
-    private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    lazy val df: org.apache.spark.sql.DataFrame = {
-      val d = build(); adcBuilds.incrementAndGet(); done.set(true); d
-    }
-    def ifBuilt: Option[org.apache.spark.sql.DataFrame] =
-      if (done.get) Some(df) else None
-  }
-
-  /** Completed ADC builds, total — the [[AdcCellSpec]] race probe's
-    * observable (not used by any query).
-    */
-  private[graft] val adcBuilds = new java.util.concurrent.atomic.AtomicInteger
-
-  private val adcCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String, Boolean, Int, Int), AdcCell]
-
-  /** Drop the memoized ADC tables (benchmark hygiene — see Bench). */
-  def clearAdcMemo(): Unit = {
-    adcCache.values.foreach(_.ifBuilt.foreach(df => scala.util.Try(df.unpersist())))
-    adcCache.clear()
-  }
-
   private[graft] def pqAdcDists(s: SparkSession, dir: String,
       normalize: Boolean = false, M: Int = 4,
       K: Int = 8): org.apache.spark.sql.DataFrame =
-    adcCache.getOrElseUpdate((s, dir, normalize, M, K),
-      new AdcCell(() => pqAdcBuild(s, dir, normalize, M, K))).df
+    graft.Memo(s, s"pqAdc:$dir:$normalize:$M:$K")(pqAdcBuild(s, dir, normalize, M, K))
 
   private def pqAdcBuild(s: SparkSession, dir: String,
       normalize: Boolean, M: Int,
@@ -2045,16 +2012,9 @@ object SimilarityQueries {
     * (vec_id, i, q — persisted once) and the 3-round renormalized dominant
     * direction `w` (i, w). Memoized per (session, dir) the [[DedupQueries
     * .d3Pairs]] way so e21's audit prices only its own aggregates on top of
-    * the persisted matrix, never a second model build; [[clearPcaMemo]]
-    * restores Bench's clean-slate discipline.
+    * the persisted matrix, never a second model build; cleared by
+    * [[graft.Memo.reset]].
     */
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String),
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
-
-  /** Drop the memoized PCA model (benchmark hygiene — see Bench). */
-  def clearPcaMemo(): Unit = pcaCache.clear()
-
   /** The ×1024-quantized BIGINT component matrix (vec_id, i, q) as a
     * write-once bucketed view — the corpus-wide quantized vector table
     * e20's power iteration AND e21's anisotropy audit both start from
@@ -2074,7 +2034,7 @@ object SimilarityQueries {
 
   private def pcaModel(s: SparkSession, dir: String):
       (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) =
-    pcaCache.getOrElseUpdate((s, dir), {
+    graft.Memo(s, s"pcaModel:$dir") {
       // Read the view into RAM before the rounds reference it from six
       // subtrees (the g10 lesson: lazy re-entry of a table scan re-plans
       // per query stage; an InMemoryRelation is reused outright).
@@ -2113,7 +2073,7 @@ object SimilarityQueries {
               org.apache.spark.sql.types.LongType, nullable = true))))
       }
       (x, w)
-    })
+    }
 
   /** Oracle CTE chain of [[pcaModel]] (quantized matrix `x`, rounds
     * `w0`→`w3`) — shared by e20's result text and e21's audit so both

@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.col
-import scala.collection.concurrent.TrieMap
+import java.util.concurrent.ConcurrentHashMap
+import scala.jdk.CollectionConverters._
 
 /** Write-once BUCKETED materialized views for shared derivations — the
   * generalization of the r7 g-family fix (co-purchase adjacency/degrees,
@@ -21,9 +22,10 @@ import scala.collection.concurrent.TrieMap
   * This object is that warehouse table, scoped to /tmp for the sandbox.
   *
   * Semantics are unchanged — the table IS the derivation's output; only
-  * the physical pass is shared. `clearMemo` (bench hygiene) drops the RAM
-  * handles; the on-disk table intentionally survives, exactly like a
-  * warehouse table would between cluster jobs.
+  * the physical pass is shared. No handle is memoized: the catalog
+  * records whether a view exists, so [[graft.Memo.reset]] (bench hygiene)
+  * leaves every view in place, exactly like a warehouse table would
+  * survive between cluster jobs.
   *
   * Paths are (JVM, session)-scoped: the per-JVM random root keeps a fresh
   * run from ever reading a stale corpus, and the per-SESSION subdirectory
@@ -34,14 +36,12 @@ import scala.collection.concurrent.TrieMap
   */
 object MatView {
 
-  private val memo = TrieMap.empty[(SparkSession, String), DataFrame]
-
   /** table → one-time build seconds, accumulated across sessions; dumped
     * into the bench artifact so view-backed timings stay self-describing
     * (the min-of-2 clean-slate protocol otherwise reports only the
     * warm-table read and the build cost would vanish from the JSON).
     */
-  private val buildLog = TrieMap.empty[String, Double]
+  private val buildLog = new ConcurrentHashMap[String, Double]().asScala
 
   private val buildLock = new Object
 
@@ -50,7 +50,7 @@ object MatView {
     * clean-slate protocol reports warm-table time, so the artifact must
     * say which timings lean on a materialized view).
     */
-  private val touched = TrieMap.empty[String, Unit]
+  private val touched = new ConcurrentHashMap[String, Unit]().asScala
 
   /** The view tables resolved since the last call, then reset. */
   def drainTouched(): Set[String] = {
@@ -84,15 +84,15 @@ object MatView {
   private def sessionTag(s: SparkSession): String =
     s"s${sessionIds.computeIfAbsent(s, _ => nextSessionId.getAndIncrement())}"
 
-  /** The memoized bucketed table `table`, built from `build` exactly once
-    * per (session, table) — later calls (and later SESSIONS sharing the
-    * catalog) read the existing table. `key`/`buckets` fix the bucket
-    * layout; consumers joining or grouping on `key` plan with no Exchange.
+  /** The bucketed table `table`, built from `build` exactly once per
+    * catalog — later calls (and later SESSIONS sharing the catalog) read
+    * the existing table. `key`/`buckets` fix the bucket layout; consumers
+    * joining or grouping on `key` plan with no Exchange.
     */
   def of(s: SparkSession, table: String, key: String, buckets: Int)(
       build: => DataFrame): DataFrame = {
     touched.put(table, ())
-    memo.getOrElseUpdate((s, table), buildLock.synchronized {
+    if (!s.catalog.tableExists(table)) buildLock.synchronized {
       if (!s.catalog.tableExists(table)) {
         val t0 = System.nanoTime()
         Bucketed.write(build, table, key, buckets,
@@ -100,12 +100,9 @@ object MatView {
         buildLog.put(table,
           buildLog.getOrElse(table, 0.0) + (System.nanoTime() - t0) / 1e9)
       }
-      s.table(table)
-    })
+    }
+    s.table(table)
   }
-
-  /** Drop the in-memory handles (bench hygiene). Tables stay on disk. */
-  def clearMemo(): Unit = memo.clear()
 
   /** One-time build cost per table (seconds), for artifact self-description. */
   def buildCosts: Map[String, Double] = buildLog.toMap
@@ -114,7 +111,7 @@ object MatView {
     * staleness contract in e26's style: a consumer can read how far the
     * view has drifted from its base build and decide when to compact.
     */
-  private val refreshLog = TrieMap.empty[String, (Long, Long, Double)]
+  private val refreshLog = new ConcurrentHashMap[String, (Long, Long, Double)]().asScala
 
   def refreshCosts: Map[String, (Long, Long, Double)] = refreshLog.toMap
 
@@ -163,9 +160,8 @@ object MatView {
       val (c, r, sec) = refreshLog.getOrElse(table, (0L, 0L, 0.0))
       refreshLog.put(table,
         (c + 1, r + n, sec + (System.nanoTime() - t0) / 1e9))
-      // Cached plans hold the table's file listing at resolve time; drop the
-      // handle so the next consumer re-resolves and sees the appended files.
-      memo.remove((s, table))
+      // Cached plans hold the table's file listing at resolve time; refresh
+      // so the next consumer re-resolves and sees the appended files.
       s.catalog.refreshTable(table)
       // Bucket-file compaction policy (r10 verdict #5): each refresh appends
       // one file per touched bucket, so a long-lived view otherwise degrades
@@ -209,7 +205,7 @@ object MatView {
     * of the staleness contract: a reader of [[refreshCosts]] sees how far
     * the view drifted, a reader of this sees when the janitor paid it back.
     */
-  private val compactLog = TrieMap.empty[String, (Long, Double)]
+  private val compactLog = new ConcurrentHashMap[String, (Long, Double)]().asScala
 
   def compactCosts: Map[String, (Long, Double)] = compactLog.toMap
 
@@ -234,7 +230,7 @@ object MatView {
     *
     * READER QUIESCENCE (r11 advice): unlike [[append]], which only ever
     * ADDS files, compaction physically replaces the live directory — a
-    * reader holding a plan resolved BEFORE the swap (a memoized handle,
+    * reader holding a plan resolved BEFORE the swap (a held handle,
     * or an in-flight scan) references file paths that no longer exist
     * after it and fails with FileNotFoundException mid-scan. Deferring
     * the aside-directory delete would NOT help: the rename moves the old
@@ -242,8 +238,8 @@ object MatView {
     * surviving concurrent readers needs manifest-level snapshots (an
     * Iceberg-class table format), not a directory swap. The contract is
     * therefore single-writer PLUS quiesced readers across a compact();
-    * handles obtained after it re-resolve cleanly (the memo is dropped
-    * and the catalog refreshed below). Bench/Verify honor this by
+    * handles obtained after it re-resolve cleanly (the catalog is
+    * refreshed below). Bench/Verify honor this by
     * construction — queries never run concurrently with a refresh.
     */
   def compact(s: SparkSession, table: String, key: String, buckets: Int): Unit =
@@ -277,7 +273,6 @@ object MatView {
       // external staging table: DROP removes the catalog entry only
       s.sql(s"DROP TABLE $stagingTable")
       AtomicSwap.publish(fs, staged, live)
-      memo.remove((s, table))
       s.catalog.refreshTable(table)
       val (c, sec) = compactLog.getOrElse(table, (0L, 0.0))
       compactLog.put(table, (c + 1, sec + (System.nanoTime() - t0) / 1e9))

@@ -3,17 +3,16 @@ package graft
 import graft.sources.MatView
 import org.apache.spark.sql.functions._
 
-/** `sources/MatView` behavior: write-once semantics, clearMemo survival,
-  * and the r7-advice hazard fix — a SECOND SparkSession in the same JVM
-  * (own catalog ⇒ tableExists = false) must rebuild under its OWN
-  * session-scoped path instead of SaveMode.Overwrite-deleting parquet
-  * files the first session's live plans still reference.
+/** `sources/MatView` behavior: write-once semantics, survival across
+  * `Memo.reset`, and the r7-advice hazard fix — a SECOND SparkSession in
+  * the same JVM (own catalog ⇒ tableExists = false) must rebuild under
+  * its OWN session-scoped path instead of SaveMode.Overwrite-deleting
+  * parquet files the first session's live plans still reference.
   */
 class MatViewSpec extends SparkSpec {
   import spark.implicits._
 
-  test("write-once: the build closure runs exactly once per (session, table); " +
-    "clearMemo drops the handle but the table (and its rows) survive") {
+  test("write-once: one build per table; the table survives Memo.reset") {
     var builds = 0
     def view() = MatView.of(spark, "graft_mv_spec_once", "k", 4) {
       builds += 1
@@ -22,8 +21,8 @@ class MatViewSpec extends SparkSpec {
     assert(view().count() == 3)
     assert(view().count() == 3)
     assert(builds == 1, s"memoized call must not rebuild (built $builds times)")
-    MatView.clearMemo()
-    // post-clear: the handle is re-resolved from the CATALOG, not rebuilt —
+    Memo.reset(spark)
+    // post-reset: the handle is re-resolved from the CATALOG, not rebuilt —
     // exactly how the bench's clean-slate protocol reads warm views
     assert(view().count() == 3)
     assert(builds == 1, s"catalog hit must not rebuild (built $builds times)")
