@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: times the headline queries at SPARK_GRAFT_SF_DIR and
   * prints ONE compact JSON line. The line is deliberately kept short
@@ -10,100 +9,25 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Representative subset spanning every query family in SURVEY §2. */
-  val headline: Seq[String] = Seq(
-    "q01_pricing_summary",
-    "p4_filter_predicate", "p8_masked_update",
-    "f4_string_agg", "f13_json_extract",
-    "o1_sort_chrono", "o3_topk",
-    "u1_union_distinct", "u4_union_all",
-    "j1_semi_join", "j2_anti_join", "j3_inner_join", "j4_full_outer_align",
-    "j5_left_join_agg", "j7_theta_range_join", "j9_asof_join",
-    "j10_salted_skew_join",
-    "a2_counts", "a3_last_per_key", "a5_daily_dedup",
-    "a6_upsert_daily_close", "a7_group_stats", "a8_rollup", "a11_percentiles",
-    "a16_funnel", "a17_retention",
-    "w1_lag_lead", "w2_moving_avg", "w3_topn_per_group", "w4_running_sum",
-    "s1_tumbling_window", "s2_sliding_window", "s3_session_window",
-    "x1_token_stats", "x2_lang_id", "x3_quality_score", "x5_token_freq",
-    "d1_exact_dedup", "d2_ngram_jaccard", "d3_minhash_lsh", "d4_simhash",
-    "d7_incremental_dedup",
-    "e1_cosine_topk", "e2_ann_ivf", "e3_bucket_neardup", "e4_ann_kmeans",
-    "e5_ann_hyperplane", "e7_ann_batch",
-    "m1_binary_meta",
-    "q05_revenue_by_nation", "q06_forecast_revenue",
-    "w5_rank_analytics", "w7_range_frame", "a12_stats_moments",
-    "a15_grouping_sets", "p9_pivot", "p11_hash_sample",
-    "x7_bpe_tokens", "d5_dup_clusters",
-    "c1_contamination", "c2_corpus_build", "x8_repetition", "p12_stratified_sample",
-    "x9_seq_packing", "x10_unigram_surprisal", "d6_segment_dedup", "e6_semantic_dedup",
-    "f19_bucket_categorize", "m3_resize_meta",
-    "c3_mixture_build", "p13_weighted_sample", "x11_bigram_surprisal",
-    "d8_incremental_neardup", "e8_pq_adc", "x12_retention_policy",
-    "m4_media_dedup", "x13_bm25", "a19_sketch_rollup",
-    "q07_sql_above_avg", "q08_sql_not_exists", "v4_column_profile",
-    "a18_sessionize",
-    "s4_schedule_fire", "d9_containment", "c4_split_leakage",
-    "c5_shard_manifest", "d10_dup_spans", "c6_fuzzy_decontam",
-    "c7_epoch_shuffle", "e9_ann_recall", "v5_source_overlap",
-    "d11_lsh_recall", "c8_dsir_admission", "x15_bpe_pairs", "v6_shard_skew",
-    "d12_oph_minhash", "d13_oph_dense", "c9_temperature_mixture",
-    "x16_pii_scrub", "c10_curriculum", "e10_mmr_rerank", "v7_data_card",
-    "c11_epoch_allocation", "e11_embedding_qa", "x17_vocab_growth",
-    "q09_sql_correlated",
-    "g1_pagerank", "h1_scd2_history", "r1_entity_match", "d14_cdc_chunks",
-    "v8_pipeline_yield", "q10_sql_exists_chain", "e12_sq_recall",
-    "g2_triangle_count", "r2_golden_record", "v9_expectations",
-    "p14_split_assign", "h2_point_in_time", "w8_streak", "q11_sql_nested_in",
-    "e13_ivf_pq", "g3_kcore", "a20_anomaly", "x18_readability",
-    "q12_sql_top_supplier", "x19_unigram_entropy", "v10_psi_drift",
-    "c12_dedup_discount", "w9_ewma",
-    "w10_drawdown", "a21_histogram", "v11_freshness", "g4_label_prop",
-    "q13_sql_min_cost", "x20_zipf_slope", "x21_ngram_novelty",
-    "e14_filtered_ann", "w11_cusum", "w12_seasonality", "x22_lang_confusion",
-    "d15_band_tuning", "a22_count_min", "d16_tfidf_dedup", "e15_nprobe_sweep",
-    "e16_hybrid_rrf", "x23_bpe_train", "x33_bpe_vocab", "x34_bpe_encode",
-    "g5_bfs_hops", "g6_link_predict", "a23_transitions", "h3_scd2_dim_join",
-    "p15_zorder_layout", "j11_bloom_semi_join", "x24_boilerplate",
-    "x25_kneser_ney",
-    "h4_gap_fill", "h5_split_adjust", "a24_concurrency", "w13_bollinger",
-    "j12_interval_join", "x26_hash_classifier", "c13_ccnet_buckets",
-    "g7_personalized_pagerank", "x27_gopher_gates", "j13_asof_forward",
-    "j14_asof_native", "u6_except_all", "u7_intersect_all", "w14_rsi",
-    "m5_audio_segments", "q14_sql_window", "x28_chunking", "e18_mean_pool",
-    "o5_keyset_page", "a25_time_to_convert",
-    "h6_vwap", "h7_weekly_bars", "h8_beta", "x29_kl_divergence",
-    "a26_mode", "v12_benford", "q15_sql_recursive", "e17_hard_negatives",
-    "g8_modularity", "p16_target_encode", "a27_path_census", "e19_centroid_drift",
-    "s5_late_data", "r3_blocking_recall", "w16_underwater", "a28_cohort_ltv",
-    "h9_overnight_gap", "a29_rfm", "j15_asof_nearest", "v13_seq_gaps",
-    "m6_patch_grid", "a30_kmv_distinct", "a31_kmv_rollup",
-    "q16_sql_disjunctive", "q17_sql_large_orders", "w15_macd",
-    "h10_rolling_corr", "g9_knn_graph", "x30_lexical_diversity",
-    "x31_perplexity_filter", "h11_event_study",
-    "h12_atr", "w17_obv", "h13_pairs_spread", "h14_sharpe",
-    "q18_sql_global_avg", "c14_cluster_balanced",
-    "d18_dedup_agreement", "x32_calibration", "e20_pca_power",
-    "v14_ref_integrity", "e21_anisotropy", "v15_pk_unique",
-    "w18_stochastic", "v16_two_sample_drift",
-    "g10_hits", "q19_sql_shipping_priority", "q20_sql_supplier_census",
-    "q21_sql_volume_shipping", "p17_compaction_plan", "e22_jl_projection",
-    "c15_doremi_step", "v17_rule_quarantine",
-    "d17_bloom_admission", "m7_shot_boundary",
-    "q22_sql_lateral_topn", "a32_attribution",
-    "q23_sql_pivot", "u8_union_by_name", "h15_momentum_portfolio",
-    "a33_root_cause", "e23_ann_ndcg", "v18_k_anonymity", "q24_sql_unpivot",
-    "j16_asof_native_forward", "j17_asof_native_nearest",
-    "q25_sql_exists_range", "q26_sql_market_share", "q27_sql_priority_split",
-    "e24_matryoshka_recall", "a34_bootstrap_ci", "v19_split_balance",
-    "m8_phash_dct", "q28_sql_profit", "q29_sql_cust_dist",
-    "d19_max_dup_spans", "e25_ivf_balanced", "m9_audio_fingerprint",
-    "p18_layout_cost", "d20_span_partners", "e26_ivf_census_drift",
-    "v20_embedding_drift",
-    "g11_clustering_coeff", "e27_range_search", "h16_parkinson_vol",
-    "p19_hilbert_layout", "e28_multiprobe_lsh", "p20_cdc_apply",
-    "d21_simhash_wide", "m10_media_dedup_wide", "d22_simhash_dual",
-    "e29_pq_refine")
+  /** Registry queries the headline run leaves out: mostly single-operator
+    * projections, scalar string/time functions and set operations.
+    */
+  private[graft] val excluded: Set[String] = Set(
+    "p1_drop_columns", "p2_rename_columns", "p3_project", "p5_isin_membership",
+    "p6_validity_filter", "f1_string_replace", "f2_upper_lower", "f3_split_extract",
+    "f5_format_concat", "f6_f7_time_trunc", "f9_f10_ts_arith", "f11_f12_cast_null",
+    "o2_sort_lex", "u3_except", "u5_intersect", "j6_right_join", "j8_cross_join",
+    "a9_cube", "a10_approx_count_distinct", "x4_fingerprint", "f8_tz_convert",
+    "u2_insert_absent", "v2_schema_diff", "o4_file_listing", "w6_first_last",
+    "a13_conditional_agg", "a14_median_distinct", "p10_unpivot", "f14_array_ops",
+    "f15_map_ops", "f16_explode_sequence", "f17_string_funcs",
+    "f18_regexp_extract_all", "x6_pii_scrub", "x14_token_fertility",
+    "m2_frame_sample")
+
+  /** The headline run: every registry query but [[excluded]], in registry
+    * order.
+    */
+  val headline: Seq[String] = SparkEntry.registry.map(_.name).filterNot(excluded)
 
   /** The r12 comparator set the compact stdout line always carries. */
   private[graft] val pinned = Seq(
@@ -132,39 +56,7 @@ object Bench {
     // query records -1.
     val timeoutSec =
       sys.env.getOrElse("SPARK_GRAFT_QUERY_TIMEOUT_SEC", "300").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); see graft.Tables.table
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Small-shuffle syscall churn: the bypass-merge writer creates one
-      // file PER REDUCE PARTITION per map task (32×32 = 1024 files per
-      // exchange on join shuffles, which have no map-side combine), and
-      // reduce fetches mmap each block — stack dumps showed map0/unmap0
-      // dominating the dedup family. The sort writer emits ONE file per
-      // map task regardless of partition count.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      // Let AQE coalesce genuinely tiny exchanges down to few tasks
-      // instead of padding to parallelism (Spark's recommended production
-      // setting); at real scale partitions exceed the 64m advisory size
-      // and this is a no-op.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      // Shuffle/spill files live on tmpfs: the container's root fs mounts
-      // ext4 with `discard`, so the burst file deletions of Spark's
-      // ContextCleaner issue TRIM storms that stall the virtio device for
-      // seconds (observed as episodic multi-x slowdowns with high sys%,
-      // mmap/unmap-bound executor stacks, and idle CPUs). On a real
-      // cluster these are executor-local SSD scratch dirs anyway.
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // Backstop for the between-queries System.gc(): ContextCleaner is
-      // GC-driven and the default periodic GC is 30 min — longer than a
-      // whole bench run, so without this nothing would ever reclaim
-      // dereferenced shuffles if the explicit gc were skipped.
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(cpus, HarnessSession.periodicGC)
     // Untimed JVM/codegen warmup (no benchmark data touched): the first
     // timed query should measure the engine, not JIT + codegen-compiler
     // cold start. The parquet round-trip on SYNTHETIC rows warms the
@@ -202,7 +94,7 @@ object Bench {
     val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(only) => only.split(",").map(_.trim).filter(all.contains).toSeq
       case None if sys.env.contains("SPARK_GRAFT_BENCH_ALL") => all.keys.toSeq
-      case None => headline.filter(all.contains)
+      case None => headline
     }
     // Diagnostic: SPARK_GRAFT_BENCH_DUMP=<secs> prints RUNNABLE executor
     // stacks that long into every query — pinpoints interpreted-eval or

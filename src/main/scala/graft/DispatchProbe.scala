@@ -56,22 +56,6 @@ object DispatchProbe {
   private val passes: Int =
     sys.env.getOrElse("SPARK_GRAFT_PROBE_PASSES", "2").toInt
 
-  private def session(cpus: String, extra: Map[String, String]): SparkSession = {
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-    extra.foreach { case (k, v) => b.config(k, v) }
-    val s = b.getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Bench's canary fold — per-leg host-window stamp. */
   private def canary(s: SparkSession): Double = {
     val t0 = System.nanoTime()
@@ -100,7 +84,7 @@ object DispatchProbe {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     for (pass <- 1 to passes) legs.foreach { case (leg0, extra) =>
       val leg = s"$leg0#$pass"
-      val s = session(cpus, extra)
+      val s = HarnessSession(cpus, extra)
       try {
         // JIT/codegen warm (first leg pays it; later legs confirm warmth)
         s.range(1000).selectExpr("sum(id * 2)").collect()

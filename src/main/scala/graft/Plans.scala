@@ -35,7 +35,7 @@ object Plans {
     "q05_revenue_by_nation" ->
       "Star join: every dimension side is a BroadcastHashJoin build — the lineitem fact side is never shuffled for a join.",
     "j9_asof_join" ->
-      "As-of join: union + window last() over (symbol) — one shuffle on the key, no range cross-product.",
+      "As-of join through the native exec (backward): AsOfJoin declares ClusteredDistribution(user_id) + per-child (key, ts) sort orders, so each side gets one exchange and one sort carrying only its own columns; no Window, no range cross-product.",
     "w7_range_frame" ->
       "Window with RANGE frame: a single Window operator over one exchange; no per-frame re-sort.",
     "a3_last_per_key" ->
@@ -157,7 +157,7 @@ object Plans {
     "x24_boilerplate" ->
       "Boilerplate scoring: one cached shingle table feeds both the DF census and the join-back (no document rescan); the 10·df>n threshold joins a 1-row broadcast count; output aggregates map-side per doc_id.",
     "h3_scd2_dim_join" ->
-      "SCD2 dimension join: the per-fact interval lookup is the as-of union + running-last window on ONE user-keyed shuffle — never a range join's partial cross product; linear in facts + versions.",
+      "SCD2 dimension join: the per-fact interval lookup is the native backward as-of merge (AsOfJoin) over user-keyed exchanges of facts and version starts — no running-last() window (the only Windows build h1's version history), never a range join's partial cross product; linear in facts + versions.",
     "g6_link_predict" ->
       "Link prediction: wedges from one self equi-join of the adjacency on the center node (u<v halves the pairs), map-side-combined CN census, anti-join drops existing edges, TakeOrdered cuts to 25.",
     "x25_kneser_ney" ->
@@ -175,7 +175,7 @@ object Plans {
     "g7_personalized_pagerank" ->
       "Personalized PageRank: 4 fixed rounds chain LAZILY into one job (no per-round barrier); each round is a keyed shuffle with map-side partial contribution sums over the memoized edge/degree tables; top-50 is TakeOrdered.",
     "j13_asof_forward" ->
-      "Forward as-of with tolerance: time negation reuses the j9 union+window machinery verbatim — one user-keyed shuffle, a running last() window, tolerance as a post-join null-out; never a range join.",
+      "Forward as-of with tolerance through the native exec: both children sort (key ASC, ts DESC) and the merge flips one comparison sign — one exchange and one sort per side, no Window, tolerance as a post-join null-out; never a range join.",
     "x27_gopher_gates" ->
       "Gopher gate battery: a pure narrow codegen map (size/filter/length HOFs, cross-multiplied integer bounds) — zero joins, zero hash exchanges before the presentation sort.",
     "j14_asof_native" ->
@@ -183,7 +183,7 @@ object Plans {
     "j16_asof_native_forward" ->
       "FORWARD direction through the native as-of exec: the SAME one-exchange-one-sort-per-side shape with the time axis reversed — both children sort (key ASC, ts DESC) and the merge loop flips one comparison sign; no Window operator, no union-width shuffle (NativeAsOfSpec pins the DESC sorts).",
     "j17_asof_native_nearest" ->
-      "NEAREST direction through the native as-of exec: ONE backward merge pass computes both arms — the held row is the backward candidate and the right stream's head after the advance loop IS the forward candidate (a peek, not a second shuffle); winner by integer-µs distance, ties to backward. Two exchanges total vs the composed j15's four.",
+      "NEAREST direction through the native as-of exec: ONE backward merge pass computes both arms — the held row is the backward candidate and the right stream's head after the advance loop IS the forward candidate (a peek, not a second shuffle); winner by integer-µs distance, ties to backward. Two exchanges total.",
     "x28_chunking" ->
       "RAG chunking: a pure narrow generate — sequence over the per-doc chunk count, slice over the token array, fingerprint — zero shuffles before the presentation sort; chunk geometry (stride/overlap/short tail) proven exact in ChunkingSpec.",
     "e18_mean_pool" ->
@@ -227,7 +227,7 @@ object Plans {
     "a29_rfm" ->
       "RFM segmentation: tercile thresholds from value-bounded censuses (c10's rule) broadcast as 1-row builds — never a single-partition ntile over the customer base; the encode is a narrow projection.",
     "j15_asof_nearest" ->
-      "Nearest as-of: two composed as-of passes (backward + time-negated forward) over one collapsed click table — bounded keyed exchanges, integer-distance arbiter, no range join.",
+      "Nearest as-of through the native exec: ONE backward merge over the collapsed click table computes both arms (held row = backward candidate, right-stream head = forward candidate), winner by integer-µs distance, ties to backward — no Window, no range join.",
     "v13_seq_gaps" ->
       "Sequence continuity: one user-keyed lag window into a map-side-combinable per-key rollup — (key, id) pairs only.",
     "m6_patch_grid" ->

@@ -66,17 +66,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(cpus)
     spark.range(1000).selectExpr("sum(id * 2)").collect() // JIT warmup
     // documents is scanned/pinned only when the lsh probe actually runs —
     // a PROBE_ONLY=graph deep run must not cache an unused corpus.
@@ -121,17 +111,13 @@ object ScaleProbe {
     spark.stop()
   }
 
-  /** Native vs composed as-of join under inflation — the r7 direction-enum
-    * exec's scale claim, measured: USER-SALTED copies of the event stream
-    * (user ids offset per copy, so per-key row counts stay constant while
-    * the key space scales — the partition-friendly growth direction) run
-    * the j9/j14 purchase⋈click backward alignment through BOTH
-    * formulations. The native exec shuffles each side's own columns only
-    * and merges with O(1) held state; the composed union+window shuffles
-    * `left + right` rows null-padded to the union width. Both must scale
-    * ~linearly in the factor; the native curve should sit strictly below
-    * the composed one, and the GAP is the union-widening cost the exec
-    * was built to remove.
+  /** Native as-of join under inflation — the exec's scale claim,
+    * measured: USER-SALTED copies of the event stream (user ids offset per
+    * copy, so per-key row counts stay constant while the key space
+    * scales — the partition-friendly growth direction) run the j9
+    * purchase⋈click backward alignment. The exec shuffles each side's own
+    * columns only and merges with O(1) held state, so the curve must stay
+    * ~linear in the factor.
     */
   def asofProbe(spark: SparkSession, sfDir: String): Unit = {
     val ev = Tables.table(spark, sfDir, "events")
@@ -151,27 +137,17 @@ object ScaleProbe {
         .select("event_id", "user_id", "ts")
       val clicks = inflated.filter(col("event_type") === "click")
         .select("user_id", "ts", "value")
-      def time(run: () => Long): (Double, Long) = {
-        val times = (1 to 2).map { _ =>
-          spark.catalog.clearCache()
-          ev.persist(); ev.count()
-          val t0 = System.nanoTime()
-          val n = run()
-          (System.nanoTime() - t0) / 1e9 -> n
-        }
-        val (best, n) = times.minBy(_._1)
-        (best, n)
-      }
-      val (tN, nN) = time(() => graft.plans.NativeAsOf
-        .joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value"))
-        .filter(col("asof_ts").isNotNull).count())
-      val (tC, nC) = time(() => graft.operators.AsOf
-        .joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value"))
-        .filter(col("asof_ts").isNotNull).count())
-      require(nN == nC, s"native/composed disagree at factor $f: $nN vs $nC")
-      println(f"[scale-asof] factor=$f%2d matched=$nN%9d native=$tN%7.2f s composed=$tC%7.2f s")
-      probeJson("asof_native", f, nN, 0, tN)
-      probeJson("asof_composed", f, nC, 0, tC)
+      val (best, matched) = (1 to 2).map { _ =>
+        spark.catalog.clearCache()
+        ev.persist(); ev.count()
+        val t0 = System.nanoTime()
+        val n = graft.plans.NativeAsOf
+          .joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value"))
+          .filter(col("asof_ts").isNotNull).count()
+        (System.nanoTime() - t0) / 1e9 -> n
+      }.minBy(_._1)
+      println(f"[scale-asof] factor=$f%2d matched=$matched%9d native=$best%7.2f s")
+      probeJson("asof_native", f, matched, 0, best)
     }
     ev.unpersist()
   }

@@ -30,8 +30,8 @@ object Tables {
     *    entrypoint pins `spark.sql.session.timeZone=UTC`, so the cast is
     *    value-preserving.
     *
-    * The `nanosAsLong` conf is a session-builder concern (Bench, Verify and
-    * SparkSpec all set it): mutating session conf inside a query builder
+    * The `nanosAsLong` conf is a session-builder concern (HarnessSession,
+    * Plans and SparkSpec set it): mutating session conf inside a query builder
     * would be a plan-time global write, racy under concurrent query
     * construction.
     */

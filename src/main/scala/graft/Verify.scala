@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,25 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet carries TIMESTAMP(NANOS); see graft.Tables.table
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Same small-shuffle hygiene as graft.Bench (see its scaladoc):
-      // one sort-shuffle file per map task, AQE coalesce of tiny
-      // exchanges, scratch dirs on tmpfs (root fs mounts ext4+discard;
-      // cleaner delete bursts stall the virtio device).
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.local.dir", "/dev/shm/graft-spark")
-      // ContextCleaner is GC-driven; reclaim dereferenced shuffle files
-      // during the full-registry session (see Bench's scaladoc).
-      .config("spark.cleaner.periodicGC.interval", "5min")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession(cpus, HarnessSession.periodicGC)
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter (comma-separated names); the driver never sets
     // it, so the full registry always runs in the real gate.

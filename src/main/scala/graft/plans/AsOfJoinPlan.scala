@@ -26,36 +26,34 @@ case object AsOfNearest extends AsOfDirection
   * (SURVEY §7.2 preference (c)): a custom `LogicalPlan` node, a
   * `SparkStrategy` that plans it, and a physical `BinaryExecNode` that
   * DECLARES its distribution + ordering requirements and merges the two
-  * sorted streams in one pass per partition.
+  * sorted streams in one pass per partition. Every as-of in the engine
+  * (j9/j13/j15 and their twins, h3) plans through it.
   *
-  * `operators/AsOf.joinAsOf` (the j9 path) COMPOSES the same semantics
-  * from built-ins: union both sides, run a keyed `last(ignoreNulls)`
-  * window. That plan shuffles `left + right` rows AND sorts the union as
-  * one stream. This operator hands Catalyst the join's true requirements
-  * instead — `ClusteredDistribution(key)` per child and per-child
-  * `(key, ts)` sort orders — so EnsureRequirements co-partitions and
-  * sorts each side independently (map-side of each exchange carries only
-  * its own columns, no union row widening, no window state machine), and
-  * the exec is a textbook streamed merge: advance the right iterator
+  * The node hands Catalyst the join's true requirements —
+  * `ClusteredDistribution(key)` per child and per-child `(key, ts)` sort
+  * orders — so EnsureRequirements co-partitions and sorts each side
+  * independently (each exchange carries only its own side's columns),
+  * and the exec is a textbook streamed merge: advance the right iterator
   * while `(rKey, rTs)` is at-or-behind `(lKey, lTs)`, holding ONE
   * candidate row. O(|L| + |R|) per partition, O(1) memory beyond the
   * held row — exactly what a 100 TB quote/trade alignment needs, and the
   * same physical shape Spark's own SortMergeJoinExec declares.
   *
-  * DIRECTIONS (round 7 — the j13/j15 union+window twins' widened shuffle
-  * was the exact cost this exec was built to remove):
+  * Null keys and null timestamps never match (SQL comparison semantics,
+  * as DuckDB's `ASOF` predicate): such a left row null-pads, such a
+  * right row is skipped.
   *
-  *  - BACKWARD is the original semantics (identical to `AsOf.joinAsOf`,
-  *    spec-proven): right sorted `(key, ts, payload)` ascending; among
-  *    ties on (key, ts) the greatest payload wins; equal timestamps
-  *    match (at-or-before).
+  * DIRECTIONS:
+  *
+  *  - BACKWARD: right sorted `(key, ts, payload)` ascending; among ties
+  *    on (key, ts) the greatest payload wins; equal timestamps match
+  *    (at-or-before).
   *  - FORWARD is the SAME merge loop with the time axis reversed: both
   *    children sort `(key ASC, ts DESC)` and every ts comparison flips
   *    sign, so "behind in the stream" now means `rightTs >= leftTs` and
   *    the held row converges on the SMALLEST right ts at-or-after —
   *    with the right payload still ascending, ties on (key, ts) still
-  *    resolve to the greatest payload (last replacement wins), matching
-  *    the composed j13 formulation's documented tiebreak.
+  *    resolve to the greatest payload (last replacement wins).
   *  - NEAREST runs the backward merge and additionally PEEKS the right
   *    head: after the advance loop the head IS the first right row
   *    strictly after the left ts (same key), i.e. the forward candidate
@@ -65,7 +63,7 @@ case object AsOfNearest extends AsOfDirection
   *    duplicate right rows on (key, ts) the forward arm sees the
   *    smallest payload (stream head) while the backward arm sees the
   *    greatest (last replacement); callers that care collapse the right
-  *    side per (key, ts) first — exactly what j15/j17 do.
+  *    side per (key, ts) first — exactly what j15 does.
   *
   * Scale notes: the merge preserves the left child's partitioning and
   * ordering (`outputPartitioning`/`outputOrdering` pass through), so a
@@ -128,9 +126,9 @@ case class AsOfJoinExec(
 
   /** Per-child sort: (key, ts-in-stream-direction) both sides; the right
     * side additionally sorts by payload ASCENDING so the held row at equal
-    * (key, ts) is the GREATEST payload — the deterministic tiebreak
-    * `AsOf.joinAsOf` established (holds for both stream directions, since
-    * the held row is always the LAST behind-row seen).
+    * (key, ts) is the GREATEST payload — a deterministic tiebreak for both
+    * stream directions, since the held row is always the LAST behind-row
+    * seen.
     */
   override def requiredChildOrdering: Seq[Seq[SortOrder]] = Seq(
     Seq(SortOrder(leftKey, Ascending), SortOrder(leftTs, tsDir)),
@@ -295,11 +293,12 @@ case class AsOfJoinExec(
 /** DataFrame-level entry point for the native operator. */
 object NativeAsOf {
 
-  /** Same contract as [[graft.operators.AsOf.joinAsOf]]: emits every left
-    * row plus `asof_ts` and `asof_<v>` columns (null when no matching
-    * right row in the requested direction). The strategy self-registers
-    * on the session (`experimental.extraStrategies` — idempotent), so
-    * callers need no session-builder configuration.
+  /** As-of join of `left` against `right` on equal `key`: emits every
+    * left row plus `asof_ts` and `asof_<v>` for each of `rightVals` (null
+    * when no matching right row in the requested direction). The key and
+    * ts columns must have the same types on both sides. The strategy
+    * self-registers on the session (`experimental.extraStrategies` —
+    * idempotent), so callers need no session-builder configuration.
     */
   def joinAsOf(
       left: DataFrame,

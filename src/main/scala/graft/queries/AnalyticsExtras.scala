@@ -545,14 +545,15 @@ object AnalyticsExtras {
     * one instant; h3 resolves a per-row instant for every fact.
     *
     * Scale: NOT a range join — the interval predicate would plan a
-    * partial-cross product. `AsOf.joinAsOf` unions facts with version
-    * starts and takes a running `last` over ONE user-keyed window: one
-    * shuffle on the key, linear in facts + versions at any scale (the j9
-    * contract). Interval semantics coincide with as-of because versions
-    * partition time: the latest `valid_from <= ts` IS the containing
-    * interval, and a version whose microsecond interval is empty loses
-    * the equal-ts tiebreak to its successor on both engines (the oracle
-    * compares at integer microseconds for exactly that reason).
+    * partial-cross product. The native backward as-of join
+    * ([[graft.plans.NativeAsOf]]) co-partitions facts and version starts
+    * on the user key and merges them in one pass: linear in facts +
+    * versions at any scale (the j9 contract). Interval semantics coincide
+    * with as-of because versions partition time: the latest
+    * `valid_from <= ts` IS the containing interval, and a version whose
+    * microsecond interval is empty loses the equal-ts tiebreak (greatest
+    * `(version, state)` wins) to its successor on both engines (the
+    * oracle compares at integer microseconds for exactly that reason).
     */
   val h3Scd2DimJoin: Q = Q(
     "h3_scd2_dim_join",
@@ -562,7 +563,7 @@ object AnalyticsExtras {
       val fact = t(s, dir, "events")
         .filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"))
-      graft.operators.AsOf
+      graft.plans.NativeAsOf
         .joinAsOf(fact, hist, "user_id", "ts", "valid_from", Seq("version", "state"))
         .select(col("event_id"), col("user_id"),
           col("asof_version").as("version"), col("asof_state").as("state"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.AsOf
+import graft.plans.{AsOfForward, AsOfNearest, NativeAsOf}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -174,8 +174,11 @@ object Joins {
   )
 
   /** J9: as-of join — for each purchase, the user's most recent click at or
-    * before it (SURVEY §2.3 as-of completeness; oracle uses DuckDB's native
-    * ASOF JOIN while the engine composes union + running last()).
+    * before it (SURVEY §2.3 as-of completeness; the oracle is DuckDB's
+    * native ASOF JOIN). Planned through the native as-of exec
+    * ([[graft.plans.NativeAsOf]], backward direction): one exchange and
+    * one sort per side, each carrying only its own columns, and a
+    * streamed merge holding one candidate row.
     */
   val j9AsOf: Q = Q(
     "j9_asof_join",
@@ -189,7 +192,7 @@ object Joins {
       val clicks = ev.filter(col("event_type") === "click")
         .groupBy("user_id", "ts")
         .agg(max(col("value")).as("value"))
-      AsOf.joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value"))
+      NativeAsOf.joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value"))
         .select(
           col("event_id"), col("user_id"), col("ts"),
           col("asof_ts").as("last_click_ts"),
@@ -205,6 +208,9 @@ object Joins {
         ON l.user_id = r.user_id AND l.ts >= r.ts
       ORDER BY l.event_id""")
   )
+
+  /** J14: j9 under its second registry name. */
+  val j14AsOfNative: Q = j9AsOf.copy(name = "j14_asof_native")
 
   /** J10: skew-mitigated fact⋈dim join — [[graft.operators.Skew.saltedJoin]]
     * spreads each hot `user_id`'s event rows over 8 salt buckets (salt =
@@ -473,15 +479,15 @@ object Joins {
   /** J13: FORWARD as-of join with a tolerance — for each purchase, the
     * NEXT click by the same user within 10 minutes (pandas
     * `merge_asof(direction='forward', tolerance=...)`): the attribution
-    * lookup j9's backward join can't express. Rather than a second
-    * operator, time is NEGATED and fed through the SAME `AsOf.joinAsOf`
-    * machinery — backward-on-(−t) IS forward-on-t, equal timestamps
-    * still match (inclusive), and the deterministic greatest-payload
-    * tiebreak carries over unchanged. The tolerance is a post-join
-    * null-out, which preserves the left row count.
+    * lookup j9's backward join can't express. The native exec runs with
+    * `direction = AsOfForward`: both children sort (key ASC, ts DESC) and
+    * the merge flips one comparison sign; equal timestamps still match
+    * (inclusive). The tolerance is a post-join null-out, which preserves
+    * the left row count.
     *
-    * Scale: inherits j9's contract verbatim — one shuffle on the user
-    * key, a running window, linear in both sides; no range join.
+    * Right payload is NOT pre-collapsed: the right sort (key ASC, ts DESC,
+    * payload ASC) makes the greatest payload win ties on (key, ts) — the
+    * oracle's `c.value DESC` tiebreak.
     */
   val j13AsOfForward: Q = Q(
     "j13_asof_forward",
@@ -490,166 +496,12 @@ object Joins {
       val tolUs = 600000000L // 10 minutes
       val facts = ev.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("pt"))
-        .withColumn("nt", -col("pt"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), col("value"), (-unix_micros(col("ts"))).as("nt"))
-      AsOf.joinAsOf(facts, clicks, key = "user_id",
-          leftTs = "nt", rightTs = "nt", rightVals = Seq("value"))
-        .select(col("event_id"), col("pt"),
-          when((-col("asof_ts")) - col("pt") <= tolUs, -col("asof_ts"))
-            .as("next_ts"),
-          when((-col("asof_ts")) - col("pt") <= tolUs, col("asof_value"))
-            .as("next_value"))
-        .orderBy("event_id")
-    },
-    Some("""WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS pt FROM events
-              WHERE event_type = 'purchase'),
-      c AS (SELECT user_id, epoch_us(ts) AS ct, value FROM events
-            WHERE event_type = 'click'),
-      m AS (SELECT p.event_id, c.ct, c.value,
-              row_number() OVER (PARTITION BY p.event_id
-                                 ORDER BY c.ct, c.value DESC) AS rn
-            FROM p JOIN c ON c.user_id = p.user_id
-              AND c.ct >= p.pt AND c.ct <= p.pt + 600000000)
-      SELECT p.event_id, p.pt, m.ct AS next_ts, m.value AS next_value
-      FROM p LEFT JOIN (SELECT event_id, ct, value FROM m WHERE rn = 1) m
-        USING (event_id)
-      ORDER BY event_id""")
-  )
-
-  /** J14: the NATIVE as-of join — j9's exact query through the custom
-    * Catalyst operator (`graft.plans.AsOfJoinPlan`: logical node →
-    * injected SparkStrategy → physical merge exec that DECLARES
-    * ClusteredDistribution + per-child (key, ts) sort orders). Same
-    * oracle as j9 (DuckDB's native ASOF JOIN), so the driver gate proves
-    * the custom operator end-to-end; NativeAsOfSpec additionally proves
-    * row-for-row equality with the composed union+window path and pins
-    * the one-exchange-per-side physical shape.
-    */
-  val j14AsOfNative: Q = Q(
-    "j14_asof_native",
-    (s, dir) => {
-      val ev = t(s, dir, "events")
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("event_id", "user_id", "ts")
-      val clicks = ev.filter(col("event_type") === "click")
-        .groupBy("user_id", "ts")
-        .agg(max(col("value")).as("value"))
-      graft.plans.NativeAsOf
-        .joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value"))
-        .select(
-          col("event_id"), col("user_id"), col("ts"),
-          col("asof_ts").as("last_click_ts"),
-          col("asof_value").as("last_click_value"))
-        .orderBy("event_id")
-    },
-    Some("""SELECT l.event_id, l.user_id, l.ts,
-        r.ts AS last_click_ts, r.value AS last_click_value
-      FROM (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase') l
-      ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value
-                      FROM events WHERE event_type = 'click'
-                      GROUP BY user_id, ts) r
-        ON l.user_id = r.user_id AND l.ts >= r.ts
-      ORDER BY l.event_id""")
-  )
-
-  /** J15: nearest as-of join — pandas `merge_asof(direction='nearest')`,
-    * completing the as-of family (j9 backward, j13 forward): for each
-    * purchase, the click closest in time in EITHER direction, ties to the
-    * backward side (pandas' rule). Composed as j9's backward pass plus
-    * j13's time-negation forward pass over the SAME collapsed click
-    * table, then a narrow integer-distance arbiter — each pass is the
-    * one-shuffle union+window machinery, so nearest costs exactly two
-    * keyed exchanges and no range join.
-    *
-    * The engine's forward arm admits same-instant clicks (at-or-after);
-    * the backward arm also admits them at distance 0 and the tie rule
-    * prefers backward, so the arbitration is unaffected — the oracle's
-    * strictly-after forward spelling returns the identical winner.
-    */
-  val j15AsOfNearest: Q = Q(
-    "j15_asof_nearest",
-    (s, dir) => {
-      val ev = t(s, dir, "events")
-      val facts = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("pt"))
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), unix_micros(col("ts")).as("ct"), col("value"))
-        .groupBy("user_id", "ct").agg(max(col("value")).as("value"))
-      val back = AsOf.joinAsOf(facts, clicks, "user_id", "pt", "ct", Seq("value"))
-        .withColumnRenamed("asof_ts", "prev_ts")
-        .withColumnRenamed("asof_value", "prev_value")
-      val negClicks = clicks.select(col("user_id"), (-col("ct")).as("nt"),
-        col("value"))
-      val both = AsOf.joinAsOf(back.withColumn("nt", -col("pt")), negClicks,
-          "user_id", "nt", "nt", Seq("value"))
-        .select(col("event_id"), col("pt"), col("prev_ts"), col("prev_value"),
-          (-col("asof_ts")).as("next_ts"), col("asof_value").as("next_value"))
-      val pickPrev = col("next_ts").isNull ||
-        (col("prev_ts").isNotNull &&
-          col("pt") - col("prev_ts") <= col("next_ts") - col("pt"))
-      both.select(col("event_id"), col("pt"),
-          when(pickPrev, col("prev_ts")).otherwise(col("next_ts")).as("nearest_ts"),
-          when(pickPrev, col("prev_value")).otherwise(col("next_value"))
-            .as("nearest_value"),
-          when(col("prev_ts").isNull && col("next_ts").isNull, lit(null).cast("string"))
-            .when(pickPrev, lit("prev")).otherwise(lit("next")).as("direction"))
-        .orderBy("event_id")
-    },
-    Some("""WITH p AS (SELECT event_id, user_id, epoch_us(ts) AS pt FROM events
-              WHERE event_type = 'purchase'),
-      c AS (SELECT user_id, epoch_us(ts) AS ct, max(value) AS value FROM events
-            WHERE event_type = 'click' GROUP BY 1, 2),
-      b AS (SELECT event_id, ct, value FROM (
-              SELECT p.event_id, c.ct, c.value,
-                     row_number() OVER (PARTITION BY p.event_id ORDER BY c.ct DESC) AS rn
-              FROM p JOIN c ON c.user_id = p.user_id AND c.ct <= p.pt)
-            WHERE rn = 1),
-      f AS (SELECT event_id, ct, value FROM (
-              SELECT p.event_id, c.ct, c.value,
-                     row_number() OVER (PARTITION BY p.event_id ORDER BY c.ct) AS rn
-              FROM p JOIN c ON c.user_id = p.user_id AND c.ct > p.pt)
-            WHERE rn = 1)
-      SELECT p.event_id, p.pt,
-        CASE WHEN f.ct IS NULL OR (b.ct IS NOT NULL AND p.pt - b.ct <= f.ct - p.pt)
-             THEN b.ct ELSE f.ct END AS nearest_ts,
-        CASE WHEN f.ct IS NULL OR (b.ct IS NOT NULL AND p.pt - b.ct <= f.ct - p.pt)
-             THEN b.value ELSE f.value END AS nearest_value,
-        CASE WHEN b.ct IS NULL AND f.ct IS NULL THEN NULL
-             WHEN f.ct IS NULL OR (b.ct IS NOT NULL AND p.pt - b.ct <= f.ct - p.pt)
-             THEN 'prev' ELSE 'next' END AS direction
-      FROM p LEFT JOIN b USING (event_id) LEFT JOIN f USING (event_id)
-      ORDER BY event_id""")
-  )
-
-  /** J16: j13's forward as-of THROUGH THE NATIVE EXEC — the same
-    * "next click by the same user within 10 minutes" semantics, planned
-    * as `AsOfJoinExec(direction = Forward)` instead of the time-negated
-    * union+window formulation. The composed j13 shuffles a union row
-    * carrying BOTH sides' columns null-padded; the native node declares
-    * per-child requirements, so each exchange ships only its own side —
-    * the structural halving the exec was built for (j14's win, now for
-    * the forward direction). Same oracle as j13, so the driver gate
-    * proves the Forward direction end-to-end; NativeAsOfSpec additionally
-    * proves row parity with the composed form.
-    *
-    * Right payload is NOT pre-collapsed: the Forward exec's right sort
-    * (key ASC, ts DESC, payload ASC) makes the greatest payload win ties
-    * on (key, ts) — identical to j13's window tiebreak.
-    */
-  val j16AsOfNativeForward: Q = Q(
-    "j16_asof_native_forward",
-    (s, dir) => {
-      val ev = t(s, dir, "events")
-      val tolUs = 600000000L // 10 minutes
-      val facts = ev.filter(col("event_type") === "purchase")
-        .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("pt"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select(col("user_id"), unix_micros(col("ts")).as("ct"), col("value"))
-      graft.plans.NativeAsOf
+      NativeAsOf
         .joinAsOf(facts, clicks, key = "user_id",
           leftTs = "pt", rightTs = "ct", rightVals = Seq("value"),
-          direction = graft.plans.AsOfForward)
+          direction = AsOfForward)
         .select(col("event_id"), col("pt"),
           when(col("asof_ts") - col("pt") <= tolUs, col("asof_ts")).as("next_ts"),
           when(col("asof_ts") - col("pt") <= tolUs, col("asof_value"))
@@ -671,20 +523,24 @@ object Joins {
       ORDER BY event_id""")
   )
 
-  /** J17: j15's nearest as-of THROUGH THE NATIVE EXEC — one merge pass
-    * computes both arms: the backward candidate is the exec's held row,
-    * the forward candidate is the right stream's head after the advance
-    * loop (a peek, not a second shuffle), winner by integer µs distance
-    * with ties to the backward side (pandas' rule). The composed j15
-    * pays TWO union+window passes (four exchanges, union-width rows);
-    * this is ONE exchange per side.
+  /** J16: j13 under its second registry name. */
+  val j16AsOfNativeForward: Q = j13AsOfForward.copy(name = "j16_asof_native_forward")
+
+  /** J15: nearest as-of join — pandas `merge_asof(direction='nearest')`,
+    * completing the as-of family (j9 backward, j13 forward): for each
+    * purchase, the click closest in time in EITHER direction, ties to the
+    * backward side (pandas' rule). One merge pass computes both arms: the
+    * backward candidate is the exec's held row, the forward candidate is
+    * the right stream's head after the advance loop (a peek, not a second
+    * shuffle), and the winner is chosen by integer µs distance.
     *
-    * Clicks collapse per (user_id, ct) first — j15's own shape — which
-    * also removes the one case where the two arms' (key, ts) tiebreaks
-    * differ (documented on the exec).
+    * Clicks collapse per (user_id, ct) first, which removes the one case
+    * where the two arms' (key, ts) tiebreaks differ (documented on the
+    * exec). An equal-ts click is the backward arm at distance 0, so the
+    * oracle's strictly-after forward spelling returns the same winner.
     */
-  val j17AsOfNativeNearest: Q = Q(
-    "j17_asof_native_nearest",
+  val j15AsOfNearest: Q = Q(
+    "j15_asof_nearest",
     (s, dir) => {
       val ev = t(s, dir, "events")
       val facts = ev.filter(col("event_type") === "purchase")
@@ -692,10 +548,10 @@ object Joins {
       val clicks = ev.filter(col("event_type") === "click")
         .select(col("user_id"), unix_micros(col("ts")).as("ct"), col("value"))
         .groupBy("user_id", "ct").agg(max(col("value")).as("value"))
-      graft.plans.NativeAsOf
+      NativeAsOf
         .joinAsOf(facts, clicks, key = "user_id",
           leftTs = "pt", rightTs = "ct", rightVals = Seq("value"),
-          direction = graft.plans.AsOfNearest)
+          direction = AsOfNearest)
         .select(col("event_id"), col("pt"),
           col("asof_ts").as("nearest_ts"),
           col("asof_value").as("nearest_value"),
@@ -729,6 +585,9 @@ object Joins {
       FROM p LEFT JOIN b USING (event_id) LEFT JOIN f USING (event_id)
       ORDER BY event_id""")
   )
+
+  /** J17: j15 under its second registry name. */
+  val j17AsOfNativeNearest: Q = j15AsOfNearest.copy(name = "j17_asof_native_nearest")
 
   /** R3: blocking-recall audit — the d11/e9 self-evaluation pattern
     * applied to entity resolution: of the TRUE matches (r1's similarity

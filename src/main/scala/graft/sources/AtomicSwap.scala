@@ -58,6 +58,9 @@ object AtomicSwap {
   /** Heal every partition of `storeDir` after a possible mid-swap crash:
     * an aside copy whose live partition is missing is restored; one whose
     * live partition exists is a committed swap's leftover and is dropped.
+    * A restore whose rename fails raises and leaves the aside copy in
+    * place: serving a store with that partition missing would be wrong,
+    * and the next [[publish]] to it would delete the only copy.
     *
     * @return the partition names that were restored from their aside copy
     */
@@ -72,9 +75,11 @@ object AtomicSwap {
         if (fs.exists(live)) {
           fs.delete(aside.getPath, true) // committed swap's leftover shadow
           None
+        } else if (fs.rename(aside.getPath, live)) {
+          Some(name) // interrupted swap: old data restored
         } else {
-          fs.rename(aside.getPath, live) // interrupted swap: restore old data
-          Some(name)
+          throw new java.io.IOException(
+            s"AtomicSwap: failed to restore partition $name from ${aside.getPath}")
         }
       }
       .toSeq

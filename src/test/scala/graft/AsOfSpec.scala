@@ -1,14 +1,17 @@
 package graft
 
-import graft.operators.AsOf
+import graft.plans.NativeAsOf
 import java.sql.Timestamp
 
 /** As-of join semantics (SURVEY §2.3 completeness): most recent right row
   * at-or-before each left row per key; null when no prior row; keys are
-  * isolated from each other.
+  * isolated from each other. The registry's backward, forward and nearest
+  * queries (j9, j13, j15) each equal a brute-force scan of the corpus.
   */
 class AsOfSpec extends SparkSpec {
   import spark.implicits._
+
+  private val sf = "/root/testdata/sf0.001"
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
@@ -26,7 +29,7 @@ class AsOfSpec extends SparkSpec {
   ).toDF("key", "tts", "tid")
 
   test("picks most recent right row at-or-before, per key, null if none") {
-    val out = AsOf
+    val out = NativeAsOf
       .joinAsOf(trades, quotes, "key", "tts", "qts", Seq("quote"))
       .select($"tid", $"asof_quote")
       .collect().map(r => r.getString(0) -> (if (r.isNullAt(1)) None else Some(r.getDouble(1))))
@@ -38,13 +41,37 @@ class AsOfSpec extends SparkSpec {
   }
 
   test("left row multiplicity is preserved") {
-    val out = AsOf.joinAsOf(trades, quotes, "key", "tts", "qts", Seq("quote"))
+    val out = NativeAsOf.joinAsOf(trades, quotes, "key", "tts", "qts", Seq("quote"))
     assert(out.count() == trades.count())
+  }
+
+  test("j9 backward equals the brute-force last-click join") {
+    import org.apache.spark.sql.functions._
+    val fast = SparkEntry.queries("j9_asof_join")(spark, sf).collect()
+      .map(r => r.getLong(0) ->
+        (if (r.isNullAt(3)) None else Some((r.getTimestamp(3), r.getDouble(4)))))
+      .toMap
+    val ev = Tables.table(spark, sf, "events")
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("user_id"), col("ts"), col("value"))
+      .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getDouble(2)))
+    val slow = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id"), col("user_id"), col("ts"))
+      .collect().map { r =>
+        val (id, u, pt) = (r.getLong(0), r.getLong(1), r.getTimestamp(2))
+        val cands = clicks.filter(c => c._1 == u && !c._2.after(pt))
+        // latest click at or before; greatest value at equal ts (j9
+        // collapses same-instant clicks to their max value)
+        id -> cands.maxByOption(c => (c._2.getTime, c._2.getNanos, c._3))
+          .map { case (_, ct, v) => (ct, v) }
+      }.toMap
+    assert(fast == slow)
+    assert(fast.values.exists(_.nonEmpty) && fast.values.exists(_.isEmpty),
+      "corpus must exercise both the matched and the no-prior-click case")
   }
 
   test("j13 forward+tolerance equals the brute-force next-click join") {
     import org.apache.spark.sql.functions._
-    val sf = "/root/testdata/sf0.001"
     val fast = SparkEntry.queries("j13_asof_forward")(spark, sf).collect()
       .map(r => r.getLong(0) ->
         (if (r.isNullAt(2)) None else Some((r.getLong(2), r.getDouble(3)))))
@@ -60,7 +87,7 @@ class AsOfSpec extends SparkSpec {
         val cands = clicks.filter(c =>
           c._1 == u && c._2 >= pt && c._2 <= pt + 600000000L)
         // earliest following click; greatest value at equal ts (the
-        // AsOf deterministic tiebreak)
+        // as-of payload tiebreak)
         id -> (if (cands.isEmpty) None
                else Some(cands.minBy(c => (c._2, -c._3)) match {
                  case (_, ct, v) => (ct, v)
@@ -74,7 +101,6 @@ class AsOfSpec extends SparkSpec {
   test("j15 nearest equals the brute-force two-direction arbiter with the " +
     "prev-on-tie rule") {
     import org.apache.spark.sql.functions._
-    val sf = "/root/testdata/sf0.001"
     val fast = SparkEntry.queries("j15_asof_nearest")(spark, sf).collect()
       .map(r => r.getLong(0) ->
         (if (r.isNullAt(2)) None

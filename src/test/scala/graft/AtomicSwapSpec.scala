@@ -50,6 +50,19 @@ class AtomicSwapSpec extends SparkSpec {
     assert(!fs.exists(new Path(dir, ".day=a.old")))
   }
 
+  test("recover raises on a failed restore and keeps the aside copy") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-swap").toString
+    writePart(dir, "day=a", Seq(1L, 2L))
+    fs.rename(new Path(dir, "day=a"), new Path(dir, ".day=a.old"))
+    val noRename = new AtomicSwapSpec.NoRename
+    noRename.initialize(java.net.URI.create("file:///"),
+      spark.sparkContext.hadoopConfiguration)
+    val e = intercept[java.io.IOException](AtomicSwap.recover(noRename, new Path(dir)))
+    assert(e.getMessage.contains("day=a"), e.getMessage)
+    assert(!fs.exists(new Path(dir, "day=a")))
+    assert(readPart(dir, ".day=a.old") == Set(1L, 2L), "the aside copy must survive")
+  }
+
   test("recover is a no-op on a healthy store and idempotent after healing") {
     val dir = java.nio.file.Files.createTempDirectory("graft-swap").toString
     writePart(dir, "day=a", Seq(1L))
@@ -60,5 +73,15 @@ class AtomicSwapSpec extends SparkSpec {
     assert(AtomicSwap.recover(fs, new Path(dir)).isEmpty)
     assert(readPart(dir, "day=a") == Set(1L))
     assert(readPart(dir, "day=b") == Set(2L))
+  }
+}
+
+object AtomicSwapSpec {
+
+  /** The local filesystem with every rename reporting failure by returning
+    * false, as Hadoop filesystems do.
+    */
+  class NoRename extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def rename(src: Path, dst: Path): Boolean = false
   }
 }

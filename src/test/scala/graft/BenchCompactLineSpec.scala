@@ -25,4 +25,10 @@ class BenchCompactLineSpec extends AnyFunSuite {
     assert(Bench.pinned.filterNot(_ == "g3_kcore").forall(p => !line.exists(_._1 == p)),
       "pinned queries the run never attempted are not invented")
   }
+
+  test("every excluded and pinned name is a registry query, and the pinned set is timed") {
+    val stray = (Bench.excluded.toSeq ++ Bench.pinned).filterNot(SparkEntry.queries.contains)
+    assert(stray.isEmpty, s"names not in the registry: $stray")
+    assert(Bench.pinned.forall(Bench.headline.contains))
+  }
 }

@@ -1,17 +1,53 @@
 package graft
 
-import graft.operators.AsOf
-import graft.plans.NativeAsOf
+import graft.plans.{AsOfBackward, AsOfDirection, AsOfForward, AsOfNearest, NativeAsOf}
 import graft.queries.Joins
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** The native planner-integrated as-of join (`graft.plans.AsOfJoinPlan`)
-  * must be OBSERVABLY the same operator as the composed union+window path
-  * (`operators/AsOf`) — every test here proves equality or pins the
-  * physical shape the custom node declares.
+/** The native planner-integrated as-of join (`graft.plans.AsOfJoinPlan`):
+  * randomized equality with a brute-force reference in every direction,
+  * the payload tiebreak, and the physical shape the custom node declares.
   */
 class NativeAsOfSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The as-of contract by brute force: collect both sides, then scan the
+    * right rows `(key, rts, v)` per left row `(lid, key, lts)`. Null keys
+    * and null timestamps never match; ties on (key, ts) resolve to the
+    * greatest payload; NEAREST breaks equal distances toward the backward
+    * side. Returns `(lid, asof_ts, asof_v)`, nulls where nothing matches.
+    */
+  private def reference(l: DataFrame, r: DataFrame, dir: AsOfDirection) = {
+    def opt(row: Row, i: Int) = if (row.isNullAt(i)) None else Some(row.getLong(i))
+    val rights = r.select("key", "rts", "v").collect().toSeq.flatMap { row =>
+      for (k <- opt(row, 0); t <- opt(row, 1)) yield (k, t, row.getDouble(2))
+    }
+    l.select("lid", "key", "lts").collect().map { row =>
+      val hit = for {
+        k <- opt(row, 1)
+        t <- opt(row, 2)
+        mine = rights.filter(_._1 == k)
+        back = mine.filter(_._2 <= t).maxByOption(c => (c._2, c._3))
+        fwd = mine.filter(_._2 >= t).minByOption(c => (c._2, -c._3))
+        m <- dir match {
+          case AsOfBackward => back
+          case AsOfForward => fwd
+          case AsOfNearest => (back, fwd) match {
+            case (Some(b), Some(f)) => if (t - b._2 <= f._2 - t) back else fwd
+            case _ => back.orElse(fwd)
+          }
+        }
+      } yield m
+      (row.getLong(0), hit.map(m => Long.box(m._2)).orNull: Any,
+        hit.map(m => Double.box(m._3)).orNull: Any)
+    }.toSet
+  }
+
+  private def native(l: DataFrame, r: DataFrame, dir: AsOfDirection) =
+    NativeAsOf.joinAsOf(l, r, "key", "lts", "rts", Seq("v"), dir)
+      .select($"lid", $"asof_ts", $"asof_v")
+      .collect().map(row => (row.getLong(0), row.get(1), row.get(2))).toSet
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
 
@@ -28,20 +64,6 @@ class NativeAsOfSpec extends SparkSpec {
     ("B", ts("2024-01-01 12:00:00"), "t4")
   ).toDF("key", "tts", "tid")
 
-  test("native as-of equals the composed union+window operator on the fixture") {
-    val native = NativeAsOf
-      .joinAsOf(trades, quotes, "key", "tts", "qts", Seq("quote"))
-      .select($"tid", $"asof_ts", $"asof_quote")
-      .collect().map(r => (r.getString(0), r.get(1), r.get(2))).toSet
-    val composed = AsOf
-      .joinAsOf(trades, quotes, "key", "tts", "qts", Seq("quote"))
-      .select($"tid", $"asof_ts", $"asof_quote")
-      .collect().map(r => (r.getString(0), r.get(1), r.get(2))).toSet
-    assert(native == composed)
-    assert(native.exists { case (tid, t, _) => tid == "t3" && t == null },
-      "no-prior-row case must null-pad")
-  }
-
   test("equal-(key, ts) right ties resolve to the greatest payload — the " +
     "composed operator's documented tiebreak") {
     val dupQuotes = Seq(
@@ -53,26 +75,6 @@ class NativeAsOfSpec extends SparkSpec {
     val out = NativeAsOf.joinAsOf(one, dupQuotes, "key", "tts", "qts", Seq("quote"))
       .select($"asof_quote").collect()
     assert(out.map(_.getDouble(0)).toSeq == Seq(7.0))
-  }
-
-  test("native equals composed on the corpus self-join shape (j9: purchases " +
-    "x same-table clicks), row for row") {
-    val sf = "/root/testdata/sf0.001"
-    val ev = Tables.table(spark, sf, "events")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select("event_id", "user_id", "ts")
-    val clicks = ev.filter(col("event_type") === "click")
-      .groupBy("user_id", "ts").agg(max(col("value")).as("value"))
-    def collectMap(df: org.apache.spark.sql.DataFrame) = df
-      .select(col("event_id"), col("asof_ts"), col("asof_value"))
-      .collect().map(r => r.getLong(0) -> (r.get(1), r.get(2))).toMap
-    val native = collectMap(
-      NativeAsOf.joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value")))
-    val composed = collectMap(
-      AsOf.joinAsOf(purchases, clicks, "user_id", "ts", "ts", Seq("value")))
-    assert(native.size == composed.size && native == composed)
-    assert(native.values.exists(_._1 != null) && native.values.exists(_._1 == null),
-      "corpus must exercise both matched and unmatched rows")
   }
 
   test("physical shape: AsOfJoinExec with one exchange and one sort per side " +
@@ -91,8 +93,7 @@ class NativeAsOfSpec extends SparkSpec {
     // SparkPlan.nodeName strips the "Exec" suffix in rendered trees
     assert(finalPlan.contains("AsOfJoin "), finalPlan.take(3000))
     assert(!finalPlan.contains("Window"),
-      "the native path must not fall back to the window formulation:\n" +
-        finalPlan.take(3000))
+      "the as-of must plan no Window:\n" + finalPlan.take(3000))
     assert(!finalPlan.contains("BroadcastNestedLoopJoin") &&
       !finalPlan.contains("CartesianProduct"), finalPlan.take(3000))
     val exchanges = "Exchange hashpartitioning".r.findAllIn(finalPlan).length
@@ -104,31 +105,6 @@ class NativeAsOfSpec extends SparkSpec {
     assert(out.count() == trades.count())
   }
 
-  test("FORWARD direction equals the composed time-negation formulation on " +
-    "the corpus (j16 vs j13), row for row") {
-    val sf = "/root/testdata/sf0.001"
-    def collectRows(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getLong(0), r.get(1), r.get(2), r.get(3))).toSeq
-    val native = collectRows(Joins.j16AsOfNativeForward.fn(spark, sf))
-    val composed = collectRows(Joins.j13AsOfForward.fn(spark, sf))
-    assert(native.size == composed.size && native == composed)
-    assert(native.exists(_._3 != null) && native.exists(_._3 == null),
-      "corpus must exercise both matched and tolerance-missed rows")
-  }
-
-  test("NEAREST direction equals the composed two-pass formulation on the " +
-    "corpus (j17 vs j15), row for row") {
-    val sf = "/root/testdata/sf0.001"
-    def collectRows(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getLong(0), r.get(1), r.get(2), r.get(3), r.get(4))).toSeq
-    val native = collectRows(Joins.j17AsOfNativeNearest.fn(spark, sf))
-    val composed = collectRows(Joins.j15AsOfNearest.fn(spark, sf))
-    assert(native.size == composed.size && native == composed)
-    val dirs = native.flatMap(r => Option(r._5)).toSet
-    assert(dirs == Set("prev", "next"),
-      s"corpus must exercise both directions, got $dirs")
-  }
-
   test("forward physical shape: AsOfJoinExec, no Window, descending-ts " +
     "sorts, one exchange per side") {
     val sf = "/root/testdata/sf0.001"
@@ -138,8 +114,7 @@ class NativeAsOfSpec extends SparkSpec {
     val cut = plan.indexOf("== Initial Plan ==")
     val finalPlan = if (cut >= 0) plan.substring(0, cut) else plan
     assert(finalPlan.contains("AsOfJoin "), finalPlan.take(3000))
-    // the ORDER BY event_id at the top is a Sort but adds no Window; the
-    // as-of itself must not fall back to the union+window formulation
+    // the ORDER BY event_id at the top is a Sort but adds no Window
     assert(!finalPlan.contains("Window"), finalPlan.take(3000))
     assert(finalPlan.contains("DESC"),
       "forward direction must sort ts descending:\n" + finalPlan.take(3000))
@@ -162,20 +137,10 @@ class NativeAsOfSpec extends SparkSpec {
         .toDF("lid", "key", "lts")
       val r = sample(seed + 100, 50).toDF("key", "rts", "v")
         .repartition((seed % 3 + 1).toInt)
-      val native = NativeAsOf
-        .joinAsOf(l, r, "key", "lts", "rts", Seq("v"), graft.plans.AsOfForward)
-        .select($"lid", $"asof_ts", $"asof_v")
-        .collect().map(row => (row.getLong(0), row.get(1), row.get(2))).toSet
-      // composed forward = backward over negated time (the j13 identity)
-      val composed = AsOf
-        .joinAsOf(
-          l.withColumn("nts", -$"lts"), r.withColumn("nts", -$"rts").drop("rts"),
-          "key", "nts", "nts", Seq("v"))
-        .select($"lid",
-          (-$"asof_ts").as("asof_ts"), $"asof_v")
-        .collect().map(row => (row.getLong(0), row.get(1), row.get(2))).toSet
-      assert(native == composed, s"seed=$seed\n" +
-        s"native-only=${native -- composed}\ncomposed-only=${composed -- native}")
+      val got = native(l, r, AsOfForward)
+      val want = reference(l, r, AsOfForward)
+      assert(got == want, s"seed=$seed\n" +
+        s"native-only=${got -- want}\nreference-only=${want -- got}")
     }
   }
 
@@ -198,25 +163,10 @@ class NativeAsOfSpec extends SparkSpec {
       val r = sample(seed + 100, 50).toDF("key", "rts", "v")
         .groupBy("key", "rts").agg(max($"v").as("v"))
         .repartition((seed % 3 + 1).toInt)
-      val native = NativeAsOf
-        .joinAsOf(l, r, "key", "lts", "rts", Seq("v"), graft.plans.AsOfNearest)
-        .select($"lid", $"asof_ts", $"asof_v")
-        .collect().map(row => (row.getLong(0), row.get(1), row.get(2))).toSet
-      val back = AsOf.joinAsOf(l, r, "key", "lts", "rts", Seq("v"))
-        .withColumnRenamed("asof_ts", "bts").withColumnRenamed("asof_v", "bv")
-      val both = AsOf.joinAsOf(
-          back.withColumn("nts", -$"lts"),
-          r.withColumn("nts", -$"rts").drop("rts"), "key", "nts", "nts", Seq("v"))
-        .select($"lid", $"lts", $"bts", $"bv",
-          (-$"asof_ts").as("fts"), $"asof_v".as("fv"))
-      val pickPrev = $"fts".isNull ||
-        ($"bts".isNotNull && ($"lts" - $"bts") <= ($"fts" - $"lts"))
-      val composed = both.select($"lid",
-          when(pickPrev, $"bts").otherwise($"fts"),
-          when(pickPrev, $"bv").otherwise($"fv"))
-        .collect().map(row => (row.getLong(0), row.get(1), row.get(2))).toSet
-      assert(native == composed, s"seed=$seed\n" +
-        s"native-only=${native -- composed}\ncomposed-only=${composed -- native}")
+      val got = native(l, r, AsOfNearest)
+      val want = reference(l, r, AsOfNearest)
+      assert(got == want, s"seed=$seed\n" +
+        s"native-only=${got -- want}\nreference-only=${want -- got}")
     }
   }
 
@@ -227,12 +177,16 @@ class NativeAsOfSpec extends SparkSpec {
     // few keys + tiny ts domain → heavy boundary traffic (key changes,
     // exact-ts ties, duplicate right rows) — exactly where a streamed
     // merge's held-row logic can go stale
+    // null keys as well as null ts: neither may ever match (a null key
+    // null-pads, as `l.key = r.key` never holds in DuckDB's ASOF)
     val rowGen = for {
       k <- Gen.choose(1L, 4L)
       t <- Gen.choose(0L, 20L)
       v <- Gen.choose(0L, 9L)
       nullTs <- Gen.prob(0.1)
-    } yield (k, if (nullTs) null else java.lang.Long.valueOf(t), v.toDouble)
+      nullKey <- Gen.prob(0.1)
+    } yield (if (nullKey) null else java.lang.Long.valueOf(k),
+      if (nullTs) null else java.lang.Long.valueOf(t), v.toDouble)
     def sample(seed: Long, n: Int) = Gen.listOfN(n, rowGen)
       .apply(Gen.Parameters.default, Seed(seed)).getOrElse(Nil)
 
@@ -244,15 +198,12 @@ class NativeAsOfSpec extends SparkSpec {
         .toDF("lid", "key", "lts")
       val r = rRows.map { case (k, t, v) => (k, t, v) }.toDF("key", "rts", "v")
         .repartition((seed % 3 + 1).toInt) // vary pre-join layout
-      def run(f: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-          String, String, String, Seq[String]) => org.apache.spark.sql.DataFrame) =
-        f(l, r, "key", "lts", "rts", Seq("v"))
-          .select($"lid", $"asof_ts", $"asof_v")
-          .collect().map(row => (row.getLong(0), row.get(1), row.get(2))).toSet
-      val native = run(NativeAsOf.joinAsOf(_, _, _, _, _, _))
-      val composed = run(AsOf.joinAsOf)
-      assert(native == composed, s"seed=$seed\n" +
-        s"native-only=${native -- composed}\ncomposed-only=${composed -- native}")
+      val got = native(l, r, AsOfBackward)
+      val want = reference(l, r, AsOfBackward)
+      assert(got == want, s"seed=$seed\n" +
+        s"native-only=${got -- want}\nreference-only=${want -- got}")
+      assert(lRows.exists(_._1 == null) && want.exists(_._2 != null),
+        s"seed=$seed must exercise null keys and matches")
     }
   }
 }

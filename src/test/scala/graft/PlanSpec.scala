@@ -26,6 +26,16 @@ class PlanSpec extends SparkSpec {
   private def executedPlan(name: String): String =
     finalPlan(SparkEntry.queries(name)(spark, sf))
 
+  /** Every as-of plans through the native exec: an `AsOfJoin` node (the
+    * rendered name drops "Exec"), no Window, and no cross product.
+    */
+  private def assertNativeAsOf(plan: String): Unit = {
+    assert(plan.contains("AsOfJoin "), plan.take(3000))
+    assert(!plan.contains("Window"), "the as-of must plan no Window:\n" + plan.take(3000))
+    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
+      "the as-of must not plan a cross product:\n" + plan.take(3000))
+  }
+
   test("p4: filter predicate is pushed down to the parquet scan") {
     val plan = executedPlan("p4_filter_predicate")
     assert(plan.contains("PushedFilters: ["), plan.take(2000))
@@ -840,11 +850,14 @@ class PlanSpec extends SparkSpec {
   test("h3: the SCD2 dimension join is the as-of union+window shape — one " +
     "user-keyed window, no range-join cross product") {
     val plan = executedPlan("h3_scd2_dim_join")
+    assert(plan.contains("AsOfJoin "), plan.take(3000))
+    // h1's lag/row_number/lead Windows build the version history; the
+    // per-fact lookup itself runs no running-last() window
+    assert(!plan.contains("last("), "the lookup must plan no last() window:\n" + plan.take(3000))
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
       "interval predicate must not plan a cross product:\n" + plan.take(3000))
-    assert(plan.contains("hashpartitioning(_k") || plan.contains("hashpartitioning(user_id"),
-      "as-of window must partition by the key:\n" + plan.take(3000))
-    assert(plan.contains("Window"), plan.take(3000))
+    assert(plan.contains("hashpartitioning(user_id"),
+      "the as-of must partition by the key:\n" + plan.take(3000))
   }
 
   test("g6: wedges come from an equi-join on the center node, existing edges " +
@@ -1015,11 +1028,9 @@ class PlanSpec extends SparkSpec {
   test("j13: forward as-of rides the j9 machinery — one user-keyed window, " +
     "never a range join") {
     val plan = executedPlan("j13_asof_forward")
-    assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
-      plan.take(3000))
-    assert(plan.contains("Window"), plan.take(3000))
-    assert(plan.contains("hashpartitioning(_k") || plan.contains("hashpartitioning(user_id"),
-      "the as-of window must partition by the key:\n" + plan.take(3000))
+    assertNativeAsOf(plan)
+    assert(plan.contains("hashpartitioning(user_id"),
+      "the as-of must partition by the key:\n" + plan.take(3000))
   }
 
   test("g7: each PPR round is a keyed shuffle with map-side partial sums — " +
@@ -1156,8 +1167,7 @@ class PlanSpec extends SparkSpec {
   test("j15: nearest as-of composes exactly two as-of passes — bounded " +
     "exchanges, no range join, no cartesian") {
     val plan = executedPlan("j15_asof_nearest")
-    assert(!plan.contains("CartesianProduct"), plan.take(3000))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(3000))
+    assertNativeAsOf(plan)
     val exchanges = "Exchange".r.findAllIn(plan).length
     assert(exchanges <= 6, s"nearest must stay a bounded pipeline, got $exchanges")
   }
