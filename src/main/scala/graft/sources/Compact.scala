@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** Small-file compaction for partitioned Parquet stores — the maintenance
   * operator every long-running ingest needs at scale. A streaming upsert
@@ -69,7 +68,9 @@ object Compact {
     * Optimistic-concurrency table formats solve this with commit
     * conflicts; a plain Parquet store must serialize writers.
     *
-    * Heals interrupted swaps (AtomicSwap.recover) before measuring.
+    * Heals interrupted swaps (AtomicSwap.recover) before measuring. The
+    * partitions must share one data schema: it is read once, from the
+    * first victim, and every victim is rewritten with it.
     *
     * @return the partition names that were rewritten
     */
@@ -87,10 +88,14 @@ object Compact {
 
     val tmp = new Path(dir + ".compact-tmp")
     fs.delete(tmp, true)
+    // One schema for every victim: inferring it per partition costs a job
+    // each. coalesce merges small files without the shuffle a repartition
+    // would add, so each victim is one job: its read-and-write.
+    val schema = spark.read.parquet(s"$dir/${victims.head.dir}").schema
     victims.foreach { v =>
       val nOut = math.max(1L, (v.bytes + targetBytes - 1) / targetBytes).toInt
-      spark.read.parquet(s"$dir/${v.dir}")
-        .repartition(nOut)
+      spark.read.schema(schema).parquet(s"$dir/${v.dir}")
+        .coalesce(nOut)
         .write.mode("overwrite").parquet(s"$tmp/${v.dir}")
       AtomicSwap.publish(fs, new Path(tmp, v.dir), new Path(dir, v.dir))
     }

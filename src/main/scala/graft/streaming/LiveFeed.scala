@@ -1,7 +1,10 @@
 package graft.streaming
 
 import graft.operators.Merge
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.sources.AtomicSwap
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
@@ -65,14 +68,16 @@ object LiveFeed {
     * `storedDir` — the batch `Merge.upsertDailyClose` is reused verbatim,
     * so streaming and batch semantics cannot drift apart.
     *
-    * PARTITION-INCREMENTAL: `storedDir` must be a `day=`-partitioned
-    * Parquet dataset (write the seed with `.partitionBy("day")`). Each
-    * micro-batch reads ONLY the partitions whose days appear in the batch
-    * (partition-pruned scan), merges them, and republishes ONLY those
-    * partitions — I/O per batch is O(touched days), not O(store), which is
-    * what survives a 100 TB store. The reference rewrites one whole
-    * per-symbol file per trade (`update_live_price.py:289-292`); this is
-    * the same replace idea at day-partition granularity.
+    * PARTITION-INCREMENTAL: `storedDir` must be an existing `day=`-partitioned
+    * Parquet dataset (write the seed with `.partitionBy("day")`); its schema
+    * is resolved once, when the stream starts. Each micro-batch finds its
+    * touched days in one job, reads ONLY those days' leaf directories
+    * (addressed by path, as [[graft.sources.BarStore.readSymbol]] does, so
+    * no batch lists the store's other `day=` directories), merges them, and
+    * republishes ONLY those partitions — I/O per batch is O(touched days),
+    * not O(store). The reference rewrites one whole per-symbol file per
+    * trade (`update_live_price.py:289-292`); this is the same replace idea
+    * at day-partition granularity.
     */
   def startUpsert(
       spark: SparkSession,
@@ -99,7 +104,9 @@ object LiveFeed {
     *        reference's invalid-symbol registry growth (`ulp:170-179`):
     *        nothing is silently dropped, and because foreachBatch is
     *        at-least-once, each epoch overwrites ITS OWN batch_id
-    *        partition so replays cannot double-count rejects.
+    *        partition so replays cannot double-count rejects. The write
+    *        runs concurrently with the merge; the batch returns only when
+    *        both are done, and fails if either fails.
     */
   def startUpsertFrom(
       spark: SparkSession,
@@ -108,13 +115,15 @@ object LiveFeed {
       checkpointDir: String,
       trigger: Trigger = Trigger.AvailableNow(),
       deadLetterDir: Option[String] = None): StreamingQuery = {
+    val store = new Path(storedDir)
+    val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // Heal any mid-swap crash from a previous run BEFORE the first batch:
     // an interrupted publish leaves a partition aside-copied and invisible,
     // and merging against the partial store would lose its rows.
-    graft.sources.AtomicSwap.recover(
-      new org.apache.hadoop.fs.Path(storedDir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration),
-      new org.apache.hadoop.fs.Path(storedDir))
+    AtomicSwap.recover(fs, store)
+    // Resolved once: a per-batch `spark.read.parquet(storedDir)` lists every
+    // `day=` directory and runs a schema-inference job before it prunes.
+    val storeSchema = spark.read.parquet(storedDir).schema
     trades
       .withWatermark("ts", "1 day")
       .writeStream
@@ -122,50 +131,91 @@ object LiveFeed {
       .option("checkpointLocation", checkpointDir)
       .trigger(trigger)
       .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        deadLetterDir.foreach { d =>
-          // Keyed by batch id with dynamic partition overwrite so an
-          // at-least-once replay of the epoch REWRITES its own partition
-          // instead of appending duplicate reject rows.
-          invalidTrades(raw)
-            .withColumn("batch_id", lit(batchId))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(d)
+        val deadLetters = deadLetterDir.map { d =>
+          new SideTask(s"livefeed-dead-letters-$batchId",
+            // Keyed by batch id with dynamic partition overwrite so an
+            // at-least-once replay of the epoch REWRITES its own partition
+            // instead of appending duplicate reject rows.
+            invalidTrades(raw)
+              .withColumn("batch_id", lit(batchId))
+              .write.mode("overwrite")
+              .option("partitionOverwriteMode", "dynamic")
+              .partitionBy("batch_id")
+              .parquet(d))
         }
-        val batch = validTrades(raw)
-        val incoming = batch
-          .select(col("symbol"), to_date(col("ts")).as("day"), col("price"), col("ts"))
-        // The touched-day list is partition METADATA, not data: bounded by
-        // the watermark (~2 calendar days per batch), same driver-side
-        // footprint dynamic partition overwrite itself needs.
-        val days = incoming.select("day").distinct().collect().map(_.getDate(0))
-        if (days.nonEmpty) {
-          val stored = spark.read.parquet(storedDir)
-            .filter(col("day").isin(days.toIndexedSeq: _*)) // partition-pruned
-          val merged = Merge
-            .upsertDailyClose(stored, incoming, Seq("symbol", "day"), "price", "ts", "adj_close")
-          // Crash-safe per-partition publish mirroring the reference's
-          // tmp+os.replace (`ulp:289-292`) at day granularity: stage the
-          // touched partitions, then aside-swap each one into place
-          // (graft.sources.AtomicSwap — every crash window is recoverable
-          // by AtomicSwap.recover at restart). Untouched partitions are
-          // never read, written, or renamed.
-          val tmp = storedDir + ".tmp"
-          merged.write.mode("overwrite").partitionBy("day").parquet(tmp)
-          val fs = new org.apache.hadoop.fs.Path(storedDir)
-            .getFileSystem(spark.sparkContext.hadoopConfiguration)
-          fs.listStatus(new org.apache.hadoop.fs.Path(tmp))
-            .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
-            .foreach { part =>
-              graft.sources.AtomicSwap.publish(fs, part.getPath,
-                new org.apache.hadoop.fs.Path(storedDir, part.getPath.getName))
-            }
-          fs.delete(new org.apache.hadoop.fs.Path(tmp), true)
-        }
-        ()
+        var failure: Throwable = null
+        try upsertBatch(spark, validTrades(raw), fs, store, storeSchema)
+        catch { case e: Throwable => failure = e; throw e }
+        finally deadLetters.foreach(_.join(failure))
       }
       .start()
+  }
+
+  /** Merge one batch of valid trades into the day partitions they touch. */
+  private def upsertBatch(
+      spark: SparkSession,
+      valid: DataFrame,
+      fs: FileSystem,
+      store: Path,
+      storeSchema: StructType): Unit = {
+    val incoming = valid
+      .select(col("symbol"), to_date(col("ts")).as("day"), col("price"), col("ts"))
+    // The touched-day list is partition METADATA, not data: bounded by the
+    // watermark (~2 calendar days per batch), the same driver-side
+    // footprint dynamic partition overwrite itself needs. A per-partition
+    // distinct keeps it to one job with no exchange.
+    val days = incoming.select("day").as(Encoders.DATE)
+      .mapPartitions(_.toSet.iterator)(Encoders.DATE).collect().distinct
+    if (days.isEmpty) return
+    // A touched day without a leaf is a new day: it has no stored rows.
+    val leaves = days.toSeq
+      .map(d => ExternalCatalogUtils.generatePartitionPath(Map("day" -> d.toString), Seq("day"), store))
+      .filter(fs.exists)
+    val stored =
+      if (leaves.isEmpty) spark.createDataFrame(java.util.List.of[Row](), storeSchema)
+      else spark.read.schema(storeSchema).option("basePath", store.toString)
+        .parquet(leaves.map(_.toString): _*)
+    val merged = Merge
+      .upsertDailyClose(stored, incoming, Seq("symbol", "day"), "price", "ts", "adj_close")
+    // Crash-safe per-partition publish mirroring the reference's
+    // tmp+os.replace (`ulp:289-292`) at day granularity: stage the touched
+    // partitions, then aside-swap each one into place (AtomicSwap — every
+    // crash window is recoverable by AtomicSwap.recover at restart).
+    // Untouched partitions are never read, written, or renamed.
+    val tmp = new Path(store.toString + ".tmp")
+    merged.write.mode("overwrite").partitionBy("day").parquet(tmp.toString)
+    fs.listStatus(tmp)
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("day="))
+      .foreach(part => AtomicSwap.publish(fs, part.getPath, new Path(store, part.getPath.getName)))
+    fs.delete(tmp, true)
+  }
+
+  /** Runs `body` on a fresh thread. A new thread, not a pool: it inherits a
+    * clone of the starting thread's Spark local properties (the stream's
+    * job group, its query and SQL execution ids), so `query.stop()` cancels
+    * the side task's jobs too. A pooled thread would keep the properties of
+    * whichever thread created it.
+    */
+  private final class SideTask(name: String, body: => Unit) {
+    @volatile private var failure: Throwable = null
+    private val thread = new Thread(() => try body catch { case e: Throwable => failure = e }, name)
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Waits for `body` — through interrupts, so no side write outlives its
+      * batch — then throws its failure, or adds it to `primary`, the
+      * caller's own failure, as suppressed.
+      */
+    def join(primary: Throwable): Unit = {
+      var interrupted = false
+      while (thread.isAlive)
+        try thread.join() catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+      if (failure != null) {
+        if (primary == null) throw failure
+        primary.addSuppressed(failure)
+      }
+    }
   }
 
   /** Watermarked tumbling-window aggregate — the streaming twin of the

@@ -40,4 +40,21 @@ class CompactSpec extends SparkSpec {
     // second pass finds nothing to do
     assert(Compact.compact(spark, dir, maxFiles = 4, minBytes = 1L).isEmpty)
   }
+
+  test("compacting N victim partitions launches at most N+1 jobs, keeps every row") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-compact-jobs").toString + "/store"
+    val victims = Seq("a", "b", "c")
+    (1 to 240).map(i => (i.toLong, s"v$i", victims(i % victims.size))).toDF("v", "s", "day")
+      .repartition(10).write.partitionBy("day").mode("overwrite").parquet(dir)
+    (300 to 305).map(i => (i.toLong, s"v$i", "d")).toDF("v", "s", "day")
+      .coalesce(1).write.partitionBy("day").mode("append").parquet(dir)
+    val before = spark.read.parquet(dir).as[(Long, String, String)].collect().toSet
+
+    val (rewritten, jobs) = jobsLaunchedBy(Compact.compact(spark, dir, maxFiles = 4, minBytes = 1L))
+    assert(rewritten.sorted == victims.map(v => s"day=$v"))
+    // one schema inference for the whole pass, then one read-and-write job
+    // per victim: no per-victim inference, no shuffle
+    assert(jobs <= victims.size + 1, s"$jobs jobs for ${victims.size} victims")
+    assert(spark.read.parquet(dir).as[(Long, String, String)].collect().toSet == before)
+  }
 }

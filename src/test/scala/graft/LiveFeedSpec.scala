@@ -148,6 +148,120 @@ class LiveFeedSpec extends SparkSpec {
     assert(got == Seq(("AAPL", 99.5)))
   }
 
+  /** A store at `root/stored` and an empty poll directory at `root/in`. */
+  private def liveStore(root: String, stored: Seq[(String, Date, Double, Double)]): Unit = {
+    Files.createDirectories(Paths.get(s"$root/in"))
+    stored.toDF("symbol", "day", "open", "adj_close")
+      .write.mode("overwrite").partitionBy("day").parquet(s"$root/stored")
+  }
+
+  private def rows(dir: String, order: String*) =
+    spark.read.parquet(dir).orderBy(order.map(col): _*).collect().toSeq
+
+  test("every job of a batch, dead-letter write included, runs in the stream's job group") {
+    // Two queries, one after the other: a side write on a pooled thread
+    // would carry the first query's job group, or none, into the second.
+    Seq("livefeed-group-a", "livefeed-group-b").foreach { prefix =>
+      val root = Files.createTempDirectory(prefix).toString
+      liveStore(root, Seq(("AAPL", d("2024-01-02"), 10.0, 11.0)))
+      val q = LiveFeed.startUpsertFrom(spark, LiveFeed.readTrades(spark, s"$root/in"),
+        s"$root/stored", s"$root/ckpt", Trigger.ProcessingTime("100 milliseconds"),
+        deadLetterDir = Some(s"$root/dead"))
+      val (_, jobs) = try jobsStartedDuring {
+        Files.writeString(Paths.get(s"$root/in/poll0.json"),
+          """{"symbol":"AAPL","price":12.5,"ts":"2024-01-02T15:00:00.000Z"}
+            |{"symbol":"BADP","price":"NaN","ts":"2024-01-02T16:00:00.000Z"}
+            |""".stripMargin)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(rows(s"$root/dead", "symbol").map(_.getAs[String]("symbol")) == Seq("BADP"))
+      assert(jobs.nonEmpty)
+      val groups = jobs.map(_.getProperty("spark.jobGroup.id"))
+      assert(groups.forall(_ == q.runId.toString),
+        s"$prefix: jobs outside the stream's group ${q.runId}: $groups")
+    }
+  }
+
+  test("a batch reads only the leaves of the days it touches, never the store root") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = Files.createTempDirectory("livefeed-leaves").toString
+    val storedDir = s"$root/stored"
+    val days = (1 to 30).map(i => d(f"2024-01-$i%02d"))
+    liveStore(root, days.map(day => ("AAPL", day, 10.0, 11.0)))
+    // one existing day and one day the store has never seen
+    Files.writeString(Paths.get(s"$root/in/batch0.json"),
+      """{"symbol":"AAPL","price":12.5,"ts":"2024-01-07T15:00:00.000Z"}
+        |{"symbol":"AAPL","price":13.5,"ts":"2024-02-01T15:00:00.000Z"}
+        |""".stripMargin)
+
+    val storeRoot = new Path(storedDir).toUri.getPath
+    val scanned = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val fence = s"fence-${System.nanoTime()}"
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        collect(qe.executedPlan) { case s: FileSourceScanExec => s }
+          .flatMap(_.relation.location.rootPaths)
+          .foreach(p => scanned.add(p.toUri.getPath))
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // registered before the start, so the stream's cloned session has it too
+    spark.listenerManager.register(listener)
+    try {
+      LiveFeed.startUpsert(spark, s"$root/in", storedDir, s"$root/ckpt").awaitTermination(120000)
+      // the listener bus is ordered: once the fence's scan is seen, so are the batch's
+      spark.read.parquet(storedDir).filter(col("symbol") === fence).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!scanned.contains(storeRoot) && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+
+    import scala.jdk.CollectionConverters._
+    val seen = scanned.asScala.toSeq
+    assert(seen.last == storeRoot, s"listener never saw the fence scan: $seen")
+    val batchScans = seen.init.filter(p => p == storeRoot || p.startsWith(storeRoot + "/"))
+    assert(batchScans == Seq(s"$storeRoot/day=2024-01-07"), s"store scans of the batch: $batchScans")
+    val got = rows(storedDir, "day").filter(r => Set(d("2024-01-07"), d("2024-02-01"))(r.getAs[Date]("day")))
+      .map(r => (r.getAs[Date]("day"), r.getAs[Double]("adj_close")))
+    assert(got == Seq((d("2024-01-07"), 12.5), (d("2024-02-01"), 13.5)))
+  }
+
+  test("a failed dead-letter write fails the batch; a restart converges to the clean run") {
+    val trades =
+      """{"symbol":"AAPL","price":99.5,"ts":"2024-01-02T15:59:00.000Z"}
+        |{"symbol":"TSLA","price":50.0,"ts":"2024-01-03T10:00:00.000Z"}
+        |{"symbol":"BADP","price":"NaN","ts":"2024-01-02T16:00:00.000Z"}
+        |{"symbol":"BADT","price":1.0}
+        |""".stripMargin
+    def prepare(prefix: String): String = {
+      val root = Files.createTempDirectory(prefix).toString
+      liveStore(root, Seq(("AAPL", d("2024-01-02"), 10.0, 11.0), ("MSFT", d("2024-01-02"), 20.0, 21.0)))
+      Files.writeString(Paths.get(s"$root/in/batch0.json"), trades)
+      root
+    }
+    def run(root: String, dead: String) =
+      LiveFeed.startUpsertFrom(spark, LiveFeed.readTrades(spark, s"$root/in"),
+        s"$root/stored", s"$root/ckpt", deadLetterDir = Some(dead))
+
+    val clean = prepare("livefeed-clean")
+    run(clean, s"$clean/dead").awaitTermination(120000)
+
+    val root = prepare("livefeed-replay")
+    // no directory can be made below a regular file
+    Files.writeString(Paths.get(s"$root/blocker"), "")
+    val failed = run(root, s"$root/blocker/dead")
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](failed.awaitTermination(120000))
+    assert(failed.exception.isDefined)
+    run(root, s"$root/dead").awaitTermination(120000)
+
+    assert(rows(s"$root/stored", "symbol", "day") == rows(s"$clean/stored", "symbol", "day"))
+    val dead = rows(s"$root/dead", "symbol")
+    assert(dead == rows(s"$clean/dead", "symbol"))
+    assert(dead.map(r => (r.getAs[String]("symbol"), r.getAs[Int]("batch_id"))) ==
+      Seq(("BADP", 0), ("BADT", 0)))
+  }
+
   test("windowedCounts compiles against a streaming source") {
     val root = Files.createTempDirectory("livefeed2").toString
     Files.createDirectories(Paths.get(s"$root/in"))

@@ -64,8 +64,7 @@ class NativeAsOfSpec extends SparkSpec {
     ("B", ts("2024-01-01 12:00:00"), "t4")
   ).toDF("key", "tts", "tid")
 
-  test("equal-(key, ts) right ties resolve to the greatest payload — the " +
-    "composed operator's documented tiebreak") {
+  test("equal-(key, ts) right ties resolve to the greatest payload") {
     val dupQuotes = Seq(
       ("A", ts("2024-01-01 10:00:00"), 5.0),
       ("A", ts("2024-01-01 10:00:00"), 7.0),
@@ -120,8 +119,7 @@ class NativeAsOfSpec extends SparkSpec {
       "forward direction must sort ts descending:\n" + finalPlan.take(3000))
   }
 
-  test("randomized adversarial FORWARD equality with the composed " +
-    "time-negation path") {
+  test("randomized adversarial FORWARD equality with the brute-force reference") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val rowGen = for {
@@ -144,8 +142,7 @@ class NativeAsOfSpec extends SparkSpec {
     }
   }
 
-  test("randomized adversarial NEAREST equality with the composed two-pass " +
-    "arbiter — unique (key, ts) right side, pandas tie-to-backward rule") {
+  test("randomized adversarial NEAREST equality with the brute-force reference") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     val rowGen = for {
@@ -170,8 +167,7 @@ class NativeAsOfSpec extends SparkSpec {
     }
   }
 
-  test("randomized adversarial equality with the composed operator — dense " +
-    "key collisions, duplicate (key, ts) rows, nulls, varied partitioning") {
+  test("randomized adversarial BACKWARD equality with the brute-force reference") {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     // few keys + tiny ts domain → heavy boundary traffic (key changes,

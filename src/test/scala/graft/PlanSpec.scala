@@ -847,8 +847,8 @@ class PlanSpec extends SparkSpec {
       "probe filter must sit under (after, in tree text) the exact join:\n" + plan.take(3000))
   }
 
-  test("h3: the SCD2 dimension join is the as-of union+window shape — one " +
-    "user-keyed window, no range-join cross product") {
+  test("h3: the SCD2 dimension join plans the native AsOfJoin — no last() " +
+    "window") {
     val plan = executedPlan("h3_scd2_dim_join")
     assert(plan.contains("AsOfJoin "), plan.take(3000))
     // h1's lag/row_number/lead Windows build the version history; the
@@ -1025,8 +1025,8 @@ class PlanSpec extends SparkSpec {
       "no shuffle may precede the presentation sort:\n" + plan.take(3000))
   }
 
-  test("j13: forward as-of rides the j9 machinery — one user-keyed window, " +
-    "never a range join") {
+  test("j13: forward as-of plans the native AsOfJoin — no Window, never a " +
+    "range join") {
     val plan = executedPlan("j13_asof_forward")
     assertNativeAsOf(plan)
     assert(plan.contains("hashpartitioning(user_id"),
@@ -1164,8 +1164,8 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("j15: nearest as-of composes exactly two as-of passes — bounded " +
-    "exchanges, no range join, no cartesian") {
+  test("j15: nearest as-of plans the native AsOfJoin — bounded exchanges, " +
+    "no Window") {
     val plan = executedPlan("j15_asof_nearest")
     assertNativeAsOf(plan)
     val exchanges = "Exchange".r.findAllIn(plan).length

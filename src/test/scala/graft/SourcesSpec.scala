@@ -2,10 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
 import graft.sources.{BarStore, Sidecar}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -48,33 +45,6 @@ class SourcesSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(
       BarStore.readSymbol(spark, dir, "alpaca", "AAPL")
         .select("adj_close").as[Double].head() == 102.5)
-  }
-
-  /** Jobs launched by `body` on this thread. Listener events arrive
-    * asynchronously but in order, so a fence job in its own group marks
-    * the point by which every job of `body` has been counted.
-    */
-  private def jobsLaunchedBy[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"jobs-${System.nanoTime()}"
-    val fence = group + "-fence"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .foreach(seen.add)
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "counted")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(fence, "fence")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(fence) && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(seen.contains(fence), "listener never saw the fence job")
-      (out, seen.asScala.count(_ == group))
-    } finally sc.removeSparkListener(listener)
   }
 
   private def filesRead(df: DataFrame): Long =
