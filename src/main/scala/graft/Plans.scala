@@ -373,7 +373,45 @@ object Plans {
     "e27_range_search" ->
       "Range search: probe cells (<=16 rows) and probe vectors (4 rows) broadcast into the pruned candidate scan — the corpus is never self-joined and nothing sort-merge-joins; candidates per probe are nprobe*n/C = O(sqrt n) at the e3 codebook balance point.",
     "p20_cdc_apply" ->
-      "CDC apply: the sequence-rank window and the op census share ONE user-keyed exchange (the h7 discipline) over ONE events scan — no join anywhere in the fold; the only other exchange is the presentation range sort.")
+      "CDC apply: the sequence-rank window and the op census share ONE user-keyed exchange (the h7 discipline) over ONE events scan — no join anywhere in the fold; the only other exchange is the presentation range sort.",
+    "e4_ann_kmeans" ->
+      "Learned IVF: the 32 seeds are an md5-ordered TakeOrderedAndProject, both argmins are vec_id-partitioned windows over a broadcast codebook, and the one unpartitioned window ranks only the query vector's 32 centroid distances.",
+    "e5_ann_hyperplane" ->
+      "Hyperplane LSH: the 0-based draw-index window sits directly on the 16-row draw (TakeOrderedAndProject) — never on the corpus; the sketch is one broadcast into a map-side-combinable sum and candidates a broadcast semi-join on (band, value).",
+    "e15_nprobe_sweep" ->
+      "nprobe sweep: the model is built once — all four probes read the persisted assignment and the persisted 32-row query-to-centroid table, so each probe-cell window ranks at most 32 rows.",
+    "e28_multiprobe_lsh" ->
+      "Multi-probe LSH: the draw-index window sits directly on the 8-row draw; the Hamming-ball probe keys are literals joined by broadcast against ONE sketch table.")
+
+  /** `plan` with its run-specific tokens made stable, so two runs at one
+    * commit print the same text: lambda variables (`x_12`), expression
+    * ids (`#123`) and exchange `plan_id`s are renumbered in order of first
+    * appearance; codegen stage ids (`*(12)` → `*(_)`) and adaptive query
+    * stage ids, which follow the order concurrent stages finish in, are
+    * masked, and so are JVM lambda class names, object identity hashes
+    * (`UnsafeArrayData@7a50b5f7`) and the per-JVM MatView root.
+    */
+  def canonical(plan: String): String = {
+    def renumber(text: String, re: scala.util.matching.Regex)(
+        show: (String, Int) => String): String = {
+      val ids = scala.collection.mutable.LinkedHashMap.empty[String, Int]
+      re.replaceAllIn(text, m => scala.util.matching.Regex.quoteReplacement(
+        show(m.group(1), ids.getOrElseUpdate(m.group(1), ids.size))))
+    }
+    val lambdaVars = """lambda ([A-Za-z]+_\d+)#""".r
+      .findAllMatchIn(plan).map(_.group(1)).toSeq.distinct
+    val lambdasRenamed =
+      if (lambdaVars.isEmpty) plan
+      else renumber(plan, lambdaVars.map(java.util.regex.Pattern.quote)
+          .mkString("""\b(""", "|", ")(?=#)").r)((v, k) => v.takeWhile(_ != '_') + "_" + k)
+    val idsRenamed = renumber(lambdasRenamed, """#(\d+)""".r)((_, k) => s"#$k")
+    renumber(idsRenamed, """plan_id=(\d+)""".r)((_, k) => s"plan_id=$k")
+      .replaceAll("""\$\$Lambda[^@\s]*@[0-9a-f]+""", "\\$\\$Lambda")
+      .replaceAll("""(\w)@[0-9a-f]+\b""", "$1@*")
+      .replaceAll("""/tmp/graft-mv-[0-9a-f]+""", "/tmp/graft-mv-*")
+      .replaceAll("""\*\(\d+\)""", "*(_)")
+      .replaceAll("""QueryStage \d+""", "QueryStage _")
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -401,7 +439,7 @@ object Plans {
     annotated.foreach { case (name, note) =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       df.collect() // finalize AQE
-      val s = df.queryExecution.executedPlan.toString
+      val s = canonical(df.queryExecution.executedPlan.toString)
       val cut = s.indexOf("== Initial Plan ==")
       val plan = (if (cut >= 0) s.substring(0, cut) else s).linesIterator
         .take(48).mkString("\n")

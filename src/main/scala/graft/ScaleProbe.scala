@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Quantizer
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -583,9 +584,9 @@ object ScaleProbe {
     val nDocs = docs.count()
     factors.foreach { f =>
       val corpus = inflate(docs, f)
-      val tbl = s"graft_probe_mv_f$f"
+      val name = s"probe_mv_f$f"
       val t0 = System.nanoTime()
-      graft.sources.MatView.of(spark, tbl, "doc_id", 16) {
+      graft.sources.MatView.of(spark, sfDir, name, "doc_id", 16) {
         graft.operators.MinHashLSH.shingleTable(corpus, "doc_id", "text", 5)
       }
       val buildSec = (System.nanoTime() - t0) / 1e9
@@ -597,7 +598,7 @@ object ScaleProbe {
         regexp_replace(concat(col("text"), lit(" ")), lit(" "), lit("_new "))
           .as("text"))
       val t1 = System.nanoTime()
-      graft.sources.MatView.append(spark, tbl, "doc_id", 16) {
+      graft.sources.MatView.append(spark, sfDir, name, "doc_id", 16) {
         graft.operators.MinHashLSH.shingleTable(delta, "doc_id", "text", 5)
       }
       val refreshSec = (System.nanoTime() - t1) / 1e9
@@ -612,8 +613,9 @@ object ScaleProbe {
     // probe must show the count sawtooth within [1, 5] (policy breach →
     // in-refresh compact back to 1) and the compaction log advancing.
     locally {
-      val tbl = "graft_probe_mv_compact"
-      graft.sources.MatView.of(spark, tbl, "doc_id", 16) {
+      val name = "probe_mv_compact"
+      val tbl = graft.sources.MatView.table(sfDir, name)
+      graft.sources.MatView.of(spark, sfDir, name, "doc_id", 16) {
         graft.operators.MinHashLSH.shingleTable(docs, "doc_id", "text", 5)
       }
       (1 to 10).foreach { k =>
@@ -622,7 +624,7 @@ object ScaleProbe {
           regexp_replace(concat(col("text"), lit(" ")), lit(" "), lit(s"_r$k "))
             .as("text"))
         val t0 = System.nanoTime()
-        graft.sources.MatView.append(spark, tbl, "doc_id", 16,
+        graft.sources.MatView.append(spark, sfDir, name, "doc_id", 16,
           maxFilesPerBucket = 4) {
           graft.operators.MinHashLSH.shingleTable(delta, "doc_id", "text", 5)
         }
@@ -925,18 +927,7 @@ object ScaleProbe {
       val inflated = inflateEmb(emb, f)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val n = inflated.count()
-      val drawOrder = Window.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      val planes = inflated
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(8)
-        .select((row_number().over(drawOrder) - 1).as("j"), col("v").as("h"))
-      val sketches = inflated
-        .crossJoin(broadcast(planes))
-        .select(col("vec_id"),
-          when(FastVec.dot(col("v"), col("h")) >= 0,
-            expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L)).as("bit"))
-        .groupBy("vec_id")
-        .agg(sum(col("bit")).as("sketch"))
+      val sketches = Quantizer.signSketch(inflated, 8)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       sketches.count() // sketch build shared by both schemes, off the clock
       val qsk = sketches.filter(col("vec_id") < 8)
@@ -1023,9 +1014,7 @@ object ScaleProbe {
         transform(col("embedding"), x => x.cast("double")).as("v"))
     emb.persist(); emb.count()
     val baseN = emb.count()
-    val seeds = emb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(4)
+    val seeds = Quantizer.draw(emb, 4)
       .collect()
       .zipWithIndex
       .map { case (r, i) => (i.toLong, r.getSeq[Double](1)) }
@@ -1259,7 +1248,6 @@ object ScaleProbe {
   }
 
   def annProbe(spark: SparkSession, sfDir: String): Unit = {
-    import org.apache.spark.sql.expressions.Window
     graft.functions.FastVec.register(spark)
     val emb = Tables.table(spark, sfDir, "embeddings")
       .select(col("vec_id"),
@@ -1272,24 +1260,19 @@ object ScaleProbe {
         spark.catalog.clearCache()
         emb.persist(); emb.count()
         val t0 = System.nanoTime()
-        // The SHIPPED e3/e25 codebook draw (md5-ordered) — r8 finding:
+        // The SHIPPED e3/e25 codebook draw (Quantizer.draw) — r8 finding:
         // the previous `orderBy(vec_id).limit(nCent)` draw was degenerate
         // UNDER INFLATION (the first nCent inflated ids are nCent
         // perturbed copies of base vector 0, so every centroid was nearly
         // identical and one cell swallowed the corpus: 1.05 B candidates
         // at 64× vs the 135 M the shipped draw yields). The probe must
         // measure the design the registry actually ships.
-        val cent = inflated
-          .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-          .limit(nCent)
+        val cent = Quantizer.draw(inflated, nCent)
           .select(col("vec_id").as("cid"), col("v").as("cv"))
-        val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-        val assign = inflated
+        val assign = Quantizer.argmin(inflated
           .crossJoin(broadcast(cent))
           .select(col("vec_id"), col("v"), col("cid"),
-            graft.functions.FastVec.l2sq(col("v"), col("cv")).as("d2"))
-          .withColumn("rn", row_number().over(byVec))
-          .filter(col("rn") === 1)
+            graft.functions.FastVec.l2sq(col("v"), col("cv")).as("d2")))
           .select(col("vec_id"), col("v"), col("cid"),
             graft.functions.FastVec.norm(col("v")).as("nv"))
           .persist()

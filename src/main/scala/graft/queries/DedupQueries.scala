@@ -161,8 +161,7 @@ object DedupQueries {
     * the search index); storage is ~n_tokens rows of (key, 16-byte hash).
     */
   private[graft] def shTable(s: SparkSession, dir: String, n: Int): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_sh${n}_$tag", "doc_id", PairBuckets) {
+    graft.sources.MatView.of(s, dir, s"sh$n", "doc_id", PairBuckets) {
       MinHashLSH.shingleTable(t(s, dir, "documents"), "doc_id", "text", n)
     }
   }
@@ -178,8 +177,7 @@ object DedupQueries {
     * table a 100 TB exact-substring pass keeps anyway.
     */
   private[graft] def winFpTable(s: SparkSession, dir: String, w: Int): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_winfp${w}_$tag", "doc_id", PairBuckets) {
+    graft.sources.MatView.of(s, dir, s"winfp$w", "doc_id", PairBuckets) {
       t(s, dir, "documents")
         .select(col("doc_id"), Text.tokens(col("text")).as("t"))
         .filter(size(col("t")) >= w)
@@ -206,8 +204,7 @@ object DedupQueries {
     * tables already materialized.
     */
   private[graft] def dualSimsTable(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_dualsims_$tag", "doc_id", PairBuckets) {
+    graft.sources.MatView.of(s, dir, "dualsims", "doc_id", PairBuckets) {
       t(s, dir, "documents")
         .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
         .select(col("doc_id"),
@@ -239,8 +236,7 @@ object DedupQueries {
   }
 
   private[graft] def d3Pairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_d3_pairs_$tag", "a", PairBuckets) {
+    graft.sources.MatView.of(s, dir, "d3_pairs", "a", PairBuckets) {
       MinHashLSH.nearDupPairs(t(s, dir, "documents"), "doc_id", "text",
         shingleN = 3, numHashes = 8, bands = 4, threshold = 0.3)
     }
@@ -258,8 +254,7 @@ object DedupQueries {
     * — no value can change. Build cost lands in view_build_sec.
     */
   private[graft] def d2Pairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_d2pairs_$tag", "a", PairBuckets) {
+    graft.sources.MatView.of(s, dir, "d2pairs", "a", PairBuckets) {
       val sh = sh5Persisted(s, dir)
       MinHashLSH
         .verifyJaccard(MinHashLSH.prefixFilteredPairs(sh, "doc_id"), sh, "doc_id")
@@ -289,8 +284,7 @@ object DedupQueries {
     * asset as the Jaccard match graph.
     */
   private[graft] def d9Pairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_d9pairs_$tag", "a", PairBuckets) {
+    graft.sources.MatView.of(s, dir, "d9pairs", "a", PairBuckets) {
       val sh = sh5Persisted(s, dir)
       MinHashLSH
         .verifyContainment(MinHashLSH.containmentPairs(sh, "doc_id", 4, 5), sh, "doc_id")
@@ -305,8 +299,7 @@ object DedupQueries {
     * (min reachable id), so materialization cannot change any value.
     */
   private[graft] def d5Labels(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_d5_labels_$tag", "doc_id", PairBuckets) {
+    graft.sources.MatView.of(s, dir, "d5_labels", "doc_id", PairBuckets) {
       graft.operators.ConnectedComponents
         .minLabels(d3Pairs(s, dir).select(col("a"), col("b")))
         .select(col("id").as("doc_id"), col("lbl").as("cluster"))
@@ -1174,20 +1167,16 @@ object DedupQueries {
     "d18_dedup_agreement",
     (s, dir) => {
       graft.functions.FastVec.register(s)
-      val W = org.apache.spark.sql.expressions.Window
       val pairs = d3Pairs(s, dir).select(col("a"), col("b"))
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"),
           graft.functions.Vectors.toDoubleVec(col("embedding")).as("v"))
       val cent = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val byVec = W.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      val assign = emb
+      val assign = graft.operators.Quantizer.argmin(emb
         .crossJoin(broadcast(cent))
         .select(col("vec_id"), col("cid"),
-          graft.functions.FastVec.l2sq(col("v"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
+          graft.functions.FastVec.l2sq(col("v"), col("cv")).as("d2")))
         .select(col("vec_id"), col("cid"))
       pairs
         .join(assign.select(col("vec_id").as("a"), col("cid").as("ca")), Seq("a"))

@@ -69,13 +69,12 @@ object GraphQueries {
     * carry the corpus dir so scale factors never collide.
     */
   private[graft] def coAdjDeg(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val adj = graft.sources.MatView.of(s, s"graft_co_adj_$tag", "a", CoBuckets) {
+    val adj = graft.sources.MatView.of(s, dir, "co_adj", "a", CoBuckets) {
       val e = partCoEdges(s, dir)
       e.select(col("u").as("a"), col("v").as("b"))
         .unionAll(e.select(col("v").as("a"), col("u").as("b")))
     }
-    val deg = graft.sources.MatView.of(s, s"graft_co_deg_$tag", "id", CoBuckets) {
+    val deg = graft.sources.MatView.of(s, dir, "co_deg", "id", CoBuckets) {
       adj.groupBy(col("a").as("id")).agg(count(lit(1)).as("d"))
     }
     (adj, deg)
@@ -101,8 +100,7 @@ object GraphQueries {
     * bigger relation at real scale since customers outnumber suppliers).
     */
   private[graft] def coPair(s: SparkSession, dir: String): DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_co_pair_$tag", "ck", CoBuckets) {
+    graft.sources.MatView.of(s, dir, "co_pair", "ck", CoBuckets) {
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_custkey"))
         .join(
@@ -123,8 +121,7 @@ object GraphQueries {
     * handed raw edges.
     */
   private[graft] def coPrGraph(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val e = graft.sources.MatView.of(s, s"graft_co_predge_$tag", "a", CoBuckets) {
+    val e = graft.sources.MatView.of(s, dir, "co_predge", "a", CoBuckets) {
       val pair = coPair(s, dir)
         .select((col("ck") * 2).as("ck"), (col("sk") * 2 + 1).as("sk"))
       val edges = pair.select(col("ck").as("a"), col("sk").as("b"))
@@ -132,7 +129,7 @@ object GraphQueries {
       val outdeg = edges.groupBy("a").agg(count(lit(1)).as("d"))
       edges.join(outdeg, Seq("a"))
     }
-    val n = graft.sources.MatView.of(s, s"graft_co_prnode_$tag", "id", CoBuckets) {
+    val n = graft.sources.MatView.of(s, dir, "co_prnode", "id", CoBuckets) {
       e.select(col("a").as("id")).distinct()
     }
     (e, n)

@@ -25,8 +25,7 @@ object PipelineExtras {
     * scale consumer.
     */
   private[graft] def frameSims60Table(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_framesims60_$tag", "doc_id", 16) {
+    graft.sources.MatView.of(s, dir, "framesims60", "doc_id", 16) {
       graft.operators.Multimodal.frameSimhash(t(s, dir, "documents"), 60)
     }
   }

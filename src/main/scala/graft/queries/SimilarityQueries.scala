@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.{FastVec, Vectors}
+import graft.operators.Quantizer
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,8 +74,7 @@ object SimilarityQueries {
     * computation a query IS. 10 rows, 1 bucket.
     */
   private[graft] def exactTruth(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_e1_truth_$tag", "vec_id", 1) {
+    graft.sources.MatView.of(s, dir, "e1_truth", "vec_id", 1) {
       e1CosineTopK.fn(s, dir)
     }
   }
@@ -90,8 +90,7 @@ object SimilarityQueries {
     * bounded by the audit corpus, not the production corpus.
     */
   private[graft] def pairTruth(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_pair_truth_$tag", "a", 1) {
+    graft.sources.MatView.of(s, dir, "pair_truth", "a", 1) {
       FastVec.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
@@ -111,8 +110,7 @@ object SimilarityQueries {
     * One 4-row broadcast against the corpus scan at build time.
     */
   private[graft] def rangeTruth(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_range_truth_$tag", "qid", 1) {
+    graft.sources.MatView.of(s, dir, "range_truth", "qid", 1) {
       FastVec.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
@@ -146,13 +144,11 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val cent = emb.filter(col("vec_id") < 8).select(col("vec_id").as("cid"), col("v").as("cv"))
-      val dists = emb
+      val ranked = Quantizer.ranked(emb
         .crossJoin(broadcast(cent))
         .select(
           col("vec_id"), col("label"), col("v"), col("cid"),
-          FastVec.l2sq(col("v"), col("cv")).as("d2"))
-      val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      val ranked = dists.withColumn("rn", row_number().over(byVec))
+          FastVec.l2sq(col("v"), col("cv")).as("d2")))
       val assign = ranked.filter(col("rn") === 1).select("vec_id", "label", "v", "cid")
       val qBuckets = ranked
         .filter(col("vec_id") === 0 && col("rn") <= 2)
@@ -188,11 +184,11 @@ object SimilarityQueries {
     * cross product; at scale each bucket joins co-partitioned).
     *
     * The codebook is √n-sized (C = max(8, ceil(√n)) deterministic
-    * md5-sampled seeds — e4's draw), NOT a fixed constant: with C fixed,
-    * expected within-bucket pair work is Σ(n/C)²·C = n²/C — quadratic in
-    * corpus size; with C = √n it is n^1.5, the classic balance point where
-    * the n·C assignment cost and the within-bucket pair cost grow at the
-    * SAME rate (ScaleProbe.annProbe measures this shape linear-per-row).
+    * md5-sampled seeds — [[Quantizer.draw]]), NOT a fixed constant:
+    * with C fixed, expected within-bucket pair work is Σ(n/C)²·C = n²/C
+    * — quadratic in corpus size; with C = √n it is n^1.5, the classic
+    * balance point where the n·C assignment cost and the within-bucket
+    * pair cost grow at the SAME rate (ScaleProbe.annProbe measures this shape linear-per-row).
     * The corpus count that sizes the codebook is one scalar aggregate
     * (count → literal), and the seed pick is a distributed
     * TakeOrderedAndProject — no global window, nothing single-partition.
@@ -204,16 +200,11 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val nC = math.max(8, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      val cent = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(nC)
+      val cent = Quantizer.draw(emb, nC)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      val assign = emb
+      val assign = Quantizer.argmin(emb
         .crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("v"), col("cid"), FastVec.l2sq(col("v"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
+        .select(col("vec_id"), col("v"), col("cid"), FastVec.l2sq(col("v"), col("cv")).as("d2")))
         .select(col("vec_id"), col("v"), col("cid"),
           FastVec.norm(col("v")).as("nv"))
       val left = assign.select(
@@ -244,19 +235,8 @@ object SimilarityQueries {
   /** E4: IVF-ANN with LEARNED centroids — 32 deterministically-sampled
     * seed vectors (smallest md5(vec_id): a fixed pseudo-random draw both
     * engines can reproduce) refined by ONE Lloyd step, then nprobe=4
-    * bucket-pruned search.
-    *
-    * The Lloyd mean is computed over INTEGER-QUANTIZED components
-    * (`round(x · 2^20)` summed as longs): long sums are exact and
-    * order-independent, so Spark's parallel partial aggregation and
-    * DuckDB's sequential scan produce bit-identical centroids — the
-    * float-sum nondeterminism trap (SURVEY §7.3.1) applied to k-means.
-    * 2^20 quantization on unit-scale embeddings keeps ~6 significant
-    * digits, far inside what centroid assignment can distinguish.
-    *
-    * At 100 TB this is the real recipe: sample seeds, one or two Lloyd
-    * sweeps (each = broadcast centroids + one argmin window + one
-    * map-side-combinable sum), freeze the codebook, bucket-prune queries.
+    * bucket-pruned search. Why the learned centroids are bit-identical
+    * on both engines is [[graft.operators.Quantizer]]'s contract.
     */
   /** The e4 learned-IVF model as DuckDB CTE bodies (exposes `e`, `d1`,
     * `assign`) — shared by the e4 oracle and e15's sweep oracle.
@@ -290,32 +270,18 @@ object SimilarityQueries {
     FastVec.register(s)
     val emb = t(s, dir, "embeddings")
       .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
-    val seeds = emb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(32)
+    val seeds = Quantizer.draw(emb, 32)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
-    def argmin(dists: org.apache.spark.sql.DataFrame) = {
-      val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      dists.withColumn("rn", row_number().over(byVec)).filter(col("rn") === 1)
-    }
-    val a0 = argmin(
+    val a0 = Quantizer.argmin(
       emb.crossJoin(broadcast(seeds))
         .select(col("vec_id"), col("v"), col("cid"),
           FastVec.l2sq(col("v"), col("cv")).as("d2")))
       .select("vec_id", "v", "cid")
-    val q20 = (1 << 20).toDouble
-    val comp = a0
-      .select(col("cid"), posexplode(col("v")).as(Seq("i", "x")))
-      .groupBy("cid", "i")
-      .agg((sum(round(col("x") * q20).cast("long")).cast("double") /
-        (lit(q20) * count(lit(1)))).as("cx"))
-    val cent = comp.groupBy("cid")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
-        e => e("cx")).as("cv"))
+    val cent = Quantizer.lloyd(a0, "v")
     val d1 = emb.crossJoin(broadcast(cent))
       .select(col("vec_id"), col("label"), col("v"), col("cid"),
         FastVec.l2sq(col("v"), col("cv")).as("d2"))
-    val assign = argmin(d1).select("vec_id", "label", "v", "cid")
+    val assign = Quantizer.argmin(d1).select("vec_id", "label", "v", "cid")
     (d1, assign)
   }
 
@@ -402,20 +368,7 @@ object SimilarityQueries {
       val mask = (1 << bandBits) - 1
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
-      // Unpartitioned window BY DESIGN: it ranks only the 16 already-picked
-      // hyperplane rows (the limit(16) below feeds it), never the corpus.
-      val drawOrder = Window.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      val planes = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(16)
-        .select((row_number().over(drawOrder) - 1).as("j"), col("v").as("h"))
-      val sketches = emb
-        .crossJoin(broadcast(planes))
-        .select(col("vec_id"),
-          when(FastVec.dot(col("v"), col("h")) >= 0,
-            expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L)).as("bit"))
-        .groupBy("vec_id")
-        .agg(sum(col("bit")).as("sketch"))
+      val sketches = Quantizer.signSketch(emb, 16)
       val bandsDf = sketches
         .select(col("vec_id"), explode(sequence(lit(0), lit(bands - 1))).as("k"),
           col("sketch"))
@@ -481,12 +434,9 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val cent = emb.filter(col("vec_id") < 8).select(col("vec_id").as("cid"), col("v").as("cv"))
-      val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      val assign = emb
+      val assign = Quantizer.argmin(emb
         .crossJoin(broadcast(cent))
-        .select(col("vec_id"), col("cid"), FastVec.l2sq(col("v"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
+        .select(col("vec_id"), col("cid"), FastVec.l2sq(col("v"), col("cv")).as("d2")))
         .select("vec_id", "cid", "d2")
       val byCid = Window.partitionBy("cid").orderBy(col("d2"), col("vec_id"))
       val keep = assign
@@ -526,12 +476,10 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val cent = emb.filter(col("vec_id") < 8).select(col("vec_id").as("cid"), col("v").as("cv"))
-      val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      val ranked = emb
+      val ranked = Quantizer.ranked(emb
         .crossJoin(broadcast(cent))
         .select(col("vec_id"), col("label"), col("v"), col("cid"),
-          FastVec.l2sq(col("v"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(byVec))
+          FastVec.l2sq(col("v"), col("cv")).as("d2")))
       val assign = ranked.filter(col("rn") === 1).select("vec_id", "label", "v", "cid")
       // the query BATCH: vectors 0-3, each probing its 2 nearest buckets
       val qProbes = ranked
@@ -577,10 +525,11 @@ object SimilarityQueries {
     * distance is an asymmetric-distance-computation table lookup: the
     * query's 4×8 code-distance table (32 rows, broadcast) is summed over
     * each vector's codes — no full-vector math ever touches the corpus at
-    * query time. Codebooks are learned like e4's k-means (deterministic
-    * md5-sampled seeds + one integer-quantized Lloyd step, per subspace);
-    * ADC entries are quantized to 2^-20 longs so the per-vector sum is
-    * order-independent and bit-equal to the oracle.
+    * query time. Codebooks are learned per subspace by
+    * [[graft.operators.Quantizer.pq]] (md5-drawn seeds + one
+    * integer-quantized Lloyd step); ADC entries are quantized to 2^-20
+    * longs so the per-vector sum is order-independent and bit-equal to
+    * the oracle.
     */
   /** e8's full ADC distance table (vec_id, label, adc_dist) for every
     * non-query vector — the SHARED stage-1 of the PQ family: e8 cuts its
@@ -616,7 +565,6 @@ object SimilarityQueries {
       K: Int): org.apache.spark.sql.DataFrame = {
       FastVec.register(s)
       val sub = 64 / M
-      val q20d = (1L << 20).toDouble
       val raw = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val emb =
@@ -634,44 +582,18 @@ object SimilarityQueries {
         .select(col("vec_id"), col("m"), expr(s"slice(v, m * $sub + 1, $sub)").as("sv"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       subv.count()
-      val seedIds = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(K)
-        .select(col("vec_id").as("cid"))
-      val seeds = subv.join(broadcast(seedIds), col("vec_id") === col("cid"))
-        .select(col("cid"), col("m"), col("sv").as("cv"))
-      val wvm = Window.partitionBy("vec_id", "m").orderBy(col("d2"), col("cid"))
-      val a0 = subv.join(broadcast(seeds), Seq("m"))
-        .select(col("vec_id"), col("m"), col("sv"), col("cid"),
-          FastVec.l2sq(col("sv"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(wvm)).filter(col("rn") === 1)
-        .select("vec_id", "m", "sv", "cid")
-      // One Lloyd step with integer-quantized component means (e4's trick:
-      // partial-sum order cannot perturb the learned centers).
-      val comp = a0
-        .select(col("m"), col("cid"), posexplode(col("sv")).as(Seq("i", "x")))
-        .groupBy("m", "cid", "i")
-        .agg((sum(round(col("x") * q20d).cast("long")).cast("double") /
-          (lit(q20d) * count(lit(1)))).as("cx"))
-      val cent = comp.groupBy("m", "cid")
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
-          e => e("cx")).as("cv"))
-      val enc = subv.join(broadcast(cent), Seq("m"))
-        .select(col("vec_id"), col("m"), col("cid"),
-          FastVec.l2sq(col("sv"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(wvm)).filter(col("rn") === 1)
-        .select("vec_id", "m", "cid")
+      val (cent, enc) = Quantizer.pq(subv, emb, K)
       val qsub = subv.filter(col("vec_id") === 0).select(col("m"), col("sv").as("qsv"))
       val adc = cent.join(broadcast(qsub), Seq("m"))
         .select(col("m"), col("cid"),
-          round(FastVec.l2sq(col("qsv"), col("cv")) * q20d).cast("long").as("qd"))
+          round(FastVec.l2sq(col("qsv"), col("cv")) * Quantizer.Q20).cast("long").as("qd"))
       val out = enc.join(broadcast(adc), Seq("m", "cid"))
         .groupBy("vec_id")
         .agg(sum(col("qd")).as("qdist"))
         .filter(col("vec_id") =!= 0)
         .join(emb.select("vec_id", "label"), Seq("vec_id"))
         .select(col("vec_id"), col("label"),
-          (col("qdist").cast("double") / lit(q20d)).as("adc_dist"))
+          (col("qdist").cast("double") / lit(Quantizer.Q20)).as("adc_dist"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       out.count() // materialize BEFORE dropping subv — out's lineage reads it
       subv.unpersist()
@@ -1278,9 +1200,9 @@ object SimilarityQueries {
     *
     * Exactness: residual subtraction is one IEEE subtract of identical
     * doubles on both engines (`zip_with` / `list_transform`); Lloyd means
-    * are integer-quantized (e4's trick) and ADC entries are 2^-20 longs,
-    * so the summed distance is order-independent and bit-equal to the
-    * oracle.
+    * are integer-quantized ([[graft.operators.Quantizer]]) and ADC
+    * entries are 2^-20 longs, so the summed distance is order-independent
+    * and bit-equal to the oracle.
     *
     * Scale: coarse assign is a broadcast cross-join + windowed argmin;
     * PQ learning touches only the K seed rows' residuals plus one
@@ -1295,16 +1217,13 @@ object SimilarityQueries {
     (s, dir) => {
       FastVec.register(s)
       val M = 4; val sub = 16; val K = 8; val nprobe = 2
-      val q20d = (1L << 20).toDouble
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val coarse = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("ccid"), col("v").as("ccv"))
-      val wv = Window.partitionBy("vec_id").orderBy(col("d2"), col("ccid"))
-      val res = emb.crossJoin(broadcast(coarse))
+      val res = Quantizer.argmin(emb.crossJoin(broadcast(coarse))
         .select(col("vec_id"), col("v"), col("ccid"), col("ccv"),
-          FastVec.l2sq(col("v"), col("ccv")).as("d2"))
-        .withColumn("rn", row_number().over(wv)).filter(col("rn") === 1)
+          FastVec.l2sq(col("v"), col("ccv")).as("d2")), "ccid")
         .select(col("vec_id"), col("ccid"),
           zip_with(col("v"), col("ccv"), (x, y) => x - y).as("r"))
       val subv = res
@@ -1314,31 +1233,7 @@ object SimilarityQueries {
           expr(s"slice(r, m * $sub + 1, $sub)").as("sv"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       subv.count() // eager: seed pick, both argmins and encode scan it
-      val seedIds = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(K)
-        .select(col("vec_id").as("cid"))
-      val seeds = subv.join(broadcast(seedIds), col("vec_id") === col("cid"))
-        .select(col("cid"), col("m"), col("sv").as("cv"))
-      val wvm = Window.partitionBy("vec_id", "m").orderBy(col("d2"), col("cid"))
-      val a0 = subv.join(broadcast(seeds), Seq("m"))
-        .select(col("vec_id"), col("m"), col("sv"), col("cid"),
-          FastVec.l2sq(col("sv"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(wvm)).filter(col("rn") === 1)
-        .select("vec_id", "m", "sv", "cid")
-      val comp = a0
-        .select(col("m"), col("cid"), posexplode(col("sv")).as(Seq("i", "x")))
-        .groupBy("m", "cid", "i")
-        .agg((sum(round(col("x") * q20d).cast("long")).cast("double") /
-          (lit(q20d) * count(lit(1)))).as("cx"))
-      val cent = comp.groupBy("m", "cid")
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("cx")))),
-          e => e("cx")).as("cv"))
-      val enc = subv.join(broadcast(cent), Seq("m"))
-        .select(col("vec_id"), col("ccid"), col("m"), col("cid"),
-          FastVec.l2sq(col("sv"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(wvm)).filter(col("rn") === 1)
-        .select("vec_id", "ccid", "m", "cid")
+      val (cent, enc) = Quantizer.pq(subv, emb, K, carry = Seq("ccid"))
       // Query-side: nprobe cells ranked over the 8-row broadcast codebook —
       // codebook-sized work, never corpus-sized.
       val qCells = emb.filter(col("vec_id") === 0).crossJoin(broadcast(coarse))
@@ -1353,14 +1248,14 @@ object SimilarityQueries {
         .select(col("ccid"), col("m"), expr(s"slice(qr, m * $sub + 1, $sub)").as("qsv"))
       val adc = cent.join(broadcast(qres), Seq("m"))
         .select(col("ccid"), col("m"), col("cid"),
-          round(FastVec.l2sq(col("qsv"), col("cv")) * q20d).cast("long").as("qd"))
+          round(FastVec.l2sq(col("qsv"), col("cv")) * Quantizer.Q20).cast("long").as("qd"))
       enc.join(broadcast(adc), Seq("ccid", "m", "cid"))
         .groupBy("vec_id", "ccid")
         .agg(sum(col("qd")).as("qdist"))
         .filter(col("vec_id") =!= 0)
         .join(emb.select("vec_id", "label"), Seq("vec_id"))
         .select(col("vec_id"), col("label"), col("ccid").as("cell"),
-          (col("qdist").cast("double") / lit(q20d)).as("adc_dist"))
+          (col("qdist").cast("double") / lit(Quantizer.Q20)).as("adc_dist"))
         .orderBy(col("adc_dist"), col("vec_id"))
         .limit(10)
     },
@@ -1870,19 +1765,7 @@ object SimilarityQueries {
       FastVec.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
-      // Bounded-by-construction: ranks only the 16 picked hyperplane rows.
-      val drawOrder = Window.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      val planes = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(16)
-        .select((row_number().over(drawOrder) - 1).as("j"), col("v").as("h"))
-      val sketches = emb
-        .crossJoin(broadcast(planes))
-        .select(col("vec_id"),
-          when(FastVec.dot(col("v"), col("h")) >= 0,
-            expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L)).as("bit"))
-        .groupBy("vec_id")
-        .agg(sum(col("bit")).as("sketch"))
+      val sketches = Quantizer.signSketch(emb, 16)
       val bands = sketches
         .select(col("vec_id"), explode(sequence(lit(0), lit(3))).as("k"),
           col("sketch"))
@@ -2023,8 +1906,7 @@ object SimilarityQueries {
     * the per-vector projection groupBy plans with no Exchange.
     */
   private[graft] def pcaMatrix(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
-    val tag = dir.replaceAll("[^A-Za-z0-9]", "_")
-    graft.sources.MatView.of(s, s"graft_pca_x_$tag", "vec_id", 16) {
+    graft.sources.MatView.of(s, dir, "pca_x", "vec_id", 16) {
       t(s, dir, "embeddings")
         .select(col("vec_id"), posexplode(col("embedding")).as(Seq("i", "xf")))
         .select(col("vec_id"), col("i").cast("long").as("i"),
@@ -2361,9 +2243,7 @@ object SimilarityQueries {
       emb: org.apache.spark.sql.DataFrame, nC: Int, cap: Long,
       assignTop: Int = 1)
       : org.apache.spark.sql.DataFrame = {
-    val cent = emb
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      .limit(nC)
+    val cent = Quantizer.draw(emb, nC)
       .select(col("vec_id").as("cid"), col("v").as("cv"))
     // SLIM assignment (r13, guide §2.3/§8 "shuffle keys and metadata, not
     // payloads"): the argmins, the persisted assignment, the census and
@@ -2407,21 +2287,14 @@ object SimilarityQueries {
     val big = a1.groupBy("cid").agg(count(lit(1)).as("sz"))
       .filter(col("sz") > cap).select("cid")
     val members = a1.join(broadcast(big), Seq("cid"), "left_semi")
-    val bySub = Window.partitionBy("cid")
-      .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-    val subc = members
-      .withColumn("srn", row_number().over(bySub))
-      .filter(col("srn") <= 4)
+    val subc = Quantizer.drawPer(members, "cid", 4, "srn")
       .select(col("cid"), col("vec_id").as("scid"))
       .join(emb.select(col("vec_id").as("scid"), col("v").as("scv")), Seq("scid"))
-    val byVec2 = Window.partitionBy("vec_id", "cid").orderBy(col("d2"), col("scid"))
-    val a2 = members
+    val a2 = Quantizer.argmin(members
       .join(emb, Seq("vec_id")) // member vector for the sub-argmin, map-side
       .join(subc, Seq("cid"))
       .select(col("vec_id"), col("cid"), col("scid"), col("arank"),
-        FastVec.l2sq(col("v"), col("scv")).as("d2"))
-      .withColumn("rn", row_number().over(byVec2))
-      .filter(col("rn") === 1)
+        FastVec.l2sq(col("v"), col("scv")).as("d2")), "scid", Seq("vec_id", "cid"))
       .select(col("vec_id"), col("cid"), col("scid"), col("arank"))
     a1.join(broadcast(big), Seq("cid"), "left_anti")
       .select(col("vec_id"), col("cid"), lit(-1L).as("scid"), col("arank"))
@@ -2599,17 +2472,12 @@ object SimilarityQueries {
       val n = emb.count()
       val nC = math.max(8, math.ceil(math.sqrt(nOld.toDouble)).toInt)
       val cap = 2L * math.ceil(n.toDouble / nC).toLong
-      val cent = old
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(nC)
+      val cent = Quantizer.draw(old, nC)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      val assign = emb
+      val assign = Quantizer.argmin(emb
         .crossJoin(broadcast(cent))
         .select(col("vec_id"), col("cid"),
-          FastVec.l2sq(col("v"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(byVec))
-        .filter(col("rn") === 1)
+          FastVec.l2sq(col("v"), col("cv")).as("d2")))
         .select(col("vec_id"), col("cid"))
       val census = assign
         .groupBy("cid")
@@ -2680,20 +2548,7 @@ object SimilarityQueries {
       FastVec.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
-      // Unpartitioned window BY DESIGN: ranks only the 16 already-picked
-      // plane rows (e5's draw), never the corpus.
-      val drawOrder = Window.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      val planes = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(16)
-        .select((row_number().over(drawOrder) - 1).as("j"), col("v").as("h"))
-      val sketches = emb
-        .crossJoin(broadcast(planes))
-        .select(col("vec_id"),
-          when(FastVec.dot(col("v"), col("h")) >= 0,
-            expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L)).as("bit"))
-        .groupBy("vec_id")
-        .agg(sum(col("bit")).as("sketch"))
+      val sketches = Quantizer.signSketch(emb, 16)
       val w = Window.partitionBy()
       val pd = (col("n_p") + lit(1.0)) / (col("tot_p") + lit(16.0))
       val qd = (col("n_q") + lit(1.0)) / (col("tot_q") + lit(16.0))
@@ -2773,16 +2628,12 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val nC = math.max(8, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      val cent = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(nC)
+      val cent = Quantizer.draw(emb, nC)
         .select(col("vec_id").as("cid"), col("v").as("cv"))
-      val byVec = Window.partitionBy("vec_id").orderBy(col("d2"), col("cid"))
-      val ranked = emb
+      val ranked = Quantizer.ranked(emb
         .crossJoin(broadcast(cent))
         .select(col("vec_id"), col("v"), col("cid"),
-          FastVec.l2sq(col("v"), col("cv")).as("d2"))
-        .withColumn("rn", row_number().over(byVec))
+          FastVec.l2sq(col("v"), col("cv")).as("d2")))
       val assign = ranked.filter(col("rn") === 1)
         .select(col("vec_id"), col("v"), col("cid"), FastVec.norm(col("v")).as("nv"))
       val qcells = ranked
@@ -2864,20 +2715,7 @@ object SimilarityQueries {
       FastVec.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
-      val drawOrder = Window.orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-      // Unpartitioned window BY DESIGN: it ranks only the already-picked
-      // hyperplane rows (the limit(nPlanes) feeds it), never the corpus.
-      val planes = emb
-        .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
-        .limit(nPlanes)
-        .select((row_number().over(drawOrder) - 1).as("j"), col("v").as("h"))
-      val sketches = emb
-        .crossJoin(broadcast(planes))
-        .select(col("vec_id"),
-          when(FastVec.dot(col("v"), col("h")) >= 0,
-            expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L)).as("bit"))
-        .groupBy("vec_id")
-        .agg(sum(col("bit")).as("sketch"))
+      val sketches = Quantizer.signSketch(emb, nPlanes)
       // Probe keys: every XOR mask of popcount ≤ radius applied to the
       // query's bucket — the Hamming-R ball, enumerated as literals
       // (the ball is a config-bounded probe set, never a corpus-sized

@@ -84,13 +84,22 @@ object MatView {
   private def sessionTag(s: SparkSession): String =
     s"s${sessionIds.computeIfAbsent(s, _ => nextSessionId.getAndIncrement())}"
 
-  /** The bucketed table `table`, built from `build` exactly once per
-    * catalog — later calls (and later SESSIONS sharing the catalog) read
-    * the existing table. `key`/`buckets` fix the bucket layout; consumers
-    * joining or grouping on `key` plan with no Exchange.
+  /** The catalog name of view `name` over the corpus at `dir`:
+    * `graft_<name>_<dir with every non-alphanumeric replaced by _>`.
+    * Bench artifacts key `view_build_sec` and `view_backed` on it.
     */
-  def of(s: SparkSession, table: String, key: String, buckets: Int)(
+  def table(dir: String, name: String): String =
+    s"graft_${name}_${dir.replaceAll("[^A-Za-z0-9]", "_")}"
+
+  /** The bucketed view `name` over the corpus at `dir` ([[table]]), built
+    * from `build` exactly once per catalog — later calls (and later
+    * SESSIONS sharing the catalog) read the existing table.
+    * `key`/`buckets` fix the bucket layout; consumers joining or grouping
+    * on `key` plan with no Exchange.
+    */
+  def of(s: SparkSession, dir: String, name: String, key: String, buckets: Int)(
       build: => DataFrame): DataFrame = {
+    val table = this.table(dir, name)
     touched.put(table, ())
     if (!s.catalog.tableExists(table)) buildLock.synchronized {
       if (!s.catalog.tableExists(table)) {
@@ -129,17 +138,19 @@ object MatView {
     * construction (the d7 admission contract: only rows derived from
     * newly-admitted keys are appended) — the view stays exactly equal to
     * a from-scratch build over the grown corpus, a parity
-    * MatViewRefreshSpec asserts. Call through [[of]] first so the base
-    * table exists; the refresh is logged to [[refreshCosts]] (count,
-    * rows, seconds) — the artifact-visible staleness contract. When any
+    * MatViewRefreshSpec asserts. Call [[of]] with the same `dir` and
+    * `name` first so the base table exists; the refresh is logged to
+    * [[refreshCosts]] (count, rows, seconds) — the artifact-visible
+    * staleness contract. When any
     * bucket's file count breaches `maxFilesPerBucket` the refresh
     * triggers [[compact]] (set it ≤ 0 to opt out), so per-bucket file
     * counts — and with them the per-file sorted-run count inside every
     * bucket-local SortMergeJoin — stay bounded across unbounded refreshes.
     */
-  def append(s: SparkSession, table: String, key: String, buckets: Int,
+  def append(s: SparkSession, dir: String, name: String, key: String, buckets: Int,
       maxFilesPerBucket: Int = 8)(
       delta: DataFrame): Unit = {
+    val table = this.table(dir, name)
     buildLock.synchronized {
       require(s.catalog.tableExists(table),
         s"append-refresh target $table does not exist — build it with of() first")

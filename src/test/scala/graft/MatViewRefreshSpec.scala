@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions._
 class MatViewRefreshSpec extends SparkSpec {
   import graft.sources.MatView
 
+  private val dir = "/spec/refresh"
+
   private def shingles(df: org.apache.spark.sql.DataFrame) =
     graft.operators.MinHashLSH.shingleTable(df, "doc_id", "text", 3)
 
@@ -32,9 +34,10 @@ class MatViewRefreshSpec extends SparkSpec {
     val delta = (40L until 55L).map(i => (i, s"gamma b$i c$i d$i e$i f$i"))
       .toDF("doc_id", "text")
 
-    val tbl = s"graft_test_refresh_${System.nanoTime()}"
-    MatView.of(spark, tbl, "doc_id", 4)(shingles(base))
-    MatView.append(spark, tbl, "doc_id", 4)(shingles(delta))
+    val name = s"test_refresh_${System.nanoTime()}"
+    val tbl = MatView.table(dir, name)
+    MatView.of(spark, dir, name, "doc_id", 4)(shingles(base))
+    MatView.append(spark, dir, name, "doc_id", 4)(shingles(delta))
 
     // 1. parity: refreshed view == from-scratch view over base ∪ delta
     val refreshed = spark.table(tbl)
@@ -59,7 +62,7 @@ class MatViewRefreshSpec extends SparkSpec {
 
     // second refresh accumulates
     val delta2 = Seq((55L, "omega x y z w v")).toDF("doc_id", "text")
-    MatView.append(spark, tbl, "doc_id", 4)(shingles(delta2))
+    MatView.append(spark, dir, name, "doc_id", 4)(shingles(delta2))
     val (cnt2, rows2, _) = MatView.refreshCosts(tbl)
     assert(cnt2 == 2L && rows2 > rows)
     assert(spark.table(tbl).filter(col("doc_id") === 55L).count() > 0,
@@ -72,8 +75,9 @@ class MatViewRefreshSpec extends SparkSpec {
     import spark.implicits._
     val base = (0L until 40L).map(i => (i, s"alpha b$i c$i d$i e$i f$i"))
       .toDF("doc_id", "text")
-    val tbl = s"graft_test_compact_${System.nanoTime()}"
-    MatView.of(spark, tbl, "doc_id", 4)(shingles(base))
+    val name = s"test_compact_${System.nanoTime()}"
+    val tbl = MatView.table(dir, name)
+    MatView.of(spark, dir, name, "doc_id", 4)(shingles(base))
     assert(MatView.maxBucketFiles(spark, tbl) >= 1)
 
     // ~10 refreshes with a tight policy: every bucket takes one file per
@@ -84,7 +88,7 @@ class MatViewRefreshSpec extends SparkSpec {
         .toDF("doc_id", "text")
     }
     deltas.foreach(d =>
-      MatView.append(spark, tbl, "doc_id", 4, maxFilesPerBucket = 3)(
+      MatView.append(spark, dir, name, "doc_id", 4, maxFilesPerBucket = 3)(
         shingles(d)))
     val maxFiles = MatView.maxBucketFiles(spark, tbl)
     assert(maxFiles <= 4, // policy 3 → compaction fires before a 5th lands
@@ -114,12 +118,13 @@ class MatViewRefreshSpec extends SparkSpec {
     import spark.implicits._
     val base = (0L until 40L).map(i => (i, s"alpha b$i c$i d$i e$i f$i"))
       .toDF("doc_id", "text")
-    val tbl = s"graft_test_compact1_${System.nanoTime()}"
-    MatView.of(spark, tbl, "doc_id", 4)(shingles(base))
+    val name = s"test_compact1_${System.nanoTime()}"
+    val tbl = MatView.table(dir, name)
+    MatView.of(spark, dir, name, "doc_id", 4)(shingles(base))
     // opt out of auto-compaction to accumulate files deliberately
     (0 until 3).foreach { k =>
       val d = Seq((200L + k, s"solo$k x y z")).toDF("doc_id", "text")
-      MatView.append(spark, tbl, "doc_id", 4, maxFilesPerBucket = 0)(
+      MatView.append(spark, dir, name, "doc_id", 4, maxFilesPerBucket = 0)(
         shingles(d))
     }
     assert(MatView.maxBucketFiles(spark, tbl) > 1)
@@ -139,7 +144,7 @@ class MatViewRefreshSpec extends SparkSpec {
     import spark.implicits._
     val delta = Seq((1L, "a b c")).toDF("doc_id", "text")
     val e = intercept[IllegalArgumentException] {
-      MatView.append(spark, "graft_test_refresh_missing", "doc_id", 4)(
+      MatView.append(spark, dir, "test_refresh_missing", "doc_id", 4)(
         shingles(delta))
     }
     assert(e.getMessage.contains("does not exist"))

@@ -12,9 +12,11 @@ import org.apache.spark.sql.functions._
 class MatViewSpec extends SparkSpec {
   import spark.implicits._
 
+  private val dir = "/spec/corpus"
+
   test("write-once: one build per table; the table survives Memo.reset") {
     var builds = 0
-    def view() = MatView.of(spark, "graft_mv_spec_once", "k", 4) {
+    def view() = MatView.of(spark, dir, "mv_spec_once", "k", 4) {
       builds += 1
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v")
     }
@@ -26,12 +28,23 @@ class MatViewSpec extends SparkSpec {
     // exactly how the bench's clean-slate protocol reads warm views
     assert(view().count() == 3)
     assert(builds == 1, s"catalog hit must not rebuild (built $builds times)")
-    assert(MatView.buildCosts.contains("graft_mv_spec_once"))
+    assert(MatView.buildCosts.contains("graft_mv_spec_once__spec_corpus"))
+  }
+
+  test("the view table name is graft_<name>_<dir tag>, the key Bench " +
+    "artifacts record view builds under") {
+    assert(MatView.table("/data/corpus/sf0.01", "d3_pairs") ==
+      "graft_d3_pairs__data_corpus_sf0_01")
+    assert(MatView.table("/data/corpus/sf0.001", "sh5") ==
+      "graft_sh5__data_corpus_sf0_001")
+    MatView.of(spark, dir, "mv_spec_named", "k", 2)(Seq((1L, 2L)).toDF("k", "v"))
+    assert(spark.catalog.tableExists("graft_mv_spec_named__spec_corpus"))
+    assert(MatView.buildCosts.contains("graft_mv_spec_named__spec_corpus"))
   }
 
   test("bucketed layout: a view's groupBy on its bucket key plans with no " +
     "Exchange (the property every consumer's scale story leans on)") {
-    val v = MatView.of(spark, "graft_mv_spec_bkt", "k", 4) {
+    val v = MatView.of(spark, dir, "mv_spec_bkt", "k", 4) {
       spark.range(100).select((col("id") % 10).as("k"), col("id").as("v"))
     }
     val df = v.groupBy("k").agg(sum(col("v")))
@@ -44,11 +57,11 @@ class MatViewSpec extends SparkSpec {
   test("second-session safety (r7 advice): a fresh SparkSession rebuilds " +
     "under its OWN path — the first session's files are untouched and " +
     "both sessions read correct rows") {
-    val first = MatView.of(spark, "graft_mv_spec_iso", "k", 4) {
+    val first = MatView.of(spark, dir, "mv_spec_iso", "k", 4) {
       Seq((1L, 10L), (2L, 20L)).toDF("k", "v")
     }
     assert(first.count() == 2)
-    val firstPath = spark.sql("DESCRIBE TABLE EXTENDED graft_mv_spec_iso")
+    val firstPath = spark.sql(s"DESCRIBE TABLE EXTENDED ${MatView.table(dir, "mv_spec_iso")}")
       .filter(col("col_name") === "Location").select("data_type")
       .as[String].head()
     val firstFiles = new java.io.File(new java.net.URI(firstPath))
@@ -63,7 +76,7 @@ class MatViewSpec extends SparkSpec {
     // newSession SHARES the session catalog's external catalog but has its
     // own temp state; tableExists is true here, so MatView must NOT
     // rebuild — prove the non-clobber path:
-    val second = MatView.of(s2, "graft_mv_spec_iso", "k", 4) {
+    val second = MatView.of(s2, dir, "mv_spec_iso", "k", 4) {
       fail("shared-catalog session must reuse the existing table, not rebuild")
     }
     assert(second.count() == 2)

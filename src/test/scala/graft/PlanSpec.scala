@@ -1,6 +1,14 @@
 package graft
 
 import graft.queries.{AnalyticsExtras, Joins, Relational, SimilarityQueries}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression}
+import org.apache.spark.sql.execution.{CollectLimitExec, FilterExec, GlobalLimitExec,
+  InputAdapter, LocalLimitExec, ProjectExec, SortExec, SparkPlan, TakeOrderedAndProjectExec,
+  WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec,
+  QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
 
 /** Physical-plan audits — the properties that decide whether a query
   * survives a 100 TB scale-up, asserted against the ACTUAL executed plan
@@ -713,23 +721,15 @@ class PlanSpec extends SparkSpec {
     // — i.e. no ShuffleExchange whose subtree contains the edge scan but
     // no join node yet (the census groupBy above the join shuffles |E|
     // rows by design; the labels side is free to shuffle or broadcast).
-    import org.apache.spark.sql.execution.SparkPlan
-    def unwrap(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-        Seq(a.executedPlan)
-      case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        Seq(s.plan)
-      case other => other.children
-    }
     def containsEdgeScan(p: SparkPlan): Boolean =
       p.toString.contains("graft_co_adj")
     def containsJoin(p: SparkPlan): Boolean =
       p.isInstanceOf[org.apache.spark.sql.execution.joins.BaseJoinExec] ||
-        unwrap(p).exists(containsJoin)
+        kids(p).exists(containsJoin)
     def offending(p: SparkPlan): Boolean = p match {
-      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+      case e: ShuffleExchangeExec
           if containsEdgeScan(e.child) && !containsJoin(e.child) => true
-      case other => unwrap(other).exists(offending)
+      case other => kids(other).exists(offending)
     }
     assert(!offending(round.queryExecution.executedPlan),
       "edge side of the round join re-shuffled despite the a-bucketing:\n" +
@@ -1892,5 +1892,100 @@ class PlanSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"))
     assert(!plan.contains("SortMergeJoin"),
       "nothing in the pruned pipeline should shuffle-sort:\n" + plan.take(3000))
+  }
+
+  /** The executed (post-AQE) operator tree of registry query `name`. */
+  private def executedTree(name: String): SparkPlan = {
+    val df = SparkEntry.queries(name)(spark, sf)
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  /** Children through the adaptive wrappers: an adaptive plan's final
+    * plan, a query stage's exchange, a reused exchange's original.
+    */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case o => o.children
+  }
+
+  private def allNodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(allNodes)
+
+  /** Single-child operators that never add rows: what may sit between a
+    * bounded window and the node that bounds its input.
+    */
+  private def passThrough(p: SparkPlan): Boolean = p match {
+    case _: SortExec | _: ProjectExec | _: FilterExec | _: ShuffleExchangeExec |
+        _: QueryStageExec | _: AQEShuffleReadExec | _: InputAdapter |
+        _: WholeStageCodegenExec | _: WindowGroupLimitExec => true
+    case _ => false
+  }
+
+  private def unpartitionedWindows(p: SparkPlan): Seq[WindowExec] =
+    allNodes(p).collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
+
+  test("draw-index windows (e5, g9, v20, e28): the unpartitioned md5-order " +
+    "row_number sits directly above the draw's limit — no corpus-sized " +
+    "operator between") {
+    Seq("e5_ann_hyperplane" -> 16, "g9_knn_graph" -> 16,
+        "v20_embedding_drift" -> 16, "e28_multiprobe_lsh" -> 8).foreach {
+      case (name, k) =>
+        val tree = executedTree(name)
+        // The planner moves the md5 key into a projected `_w0` column:
+        // resolve each window's leading order key through its alias.
+        val aliased = allNodes(tree).flatMap(_.expressions.flatMap(_.collect {
+          case a: Alias => a.exprId -> a.child
+        })).toMap
+        def defn(e: Expression) = e match {
+          case a: AttributeReference => aliased.getOrElse(a.exprId, a)
+          case other => other
+        }
+        val draws = unpartitionedWindows(tree)
+          .filter(_.orderSpec.headOption.exists(o => defn(o.child).toString.contains("md5(")))
+        assert(draws.nonEmpty, s"$name: no draw-index window\n$tree")
+        draws.foreach { w =>
+          var n = w.child
+          while (passThrough(n) && kids(n).size == 1) n = kids(n).head
+          val limit = n match {
+            case t: TakeOrderedAndProjectExec => t.limit
+            case g: GlobalLimitExec => g.limit
+            case c: CollectLimitExec => c.limit
+            case other => fail(s"$name: the draw window reads ${other.nodeName}, " +
+              s"not the draw's limit:\n$tree")
+          }
+          assert(limit == k, s"$name: draw window above a limit of $limit, expected $k")
+        }
+    }
+  }
+
+  test("probe-cell windows (e4, e13, e15): each unpartitioned (d2, id) " +
+    "window receives at most the codebook's C rows") {
+    Seq(("e4_ann_kmeans", 32, 1), ("e13_ivf_pq", 8, 1),
+        ("e15_nprobe_sweep", 32, 4)).foreach { case (name, c, nWindows) =>
+      val tree = executedTree(name)
+      val probes = unpartitionedWindows(tree)
+        .filter(_.orderSpec.headOption.exists(_.child.references.exists(_.name == "d2")))
+      assert(probes.size == nWindows,
+        s"$name: expected $nWindows probe-cell windows, found ${probes.size}\n$tree")
+      probes.foreach { w =>
+        // The rn <= nprobe filter may plan as a limit under the window; the
+        // rows below it are what the codebook bounds.
+        def limit(p: SparkPlan) = p match {
+          case _: TakeOrderedAndProjectExec | _: GlobalLimitExec | _: LocalLimitExec => true
+          case _ => false
+        }
+        var n = w.child
+        while (!n.metrics.contains("numOutputRows") && (passThrough(n) || limit(n)) &&
+            kids(n).size == 1)
+          n = kids(n).head
+        val rows = n.metrics.get("numOutputRows").map(_.value)
+          .getOrElse(fail(s"$name: no row count below the window (stopped at ${n.nodeName})"))
+        assert(rows > 0 && rows <= c,
+          s"$name: the probe-cell window received $rows rows from ${n.nodeName}, " +
+            s"more than the codebook's $c\n$tree")
+      }
+    }
   }
 }

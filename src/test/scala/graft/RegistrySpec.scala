@@ -13,6 +13,24 @@ class RegistrySpec extends SparkSpec {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("Plans.canonical renumbers ids in order of first appearance and " +
+    "masks run-specific tokens, so equal plans print equal text") {
+    def plan(x: Int, e: Int, p: Int, stage: Int, hash: String, root: String) =
+      s"""*($stage) Project [transform(v#${e + 7}, lambdafunction(lambda x_$x#$e, lambda x_$x#$e, false)) AS w#${e + 3}L]
+         |+- Exchange hashpartitioning(w#${e + 3}L, 4), ENSURE_REQUIREMENTS, [plan_id=$p]
+         |   +- ShuffleQueryStage ${stage + 1}
+         |      +- Scan UnsafeArrayData@$hash TrainPipeline$$$$Lambda$$5661/0x0000000801fbcd8b@$hash
+         |         +- FileScan parquet Location: [file:/tmp/graft-mv-$root/s0/graft_co_adj_x]""".stripMargin
+    val a = Plans.canonical(plan(1, 1128, 45, 3, "7a50b5f7", "ccbde225"))
+    assert(a == Plans.canonical(plan(12, 40, 977, 11, "1c2d", "0f31aa07")))
+    assert(a.contains("lambda x_0#1,") && a.contains("AS w#2L]") && a.contains("[plan_id=0]"))
+    assert(a.startsWith("*(_) Project") && a.contains("ShuffleQueryStage _"))
+    assert(a.contains("UnsafeArrayData@* TrainPipeline$$Lambda"), a)
+    assert(a.contains("/tmp/graft-mv-*/s0/graft_co_adj_x"), a)
+    assert(a != Plans.canonical(plan(1, 1128, 45, 3, "7a50b5f7", "ccbde225")
+      .replace("w#1131L, 4", "v#1135L, 4")), "distinct ids must stay distinct")
+  }
+
   test("entry (flagship) returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
