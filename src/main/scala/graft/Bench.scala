@@ -196,10 +196,14 @@ object Bench {
     // happened to touch first (the driver's r8 headline had d15 at 5.1 s
     // for exactly that reason).
     val t0 = System.nanoTime()
-    graft.queries.DedupQueries.prebuildViews(spark, sfDir)
-    graft.queries.GraphQueries.prebuildViews(spark, sfDir)
-    graft.queries.SimilarityQueries.prebuildViews(spark, sfDir)
-    graft.queries.PipelineExtras.prebuildViews(spark, sfDir)
+    import graft.queries.{DedupQueries => D, GraphQueries => G, SimilarityQueries => S}
+    Seq[(org.apache.spark.sql.SparkSession, String) => Any](
+      D.shTable(_, _, 3), D.shTable(_, _, 5), D.d3Pairs, D.d5Labels, D.winFpTable(_, _, 15),
+      D.dualSimsTable, D.d2Pairs, D.d9Pairs,
+      G.coAdjDeg, G.coPair, G.coPrGraph,
+      S.exactTruth, S.pcaMatrix, S.pairTruth, S.rangeTruth,
+      graft.queries.PipelineExtras.frameSims60Table
+    ).foreach(_(spark, sfDir))
     System.err.println(
       f"[bench] view pre-build ${(System.nanoTime() - t0) / 1e9}%.1f s " +
         "(per-table costs in view_build_sec)")

@@ -223,18 +223,6 @@ object DedupQueries {
     }
   }
 
-  /** Materialize every view this family serves queries from (Bench calls
-    * it once per session BEFORE the timed loop, so a view's one-time
-    * build cost lands in view_build_sec instead of inflating whichever
-    * consumer the driver happens to time first — r8 verdict #7).
-    */
-  def prebuildViews(s: SparkSession, dir: String): Unit = {
-    shTable(s, dir, 3); shTable(s, dir, 5)
-    d3Pairs(s, dir); d5Labels(s, dir); winFpTable(s, dir, 15)
-    dualSimsTable(s, dir)
-    d2Pairs(s, dir); d9Pairs(s, dir)
-  }
-
   private[graft] def d3Pairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     graft.sources.MatView.of(s, dir, "d3_pairs", "a", PairBuckets) {
       MinHashLSH.nearDupPairs(t(s, dir, "documents"), "doc_id", "text",

@@ -57,13 +57,6 @@ object GraphQueries {
     */
   private val CoBuckets = 16
 
-  /** Materialize this family's views once per session (Bench pre-build —
-    * r8 verdict #7; build cost lands in view_build_sec).
-    */
-  def prebuildViews(s: SparkSession, dir: String): Unit = {
-    coAdjDeg(s, dir); coPair(s, dir); coPrGraph(s, dir)
-  }
-
   /** Memoized (adjacency, degrees) of the shared co-purchase graph, both
     * bucketed on their join key via [[graft.sources.MatView]]. Table names
     * carry the corpus dir so scale factors never collide.

@@ -30,13 +30,6 @@ object PipelineExtras {
     }
   }
 
-  /** Materialize this family's served views before the timed bench loop
-    * (the r8 verdict #7 discipline — build cost lands in view_build_sec).
-    */
-  def prebuildViews(s: SparkSession, dir: String): Unit = {
-    frameSims60Table(s, dir); ()
-  }
-
   /** F14: array function surface — distinct/sort/slice/join/contains over
     * the token array (all narrow per-row transforms; nothing shuffles).
     */

@@ -125,14 +125,6 @@ object SimilarityQueries {
     }
   }
 
-  /** Materialize this family's views once per session (Bench pre-build —
-    * r8 verdict #7; build cost lands in view_build_sec).
-    */
-  def prebuildViews(s: SparkSession, dir: String): Unit = {
-    exactTruth(s, dir); pcaMatrix(s, dir)
-    pairTruth(s, dir); rangeTruth(s, dir)
-  }
-
   /** E2: IVF-bucketed ANN — C=8 deterministic centroids (the first 8
     * vectors), nearest-centroid assignment by squared L2 (argmin via one
     * window), search restricted to the query's nprobe=2 buckets.

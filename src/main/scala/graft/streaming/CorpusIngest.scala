@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.functions.Text
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -16,13 +16,10 @@ import org.apache.spark.sql.types._
   * census is the only thing ever probed, and stored payloads are never
   * rescanned.
   *
-  * Exactly-once without transactions: every epoch writes its admitted
-  * documents AND its census delta under a `batch_id=` partition with
-  * dynamic partition overwrite, so an at-least-once replay of the epoch
-  * REWRITES its own partitions instead of appending duplicates — and the
-  * census probe reads only partitions with `batch_id < current`, so a
-  * replayed epoch cannot be rejected by its own half-written delta. Same
-  * idempotence pattern as [[LiveFeed.startUpsertFrom]]'s dead-letter sink.
+  * Every gate below keeps only its admission logic: the stream, its
+  * census compaction and every sink write and census probe go through
+  * [[Epoch]], whose `batch_id=` protocol makes at-least-once replays
+  * rewrite rather than duplicate.
   */
 object CorpusIngest {
 
@@ -38,102 +35,33 @@ object CorpusIngest {
     * manifest of candidate documents.
     */
   def readDocs(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(docSchema)
-      .option("maxFilesPerTrigger", 16)
-      .json(dir)
+    Epoch.readJson(spark, docSchema, dir)
 
-  /** True iff a census directory holds at least one committed `batch_id=`
-    * partition. A bare `fs.exists` is the wrong probe: an epoch that
-    * admits ZERO rows still creates the directory (with only _SUCCESS),
-    * and `spark.read.parquet` on a partitionless directory throws schema
-    * inference errors — wedging every subsequent epoch of the stream.
+  /** The first row per `key` in `order` — the within-batch dedup every gate
+    * runs before probing its census.
     */
-  private def hasCensus(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(p) &&
-      fs.listStatus(p).exists(_.getPath.getName.startsWith("batch_id="))
-  }
+  private def firstPer(df: DataFrame, key: String, order: Column*): DataFrame =
+    df.withColumn("rn", row_number().over(Window.partitionBy(key).orderBy(order: _*)))
+      .filter(col("rn") === 1)
+      .drop("rn")
 
-  /** IN-PATH census compaction (r11 verdict #2): every epoch appends one
-    * `batch_id=` partition to its census, so a year-long stream otherwise
-    * pays ~10⁵ partitions of file-listing cost on every epoch's probe —
-    * the exact asymmetry [[graft.sources.MatView.append]] closed for
-    * batch views in r11, here wired into the ingest commit path itself
-    * (all census-gated modalities call this at epoch start) instead of
-    * the manual [[graft.sources.Compact]] janitor the r10 docs
-    * prescribed.
-    *
-    * When the partition count breaches `maxParts`, every partition with
-    * `batch_id < current` is folded into ONE partition labeled
-    * `batch_id = current − 1`, staged as a sibling directory and swapped
-    * in via [[graft.sources.AtomicSwap.publish]] (a crash anywhere
-    * leaves either the old or the new complete census). The label is the
-    * load-bearing choice: the `batch_id <` replay protocol stays exact
-    * because by the time epoch B's foreachBatch runs, every batch < B is
-    * committed in the streaming checkpoint and can never re-run — only B
-    * itself can replay, its probe filter `batch_id < B` still sees the
-    * folded partition, and its own rewrite targets partition B, which
-    * the fold deliberately excludes (a half-written B partition from a
-    * crashed attempt is dropped by the swap; B's replay rewrites it in
-    * full either way). Root marker files (`_SIG_BITS`) are carried into
-    * the staged copy, so the frame gate's width pin survives compaction.
-    *
-    * Cost is O(census) read+write, amortized LSM-style by the `maxParts`
-    * trigger; between compactions the probe pays at most `maxParts + 1`
-    * partition listings. Census row DUPLICATION cannot result from any
-    * crash window (the swap is atomic), and row LOSS cannot either (the
-    * fold reads the live directory before the swap and the write is to
-    * the staging sibling).
-    */
-  private def compactCensus(spark: SparkSession, censusDir: String,
-      batchId: Long, maxParts: Int): Unit = {
-    if (maxParts <= 0 || batchId <= 0) return
-    val live = new org.apache.hadoop.fs.Path(censusDir)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live)) return
-    val nParts = fs.listStatus(live)
-      .count(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
-    if (nParts <= maxParts) return
-    val staged = new org.apache.hadoop.fs.Path(
-      live.getParent, live.getName + ".census-compact-tmp")
-    fs.delete(staged, true)
-    spark.read.parquet(censusDir)
-      .filter(col("batch_id") < batchId)
-      .withColumn("batch_id", lit(batchId - 1))
-      .write.mode("overwrite")
-      .partitionBy("batch_id")
-      .parquet(staged.toString)
-    // An all-empty fold (possible only if every stored partition were
-    // ≥ B, which the replay protocol forbids) must not swap an EMPTY
-    // census into place — hasCensus would flip false and the gates would
-    // stop probing. Belt-and-braces guard, not an expected path.
-    val stagedHasParts = fs.exists(staged) && fs.listStatus(staged)
-      .exists(_.getPath.getName.startsWith("batch_id="))
-    if (!stagedHasParts) { fs.delete(staged, true); return }
-    fs.listStatus(live).filter(_.isFile).foreach { f =>
-      org.apache.hadoop.fs.FileUtil.copy(fs, f.getPath, fs,
-        new org.apache.hadoop.fs.Path(staged, f.getPath.getName),
-        false, spark.sparkContext.hadoopConfiguration)
-    }
-    graft.sources.AtomicSwap.publish(fs, staged, live)
-  }
+  /** The exact gate's fingerprint: md5 of a document's first 8 tokens. */
+  private def prefixFp: Column = Text.prefixFingerprint(Text.tokens(col("text")), 8)
 
   /** Pin the frame census's signature width: band rows written at one
     * width are MEANINGLESS at another (k ranges differ, and
     * `bit_count(simhash ^ stored_sim)` across widths silently corrupts
     * admission instead of failing), so the width is recorded in a
-    * `_SIG_BITS` marker on first write and `require()`d to match on every
-    * later epoch — a restart over an existing census with a different
-    * `sigBits` fails fast instead of admitting garbage.
+    * `_SIG_BITS` marker ([[Epoch.pin]]) — a restart over an existing
+    * census with a different `sigBits` fails fast instead of admitting
+    * garbage.
     */
   private def pinSigBits(spark: SparkSession, censusDir: String, sigBits: Int): Unit =
-    pinInt(spark, censusDir, "_SIG_BITS", sigBits,
-      (stored, wanted) =>
-        s"frame census at $censusDir was built with sig_bits=$stored; " +
-          s"resuming with sigBits=$wanted would join incompatible band " +
-          "rows — keep the width or rebuild the census")
+    Epoch.pin(spark, censusDir, "_SIG_BITS", sigBits) { (stored, wanted) =>
+      s"frame census at $censusDir was built with sig_bits=$stored; " +
+        s"resuming with sigBits=$wanted would join incompatible band " +
+        "rows — keep the width or rebuild the census"
+    }
 
   /** Pin the vector gate's admission radius (r11 verdict #6): `maxHamming`
     * was a per-start parameter with no cross-epoch memory, so a restart at
@@ -141,52 +69,20 @@ object CorpusIngest {
     * — vectors admitted under radius 2 would have been rejected under 3
     * and vice versa, drift no later probe can detect (the stored sketches
     * are radius-agnostic; only the verdicts differ). Same discipline as
-    * the frame gate's `_SIG_BITS`: recorded on first write, `require`d to
-    * match on every later epoch, re-pinnable exactly while the census
-    * holds no committed partition.
+    * the frame gate's `_SIG_BITS`.
     */
   private def pinMaxHamming(spark: SparkSession, censusDir: String, maxHamming: Int): Unit =
-    pinInt(spark, censusDir, "_MAX_HAMMING", maxHamming,
-      (stored, wanted) =>
-        s"vector census at $censusDir admits at maxHamming=$stored; " +
-          s"resuming with maxHamming=$wanted would silently change the " +
-          "admission semantics mid-corpus — keep the radius or rebuild " +
-          "the census")
-
-  /** The `_SIG_BITS` pin mechanism, parameter-generic: an integer config
-    * value a census's stored rows are only meaningful under is recorded
-    * in a root marker file on first write and `require()`d to match on
-    * every later epoch. A marker over an EMPTY census pins nothing: the
-    * marker is written before the epoch's first batch commits, so an
-    * epoch that failed before any census rows landed would otherwise
-    * permanently wedge the directory at a value no stored row ever used
-    * (r10 advice) — changes are allowed, by re-pinning, exactly when no
-    * `batch_id=` partition exists to be incompatible.
-    */
-  private def pinInt(spark: SparkSession, censusDir: String, markerName: String,
-      value: Int, mismatch: (Int, Int) => String): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(censusDir, markerName)
-    val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val stored =
-        try scala.io.Source.fromInputStream(in).mkString.trim.toInt
-        finally in.close()
-      if (stored != value) {
-        require(!hasCensus(spark, censusDir), mismatch(stored, value))
-        val out = fs.create(marker, true)
-        try out.write(s"$value\n".getBytes("UTF-8")) finally out.close()
-      }
-    } else {
-      val out = fs.create(marker, true)
-      try out.write(s"$value\n".getBytes("UTF-8")) finally out.close()
+    Epoch.pin(spark, censusDir, "_MAX_HAMMING", maxHamming) { (stored, wanted) =>
+      s"vector census at $censusDir admits at maxHamming=$stored; " +
+        s"resuming with maxHamming=$wanted would silently change the " +
+        "admission semantics mid-corpus — keep the radius or rebuild " +
+        "the census"
     }
-  }
 
   /** Start the admission stream. `corpusDir` accumulates admitted
-    * documents, `censusDir` the fingerprint census; both are `batch_id=`
-    * partitioned (see object doc for why). I/O per epoch is O(batch +
-    * census probe) — the admitted corpus is never read back.
+    * documents, `censusDir` the fingerprint census; both are [[Epoch]]
+    * sinks. I/O per epoch is O(batch + census probe) — the admitted corpus
+    * is never read back.
     */
   def startIngest(
       spark: SparkSession,
@@ -196,43 +92,14 @@ object CorpusIngest {
       checkpointDir: String,
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    readDocs(spark, inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        compactCensus(spark, censusDir, batchId, maxCensusParts)
-        val w = Window.partitionBy("fp").orderBy("doc_id")
-        val batch = raw
-          .withColumn("fp", Text.prefixFingerprint(Text.tokens(col("text")), 8))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .drop("rn")
-        val admitted =
-          if (hasCensus(spark, censusDir)) {
-            // Probe only FULLY COMMITTED epochs: a replay of this epoch
-            // must not see its own partial census delta.
-            val census = spark.read.parquet(censusDir)
-              .filter(col("batch_id") < batchId)
-              .select("fp")
-            batch.join(census, Seq("fp"), "left_anti")
-          } else batch
-        admitted
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(corpusDir)
-        admitted
-          .select(col("fp"), lit(batchId).as("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(censusDir)
-        ()
-      }
-      .start()
+    Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
+        maxCensusParts) { (raw, batchId) =>
+      val batch = firstPer(raw.withColumn("fp", prefixFp), "fp", col("doc_id"))
+      val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch)(census =>
+        batch.join(census.select("fp"), Seq("fp"), "left_anti"))
+      Epoch.write(admitted, corpusDir, batchId)
+      Epoch.write(admitted.select("fp"), censusDir, batchId)
+    }
 
   /** The admitted corpus as one DataFrame (all epochs). */
   def corpus(spark: SparkSession, corpusDir: String): DataFrame =
@@ -246,16 +113,16 @@ object CorpusIngest {
     * would require rescanning stored payloads — recall is the LSH band
     * recall, precision is traded for never touching admitted media again).
     * The census stores only (fp, band, bkey) signature rows — O(docs),
-    * payload-free — and both gates share the one `batch_id <` idempotence
-    * protocol, so replays rewrite rather than duplicate.
+    * payload-free — and both sinks are [[Epoch]] sinks, so replays rewrite
+    * rather than duplicate.
     *
     * Two deliberate batch-granularity trade-offs: (1) near-dups arriving
     * in the SAME epoch are admitted together (the gate is batch × census;
     * the periodic corpus-wide d3/d5 sweep catches them — running
     * clustering inside every epoch would serialize ingest on an iterative
     * job); (2) the census accrues one `batch_id=` partition per epoch —
-    * bounded in-path by [[compactCensus]] (r11 verdict #2), which folds
-    * committed partitions once the count breaches `maxCensusParts`;
+    * bounded by the [[Epoch]] census compaction (r11 verdict #2), which
+    * folds committed partitions once the count breaches `maxCensusParts`;
     * admission only reads `fp/band/bkey`, which the fold preserves.
     */
   def startIngestNearDup(
@@ -266,58 +133,32 @@ object CorpusIngest {
       checkpointDir: String,
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    readDocs(spark, inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        compactCensus(spark, censusDir, batchId, maxCensusParts)
-        val w = Window.partitionBy("fp").orderBy("doc_id")
-        val batch = raw
-          .withColumn("fp", Text.prefixFingerprint(Text.tokens(col("text")), 8))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .drop("rn")
-          .persist()
-        val sh = graft.operators.MinHashLSH
-          .shingleTable(batch, "doc_id", "text", 3)
-        val bands = graft.operators.MinHashLSH.bandKeys(
-          graft.operators.MinHashLSH.signatures(sh, "doc_id", 8), "doc_id", 8, 4)
-          .join(batch.select("doc_id", "fp"), Seq("doc_id"))
-        val admitted =
-          if (hasCensus(spark, censusDir)) {
-            val census = spark.read.parquet(censusDir)
-              .filter(col("batch_id") < batchId)
-            // exact gate: stored fingerprint match
-            val exactHit = census.select("fp").distinct()
-            // fuzzy gate: any LSH band collision with a stored signature
-            val fuzzyHit = bands
-              .join(census.select(col("band"), col("bkey")).distinct(),
-                Seq("band", "bkey"))
-              .select(col("doc_id")).distinct()
-            batch
-              .join(exactHit, Seq("fp"), "left_anti")
-              .join(fuzzyHit, Seq("doc_id"), "left_anti")
-          } else batch
-        val admittedBands = bands
-          .join(admitted.select("doc_id"), Seq("doc_id"))
-          .select(col("fp"), col("band"), col("bkey"), lit(batchId).as("batch_id"))
-        admitted
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(corpusDir)
-        admittedBands
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(censusDir)
-        batch.unpersist()
-        ()
+    Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
+        maxCensusParts) { (raw, batchId) =>
+      val batch = firstPer(raw.withColumn("fp", prefixFp), "fp", col("doc_id"))
+        .persist()
+      val sh = graft.operators.MinHashLSH
+        .shingleTable(batch, "doc_id", "text", 3)
+      val bands = graft.operators.MinHashLSH.bandKeys(
+        graft.operators.MinHashLSH.signatures(sh, "doc_id", 8), "doc_id", 8, 4)
+        .join(batch.select("doc_id", "fp"), Seq("doc_id"))
+      val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
+        // exact gate: stored fingerprint match
+        val exactHit = census.select("fp").distinct()
+        // fuzzy gate: any LSH band collision with a stored signature
+        val fuzzyHit = bands
+          .join(census.select(col("band"), col("bkey")).distinct(),
+            Seq("band", "bkey"))
+          .select(col("doc_id")).distinct()
+        batch
+          .join(exactHit, Seq("fp"), "left_anti")
+          .join(fuzzyHit, Seq("doc_id"), "left_anti")
       }
-      .start()
+      Epoch.write(admitted, corpusDir, batchId)
+      Epoch.write(bands.join(admitted.select("doc_id"), Seq("doc_id"))
+        .select(col("fp"), col("band"), col("bkey")), censusDir, batchId)
+      batch.unpersist()
+    }
 
   /** Start the SPAN-LEVEL admission stream — the streaming twin of d10's
     * duplicate-span census (the MassiveText-style signal doc-level gates
@@ -346,9 +187,9 @@ object CorpusIngest {
     * Per-doc span stats (both signals, plus the admission verdict) land in
     * `statsDir` so the ingest loop's discard rate is observable per epoch.
     * Census rows are (fp) only — 16 bytes per distinct admitted window, no
-    * positions, no payload — and all three sinks share the `batch_id <`
-    * dynamic-partition-overwrite idempotence protocol, so an at-least-once
-    * replay rewrites its own epoch instead of double-counting spans.
+    * positions, no payload — and all three sinks are [[Epoch]] sinks, so
+    * an at-least-once replay rewrites its own epoch instead of
+    * double-counting spans.
     *
     * Scale: the window table is n_tokens rows/doc of (doc_id, pos, 16-byte
     * fp); the census probe is a left-semi equi-join on fp (shuffle on the
@@ -368,120 +209,92 @@ object CorpusIngest {
       maxDupFrac: Double = 0.5,
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    readDocs(spark, inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        compactCensus(spark, censusDir, batchId, maxCensusParts)
-        val batch = raw.persist()
-        val docsT = batch.select(col("doc_id"),
-          size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
-        // One tokenize+window pass, scanned by the within-batch census,
-        // the census probe and the per-doc stats (d10's persist pattern).
-        val wins = batch
-          .select(col("doc_id"), Text.tokens(col("text")).as("t"))
-          .filter(size(col("t")) >= w)
-          .select(col("doc_id"),
-            explode(sequence(lit(0), size(col("t")) - w)).as("p"), col("t"))
-          .select(col("doc_id"), col("p"),
-            md5(concat_ws(" ", slice(col("t"), col("p") + 1, lit(w)))).as("fp"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        wins.count()
-        val censusHits =
-          if (hasCensus(spark, censusDir)) {
-            val census = spark.read.parquet(censusDir)
-              .filter(col("batch_id") < batchId)
-              .select("fp")
-            wins.join(census, Seq("fp"), "left_semi")
-              .select(col("doc_id"), col("p"), lit(true).as("in_census"))
-          } else spark.emptyDataFrame
-            .select(lit(0L).as("doc_id"), lit(0).as("p"),
-              lit(true).as("in_census"))
-        val batchCensus = wins.groupBy("fp").agg(count(lit(1)).as("c"))
-        // Persisted: covAny and covCross both scan it — without the
-        // persist the stored-census probe (which grows with the corpus)
-        // and the within-batch census would each run twice per epoch.
-        val flagged = wins
-          .join(batchCensus, Seq("fp"))
-          .join(censusHits, Seq("doc_id", "p"), "left")
-          .select(col("doc_id"), col("p"),
-            (col("c") > 1 || col("in_census")).as("dup_any"),
-            coalesce(col("in_census"), lit(false)).as("dup_cross"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        flagged.count()
+    Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
+        maxCensusParts) { (raw, batchId) =>
+      val batch = raw.persist()
+      val docsT = batch.select(col("doc_id"),
+        size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
+      // One tokenize+window pass, scanned by the within-batch census,
+      // the census probe and the per-doc stats (d10's persist pattern).
+      val wins = batch
+        .select(col("doc_id"), Text.tokens(col("text")).as("t"))
+        .filter(size(col("t")) >= w)
+        .select(col("doc_id"),
+          explode(sequence(lit(0), size(col("t")) - w)).as("p"), col("t"))
+        .select(col("doc_id"), col("p"),
+          md5(concat_ws(" ", slice(col("t"), col("p") + 1, lit(w)))).as("fp"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      wins.count()
+      val batchCensus = wins.groupBy("fp").agg(count(lit(1)).as("c"))
+      val counted = wins.join(batchCensus, Seq("fp"))
+      // Persisted: covAny and covCross both scan it — without the
+      // persist the stored-census probe (which grows with the corpus)
+      // and the within-batch census would each run twice per epoch.
+      val flagged = Epoch.committed(spark, censusDir, batchId)
+        .fold(counted.withColumn("in_census", lit(false))) { census =>
+          val hits = wins.join(census.select("fp"), Seq("fp"), "left_semi")
+            .select(col("doc_id"), col("p"), lit(true).as("in_census"))
+          counted.join(hits, Seq("doc_id", "p"), "left")
+        }
+        .select(col("doc_id"), col("p"),
+          (col("c") > 1 || col("in_census")).as("dup_any"),
+          coalesce(col("in_census"), lit(false)).as("dup_cross"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      flagged.count()
 
-        val prior = Window.partitionBy("doc_id").orderBy("p")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        def coverage(dup: DataFrame, nDup: String, cov: String): DataFrame =
-          dup
-            .withColumn("prev_end",
-              coalesce(max(col("p") + (w - 1)).over(prior), lit(-1)))
-            .withColumn("contrib", greatest(lit(0),
-              col("p") + (w - 1) - greatest(col("p") - 1, col("prev_end"))))
-            .groupBy("doc_id")
-            .agg(count(lit(1)).as(nDup),
-              sum(col("contrib").cast("long")).as(cov))
+      val prior = Window.partitionBy("doc_id").orderBy("p")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      def coverage(dup: DataFrame, nDup: String, cov: String): DataFrame =
+        dup
+          .withColumn("prev_end",
+            coalesce(max(col("p") + (w - 1)).over(prior), lit(-1)))
+          .withColumn("contrib", greatest(lit(0),
+            col("p") + (w - 1) - greatest(col("p") - 1, col("prev_end"))))
+          .groupBy("doc_id")
+          .agg(count(lit(1)).as(nDup),
+            sum(col("contrib").cast("long")).as(cov))
 
-        val covAny = coverage(
-          flagged.filter(col("dup_any")).select("doc_id", "p"),
-          "n_dup_windows", "covered")
-        val covCross = coverage(
-          flagged.filter(col("dup_cross")).select("doc_id", "p"),
-          "n_cross_windows", "cross_covered")
-        val wstats = wins.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
-        val stats = docsT
-          .join(wstats, Seq("doc_id"), "left")
-          .join(covAny, Seq("doc_id"), "left")
-          .join(covCross, Seq("doc_id"), "left")
-          .select(col("doc_id"), col("n_tokens"),
-            coalesce(col("n_windows"), lit(0L)).as("n_windows"),
-            coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
-            coalesce(col("covered"), lit(0L)).as("covered_tokens"),
-            coalesce(col("n_cross_windows"), lit(0L)).as("n_cross_windows"),
-            coalesce(col("cross_covered"), lit(0L)).as("cross_covered_tokens"),
-            (coalesce(col("covered"), lit(0L)).cast("double") / col("n_tokens"))
-              .as("dup_token_frac"),
-            (coalesce(col("cross_covered"), lit(0L)).cast("double") /
-              col("n_tokens")).as("cross_token_frac"))
-          // Null-safe: a null/absent text yields null n_tokens and a null
-          // fraction — such a document has no duplicated content to gate
-          // on, so it is ADMITTED (verdict true, never null), mirroring
-          // batch d10 which emits the row rather than dropping it.
-          .withColumn("admitted",
-            coalesce(col("cross_token_frac") <= maxDupFrac, lit(true)))
-          .persist()
-        stats.count()
+      val covAny = coverage(
+        flagged.filter(col("dup_any")).select("doc_id", "p"),
+        "n_dup_windows", "covered")
+      val covCross = coverage(
+        flagged.filter(col("dup_cross")).select("doc_id", "p"),
+        "n_cross_windows", "cross_covered")
+      val wstats = wins.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
+      val stats = docsT
+        .join(wstats, Seq("doc_id"), "left")
+        .join(covAny, Seq("doc_id"), "left")
+        .join(covCross, Seq("doc_id"), "left")
+        .select(col("doc_id"), col("n_tokens"),
+          coalesce(col("n_windows"), lit(0L)).as("n_windows"),
+          coalesce(col("n_dup_windows"), lit(0L)).as("n_dup_windows"),
+          coalesce(col("covered"), lit(0L)).as("covered_tokens"),
+          coalesce(col("n_cross_windows"), lit(0L)).as("n_cross_windows"),
+          coalesce(col("cross_covered"), lit(0L)).as("cross_covered_tokens"),
+          (coalesce(col("covered"), lit(0L)).cast("double") / col("n_tokens"))
+            .as("dup_token_frac"),
+          (coalesce(col("cross_covered"), lit(0L)).cast("double") /
+            col("n_tokens")).as("cross_token_frac"))
+        // Null-safe: a null/absent text yields null n_tokens and a null
+        // fraction — such a document has no duplicated content to gate
+        // on, so it is ADMITTED (verdict true, never null), mirroring
+        // batch d10 which emits the row rather than dropping it.
+        .withColumn("admitted",
+          coalesce(col("cross_token_frac") <= maxDupFrac, lit(true)))
+        .persist()
+      stats.count()
 
-        val admittedDocs = batch
-          .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id"))
-        admittedDocs
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(corpusDir)
-        wins
-          .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id"),
-            "left_semi")
-          .select("fp").distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(censusDir)
-        stats
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(statsDir)
-        stats.unpersist(); flagged.unpersist(); wins.unpersist()
-        batch.unpersist()
-        ()
-      }
-      .start()
+      Epoch.write(batch
+        .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id")),
+        corpusDir, batchId)
+      Epoch.write(wins
+        .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id"),
+          "left_semi")
+        .select("fp").distinct(), censusDir, batchId)
+      Epoch.write(stats, statsDir, batchId)
+      stats.unpersist(); flagged.unpersist(); wins.unpersist()
+      batch.unpersist()
+    }
 
   /** Incoming candidate-vector shape (mirrors the `embeddings` table's
     * ingest-relevant columns).
@@ -509,14 +322,13 @@ object CorpusIngest {
     * are ever compared) and verification is an exact popcount on the two
     * 16-bit sketches, so no stage is quadratic and admitted embeddings are
     * never re-read. Within a batch, duplicate vec_ids are collapsed to one
-    * deterministic row BEFORE sketching (the startIngest row_number
-    * pattern — summing plane bits over duplicate rows would carry into
-    * higher bits and corrupt the sketch); across batches, same-epoch
-    * near-dups are admitted together (the [[startIngestNearDup]]
-    * batch-granularity trade). All sinks — planes included — follow the
-    * `batch_id <` dynamic-overwrite replay protocol: a replayed first
-    * epoch re-derives the SAME planes (they depend only on the dimension)
-    * and rewrites its partition.
+    * deterministic row BEFORE sketching (summing plane bits over duplicate
+    * rows would carry into higher bits and corrupt the sketch); across
+    * batches, same-epoch near-dups are admitted together (the
+    * [[startIngestNearDup]] batch-granularity trade). All sinks — planes
+    * included — are [[Epoch]] sinks: a replayed first epoch re-derives the
+    * SAME planes (they depend only on the dimension) and rewrites its
+    * partition.
     *
     * `maxHamming` must be ≤ 3: with 4 bands of 4 bits, the pigeonhole
     * guarantee that two sketches within Hamming distance h share at least
@@ -536,43 +348,21 @@ object CorpusIngest {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming must be in [0, 3] (4x4 banding guarantees a shared " +
         s"band only up to Hamming 3), got $maxHamming")
-    spark.readStream
-      .schema(vecSchema)
-      .option("maxFilesPerTrigger", 16)
-      .json(inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        pinMaxHamming(spark, censusDir, maxHamming)
-        compactCensus(spark, censusDir, batchId, maxCensusParts)
-        // Deterministic within-batch dedup on vec_id: duplicate rows
-        // would SUM their plane bits (bit 0 twice = bit 1), corrupting
-        // the stored sketch for every future probe.
-        val wDedup = Window.partitionBy("vec_id")
-          .orderBy(col("embedding"), col("label"))
-        val batch = raw
-          .withColumn("rn", row_number().over(wDedup))
-          .filter(col("rn") === 1)
-          .drop("rn")
-          .withColumn("v", graft.functions.Vectors.toDoubleVec(col("embedding")))
-          .persist()
-        // An empty epoch (replayed/no files) must not reach the plane
-        // derivation: writing zero rows creates no partition and the
-        // read-back below would fail on a planeless directory.
-        if (batch.count() > 0) {
-        val storedPlanes =
-          if (hasCensus(spark, planesDir))
-            spark.read.parquet(planesDir)
-              .filter(col("batch_id") < batchId)
-              .select("j", "h")
-          else spark.emptyDataFrame
-            .select(lit(0).as("j"),
-              lit(null).cast("array<double>").as("h"))
-        val planes =
-          if (!storedPlanes.isEmpty) storedPlanes
-          else {
+    val pin = () => pinMaxHamming(spark, censusDir, maxHamming)
+    Epoch.run(Epoch.readJson(spark, vecSchema, inputDir), checkpointDir, trigger,
+        censusDir, maxCensusParts, pin) { (raw, batchId) =>
+      // Deterministic within-batch dedup on vec_id: duplicate rows
+      // would SUM their plane bits (bit 0 twice = bit 1), corrupting
+      // the stored sketch for every future probe.
+      val batch = firstPer(raw, "vec_id", col("embedding"), col("label"))
+        .withColumn("v", graft.functions.Vectors.toDoubleVec(col("embedding")))
+        .persist()
+      // An empty epoch (replayed/no files) must not reach the plane
+      // derivation: it has no dimension to draw the planes from.
+      if (batch.count() > 0) {
+        val planes = Epoch.committed(spark, planesDir, batchId)
+          .map(_.select("j", "h")).filter(!_.isEmpty)
+          .getOrElse {
             // First non-empty epoch: 16 Rademacher (±1) planes from md5
             // bit parity of (plane j, component i) — a pure function of
             // the embedding dimension, so a tiny first epoch cannot fix a
@@ -585,14 +375,8 @@ object CorpusIngest {
                 s"""transform(sequence(1, $dim), i ->
                    CASE WHEN conv(substr(md5(concat(j, '|', i)), 1, 1), 16, 10) % 2 = 0
                         THEN 1.0D ELSE -1.0D END)""").as("h"))
+            Epoch.write(drawn, planesDir, batchId)
             drawn
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(planesDir)
-            spark.read.parquet(planesDir)
-              .filter(col("batch_id") <= batchId).select("j", "h")
           }
         val sketches = batch
           .crossJoin(broadcast(planes))
@@ -613,38 +397,23 @@ object CorpusIngest {
             explode(sequence(lit(0), lit(3))).as("k"))
           .select(col("vec_id"), col("k"),
             expr("shiftright(sketch, k * 4) & 15").as("val"), col("sketch"))
-        val rejected =
-          if (hasCensus(spark, censusDir)) {
-            val census = spark.read.parquet(censusDir)
-              .filter(col("batch_id") < batchId)
-              .select(col("k"), col("val"), col("sketch").as("stored_sketch"))
-            bands
-              .join(census, Seq("k", "val"))
-              .filter(expr(s"bit_count(sketch ^ stored_sketch) <= $maxHamming"))
-              .select("vec_id").distinct()
-          } else batch.select("vec_id").limit(0)
-        val admitted = batch.join(rejected, Seq("vec_id"), "left_anti")
-        admitted
-          .select(col("vec_id"), col("embedding"), col("label"))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(corpusDir)
-        bands
-          .join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
-          .select(col("k"), col("val"), col("sketch"),
-            lit(batchId).as("batch_id"))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(censusDir)
-        sketches.unpersist()
-        }
-        batch.unpersist()
-        ()
+        val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
+          val rejected = bands
+            .join(census.select(col("k"), col("val"), col("sketch").as("stored_sketch")),
+              Seq("k", "val"))
+            .filter(expr(s"bit_count(sketch ^ stored_sketch) <= $maxHamming"))
+            .select("vec_id").distinct()
+          batch.join(rejected, Seq("vec_id"), "left_anti")
       }
-      .start()
+      Epoch.write(admitted.select(col("vec_id"), col("embedding"), col("label")),
+        corpusDir, batchId)
+      Epoch.write(bands
+        .join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
+        .select(col("k"), col("val"), col("sketch")), censusDir, batchId)
+      sketches.unpersist()
+      }
+      batch.unpersist()
+    }
   }
 
   /** Start the MEDIA admission stream — the frame-signature twin of
@@ -673,10 +442,9 @@ object CorpusIngest {
     *
     * The census stores (fp, k, byte, simhash) band rows (≤ 4 per admitted
     * doc, payload-free) plus one k = −1 fp row per admitted doc so that
-    * frameless payloads (empty text) still feed the exact gate. All sinks
-    * follow the `batch_id <` dynamic-overwrite replay protocol; same-epoch
-    * near-dups are admitted together (the [[startIngestNearDup]]
-    * batch-granularity trade).
+    * frameless payloads (empty text) still feed the exact gate. Both sinks
+    * are [[Epoch]] sinks; same-epoch near-dups are admitted together (the
+    * [[startIngestNearDup]] batch-granularity trade).
     *
     * Scale per epoch: O(batch frames) hashing (map-only), one band
     * equi-join against the census (only colliding buckets verify), and
@@ -699,69 +467,43 @@ object CorpusIngest {
       sigBits: Int = 60,
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    readDocs(spark, inputDir)
-      .writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .foreachBatch { (raw: DataFrame, batchId: Long) =>
-        pinSigBits(spark, censusDir, sigBits)
-        compactCensus(spark, censusDir, batchId, maxCensusParts)
-        val w = Window.partitionBy("fp").orderBy("doc_id")
-        val batch = raw
-          .withColumn("fp", md5(col("text")))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .drop("rn")
-          .persist()
-        // m4's frame-signature pipeline via the ONE shared derivation
-        // (operators/Multimodal.frameSimhash + simhashBands) — the batch
-        // dedup and this gate cannot drift on frame size, hash, or band
-        // layout.
-        // `sigBits` defaults to the 60-bit production width (m10's batch
-        // twin); 32 keeps byte-for-byte parity with batch m4 — see
-        // Text.tokenHash60 for the saturation arithmetic.
-        val sims = graft.operators.Multimodal.frameSimhash(batch, sigBits)
-          .persist()
-        sims.count() // eager: banded probe + census delta both rescan
-        val bands = graft.operators.Multimodal.simhashBands(sims, sigBits)
-        val admitted =
-          if (hasCensus(spark, censusDir)) {
-            val census = spark.read.parquet(censusDir)
-              .filter(col("batch_id") < batchId)
-            val exactHit = census.select("fp").distinct()
-            val fuzzyHit = bands
-              .join(census.filter(col("k") >= 0)
-                  .select(col("k"), col("byte"),
-                    col("simhash").as("stored_sim")).distinct(),
-                Seq("k", "byte"))
-              .filter(expr(s"bit_count(simhash ^ stored_sim) <= $maxHamming"))
-              .select("doc_id").distinct()
-            batch
-              .join(exactHit, Seq("fp"), "left_anti")
-              .join(fuzzyHit, Seq("doc_id"), "left_anti")
-          } else batch
-        admitted
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(corpusDir)
-        // census delta: band rows for framed payloads + one k = -1 row per
-        // admitted doc so empty payloads still hit the exact gate
-        bands
-          .join(admitted.select("doc_id", "fp"), Seq("doc_id"))
-          .select(col("fp"), col("k"), col("byte"), col("simhash"))
-          .unionByName(admitted.select(col("fp"), lit(-1).as("k"),
-            lit(-1L).as("byte"), lit(0L).as("simhash")))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(censusDir)
-        sims.unpersist()
-        batch.unpersist()
-        ()
+    Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
+        maxCensusParts, () => pinSigBits(spark, censusDir, sigBits)) { (raw, batchId) =>
+      val batch = firstPer(raw.withColumn("fp", md5(col("text"))), "fp", col("doc_id"))
+        .persist()
+      // m4's frame-signature pipeline via the ONE shared derivation
+      // (operators/Multimodal.frameSimhash + simhashBands) — the batch
+      // dedup and this gate cannot drift on frame size, hash, or band
+      // layout.
+      // `sigBits` defaults to the 60-bit production width (m10's batch
+      // twin); 32 keeps byte-for-byte parity with batch m4 — see
+      // Text.tokenHash60 for the saturation arithmetic.
+      val sims = graft.operators.Multimodal.frameSimhash(batch, sigBits)
+        .persist()
+      sims.count() // eager: banded probe + census delta both rescan
+      val bands = graft.operators.Multimodal.simhashBands(sims, sigBits)
+      val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
+        val exactHit = census.select("fp").distinct()
+        val fuzzyHit = bands
+          .join(census.filter(col("k") >= 0)
+              .select(col("k"), col("byte"),
+                col("simhash").as("stored_sim")).distinct(),
+            Seq("k", "byte"))
+          .filter(expr(s"bit_count(simhash ^ stored_sim) <= $maxHamming"))
+          .select("doc_id").distinct()
+        batch
+          .join(exactHit, Seq("fp"), "left_anti")
+          .join(fuzzyHit, Seq("doc_id"), "left_anti")
       }
-      .start()
+      Epoch.write(admitted, corpusDir, batchId)
+      // census delta: band rows for framed payloads + one k = -1 row per
+      // admitted doc so empty payloads still hit the exact gate
+      Epoch.write(bands
+        .join(admitted.select("doc_id", "fp"), Seq("doc_id"))
+        .select(col("fp"), col("k"), col("byte"), col("simhash"))
+        .unionByName(admitted.select(col("fp"), lit(-1).as("k"),
+          lit(-1L).as("byte"), lit(0L).as("simhash"))), censusDir, batchId)
+      sims.unpersist()
+      batch.unpersist()
+    }
 }

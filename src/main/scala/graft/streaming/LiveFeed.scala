@@ -33,10 +33,7 @@ object LiveFeed {
     * (`ulp:126-157`); each dropped file is one poll response.
     */
   def readTrades(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream
-      .schema(tradeSchema)
-      .option("maxFilesPerTrigger", 16)
-      .json(dir)
+    Epoch.readJson(spark, tradeSchema, dir)
 
   /** DataSourceV2 micro-batch source for the same poll loop — the
     * in-engine connector ([[graft.sources.BarFeedProvider]] with
@@ -102,9 +99,8 @@ object LiveFeed {
     *        (null/NaN price, null ts) are written there as Parquet keyed
     *        by batch_id — the streaming dead-letter analogue of the
     *        reference's invalid-symbol registry growth (`ulp:170-179`):
-    *        nothing is silently dropped, and because foreachBatch is
-    *        at-least-once, each epoch overwrites ITS OWN batch_id
-    *        partition so replays cannot double-count rejects. The write
+    *        nothing is silently dropped, and the sink is an [[Epoch]]
+    *        sink, so replays cannot double-count rejects. The write
     *        runs concurrently with the merge; the batch returns only when
     *        both are done, and fails if either fails.
     */
@@ -133,15 +129,7 @@ object LiveFeed {
       .foreachBatch { (raw: DataFrame, batchId: Long) =>
         val deadLetters = deadLetterDir.map { d =>
           new SideTask(s"livefeed-dead-letters-$batchId",
-            // Keyed by batch id with dynamic partition overwrite so an
-            // at-least-once replay of the epoch REWRITES its own partition
-            // instead of appending duplicate reject rows.
-            invalidTrades(raw)
-              .withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id")
-              .parquet(d))
+            Epoch.write(invalidTrades(raw), d, batchId))
         }
         var failure: Throwable = null
         try upsertBatch(spark, validTrades(raw), fs, store, storeSchema)

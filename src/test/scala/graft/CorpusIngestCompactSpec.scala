@@ -1,6 +1,7 @@
 package graft
 
 import graft.streaming.CorpusIngest
+import org.apache.spark.sql.streaming.StreamingQuery
 import java.nio.file.{Files, Paths}
 
 /** In-path census compaction (r11 verdict #2): the ingest census accrued
@@ -70,6 +71,70 @@ class CorpusIngestCompactSpec extends SparkSpec {
     val cC2 = CorpusIngest.corpus(spark, s"$root/corpusC")
       .select("doc_id").as[Long].collect().toSet
     assert(cC2 == cC, s"re-run over a compacted census changed the corpus: $cC2")
+  }
+
+  /** A gate run as a compacted (maxCensusParts = 1) and an uncompacted
+    * twin: `write(in, k)` drops epoch k's input, whose novel row has `id`
+    * k + 1, and `start(root, maxParts)` runs the gate over `root`.
+    */
+  private case class Twin(name: String, id: String, write: (String, Int) => Unit,
+      start: (String, Int) => StreamingQuery)
+
+  private def words(k: Int): Seq[String] = (1 to 30).map(i => s"w${k}x$i")
+
+  // epoch k: a novel doc k+1, an exact re-send of doc 1 and a near copy of
+  // doc k (first token replaced) — the copies must stay rejected after the
+  // census rows they hit are folded
+  private def textEpoch(in: String, k: Int): Unit =
+    writeDoc(in, k, Seq(k + 1L -> words(k).mkString(" ")) ++
+      (if (k == 0) Nil
+       else Seq(100L + k -> words(0).mkString(" "),
+         200L + k -> ("zulu" +: words(k - 1).tail).mkString(" "))))
+
+  /** A seeded random 16-dimensional embedding. */
+  private def randomVec(id: Long, seed: Int): String = {
+    val r = new scala.util.Random(seed)
+    s"""{"vec_id":$id,"embedding":[${Seq.fill(16)(r.nextGaussian()).mkString(",")}],"label":1}"""
+  }
+
+  // epoch k: a novel vector k+1 and an exact copy of vector 1
+  private def vecEpoch(in: String, k: Int): Unit =
+    Files.writeString(Paths.get(s"$in/v$k.json"),
+      (randomVec(k + 1, k + 1) +: (if (k == 0) Nil else Seq(randomVec(100 + k, 1))))
+        .mkString("", "\n", "\n"))
+
+  Seq(
+    Twin("near-dup", "doc_id", textEpoch, (r, parts) => CorpusIngest.startIngestNearDup(spark,
+      s"$r/in", s"$r/corpus", s"$r/census", s"$r/ckpt", maxCensusParts = parts)),
+    Twin("spans", "doc_id", textEpoch, (r, parts) => CorpusIngest.startIngestSpans(spark,
+      s"$r/in", s"$r/corpus", s"$r/census", s"$r/stats", s"$r/ckpt", maxCensusParts = parts)),
+    Twin("vectors", "vec_id", vecEpoch, (r, parts) => CorpusIngest.startIngestVectors(spark,
+      s"$r/in", s"$r/corpus", s"$r/census", s"$r/planes", s"$r/ckpt",
+      maxCensusParts = parts))
+  ).foreach { g =>
+    test(s"${g.name}-gate compaction: maxCensusParts = 1 admits the same set as an " +
+      "uncompacted twin and keeps the census within two partitions") {
+      val root = Files.createTempDirectory(s"compact-${g.name}").toString
+      val (c, u) = (s"$root/compacted", s"$root/uncompacted")
+      val epochs = 4
+      for (k <- 0 until epochs; (r, parts) <- Seq(c -> 1, u -> 0)) {
+        Files.createDirectories(Paths.get(s"$r/in"))
+        g.write(s"$r/in", k)
+        g.start(r, parts).awaitTermination(180000)
+        if (parts == 1)
+          assert(censusParts(s"$r/census") <= 2,
+            s"epoch $k: compacted census grew to ${censusParts(s"$r/census")} partitions")
+      }
+      assert(censusParts(s"$u/census") == epochs)
+      def admitted(r: String) =
+        spark.read.parquet(s"$r/corpus").select(g.id).as[Long].collect().toSet
+      assert(admitted(c) == admitted(u), s"parity broke: ${admitted(c)} vs ${admitted(u)}")
+      // only the novel rows are admitted: every copy was rejected
+      assert(admitted(u) == (1L to epochs).toSet, s"uncompacted twin admitted ${admitted(u)}")
+      assert(spark.read.parquet(s"$c/census").drop("batch_id").collect().map(_.toString).sorted
+        .sameElements(spark.read.parquet(s"$u/census").drop("batch_id").collect()
+          .map(_.toString).sorted), "compaction changed the census rows")
+    }
   }
 
   test("frame-gate compaction preserves the _SIG_BITS pin and the banded " +

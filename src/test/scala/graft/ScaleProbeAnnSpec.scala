@@ -5,19 +5,7 @@ package graft
   * inflation factor and scheme — the annbal leg once broke unnoticed.
   */
 class ScaleProbeAnnSpec extends SparkSpec {
-
-  private val sf = "/root/testdata/sf0.001"
-
-  /** The PROBEJSON payloads `leg` prints, keyed by their "probe" field. */
-  private def probeLines(leg: => Unit): Map[String, Seq[String]] = {
-    val out = new java.io.ByteArrayOutputStream()
-    Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(leg)
-    val probe = """"probe":"([a-z0-9_]+)"""".r
-    out.toString("UTF-8").linesIterator
-      .filter(_.startsWith("PROBEJSON "))
-      .map(l => probe.findFirstMatchIn(l).map(_.group(1)).getOrElse("?") -> l)
-      .toSeq.groupMap(_._1)(_._2)
-  }
+  import ScaleProbeAnnSpec.{probeLines, sf}
 
   private def assertLegs(got: Map[String, Seq[String]], probes: String*): Unit = {
     assert(got.keySet == probes.toSet, s"unexpected probe set: ${got.keySet}")
@@ -47,5 +35,21 @@ class ScaleProbeAnnSpec extends SparkSpec {
     val got = probeLines(ScaleProbe.multiprobeProbe(spark, sf))
     assertLegs(got, "mplsh_banded", "mplsh_multi", "mplsh_multi2")
     assert(got.values.flatten.forall(_.contains("\"recall_pm\":")))
+  }
+}
+
+object ScaleProbeAnnSpec {
+
+  val sf = "/root/testdata/sf0.001"
+
+  /** The PROBEJSON payloads `leg` prints, keyed by their "probe" field. */
+  def probeLines(leg: => Unit): Map[String, Seq[String]] = {
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(new java.io.PrintStream(out, true, "UTF-8"))(leg)
+    val probe = """"probe":"([a-z0-9_]+)"""".r
+    out.toString("UTF-8").linesIterator
+      .filter(_.startsWith("PROBEJSON "))
+      .map(l => probe.findFirstMatchIn(l).map(_.group(1)).getOrElse("?") -> l)
+      .toSeq.groupMap(_._1)(_._2)
   }
 }
