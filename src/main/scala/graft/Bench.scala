@@ -47,6 +47,28 @@ object Bench {
       .map(k => k -> byName(k))
   }
 
+  /** Host-window calibration canary (r9 verdict #5): seconds of a FIXED
+    * CPU-bound codegen fold with no I/O and no shuffle, timed first and
+    * last in every session and committed in the artifact. The container's
+    * 32 vCPUs deliver a host-dependent 7-30 cores of parallel throughput;
+    * two artifacts taken in different host windows (r9's 206.8 vs
+    * 148.6 s pair) are adjudicable from the canary ratio alone
+    * instead of needing a cross-read of BENCH_NOTES. 64 partitions of a
+    * 200M-row mixed-arith fold ≈ 6 CPU-seconds: ~0.3 s wall on a healthy
+    * window, scaling inversely with delivered parallelism.
+    */
+  private[graft] def canary(spark: org.apache.spark.sql.SparkSession): Double = {
+    val t0 = System.nanoTime()
+    spark.range(0L, 200000000L, 1L, 64)
+      .selectExpr(
+        // ANSI-safe mixing: (id % 1e6) * Knuth-multiplier tops out ~2.7e15,
+        // well inside a signed long (a full 64-bit LCG multiply throws
+        // ARITHMETIC_OVERFLOW under Spark 4's default ANSI mode).
+        "sum(((id % 1000003) * 2654435761 + shiftright(id, 13)) % 999983)")
+      .collect()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -70,26 +92,6 @@ object Bench {
       .filter(org.apache.spark.sql.functions.col("id") > 10)
       .groupBy("s").count().collect()
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(warmDir))
-    // Host-window calibration canary (r9 verdict #5): a FIXED CPU-bound
-    // codegen fold with no I/O and no shuffle, timed first and last in
-    // every session and committed in the artifact. The container's 32
-    // vCPUs deliver a host-dependent 7-30 cores of parallel throughput;
-    // two artifacts taken in different windows (the r9 driver-vs-builder
-    // 206.8 vs 148.6 s pair) are adjudicable from the canary ratio alone
-    // instead of needing a cross-read of BENCH_NOTES. 64 partitions of a
-    // 200M-row mixed-arith fold ≈ 6 CPU-seconds: ~0.3 s wall on a healthy
-    // window, scaling inversely with delivered parallelism.
-    def canary(): Double = {
-      val t0 = System.nanoTime()
-      spark.range(0L, 200000000L, 1L, 64)
-        .selectExpr(
-          // ANSI-safe mixing: (id % 1e6) * Knuth-multiplier tops out ~2.7e15,
-          // well inside a signed long (a full 64-bit LCG multiply throws
-          // ARITHMETIC_OVERFLOW under Spark 4's default ANSI mode).
-          "sum(((id % 1000003) * 2654435761 + shiftright(id, 13)) % 999983)")
-        .collect()
-      (System.nanoTime() - t0) / 1e9
-    }
     val all = SparkEntry.queries
     val names = sys.env.get("SPARK_GRAFT_BENCH_ONLY") match {
       case Some(only) => only.split(",").map(_.trim).filter(all.contains).toSeq
@@ -209,8 +211,8 @@ object Bench {
         "(per-table costs in view_build_sec)")
     clearSlate()
     System.gc()
-    canary() // untimed codegen warm: canary_first must measure the host, not JIT
-    val canaryFirst = canary()
+    canary(spark) // untimed codegen warm: canary_first must measure the host, not JIT
+    val canaryFirst = canary(spark)
     // Mid-session canary stamps (r12 verdict #2): the open/close canaries
     // cannot see a degraded EPISODE inside a ~11-minute session (S8's
     // e9 = 25.4 s and S12's g5 = 8.1 s had clean canaries both ends and
@@ -248,7 +250,7 @@ object Bench {
       sinceStamp += 1
       if (sinceStamp >= 50) {
         sinceStamp = 0
-        canaryMids += ((names.indexOf(name) + 1) -> canary())
+        canaryMids += ((names.indexOf(name) + 1) -> canary(spark))
       }
       // Per-query progress on stderr (stdout stays the single JSON line);
       // failures and timeouts are marked, not silently timed.
@@ -311,7 +313,7 @@ object Bench {
         }
         walls.mkString(""","e9_variant_sec":{""", ",", "}")
       } else ""
-    val canaryLastRaw = canary()
+    val canaryLastRaw = canary(spark)
     // Session-aging control (r12): across EVERY full-registry session
     // since the canary exists (r10: 1, r11: 4, r12: 3), the closing
     // canary read 0.36–0.56 s REGARDLESS of the opening (0.11–0.49) —
@@ -325,7 +327,7 @@ object Bench {
     clearSlate()
     System.gc()
     Thread.sleep(1000)
-    val canaryLast = canary()
+    val canaryLast = canary(spark)
     // Canary COMMIT gate (r10 verdict #1): the r10 round committed a
     // best-of-five artifact taken entirely inside a degraded host day and
     // every perf conclusion had to be rescued by hand. The healthy

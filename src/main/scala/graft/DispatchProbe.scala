@@ -56,16 +56,6 @@ object DispatchProbe {
   private val passes: Int =
     sys.env.getOrElse("SPARK_GRAFT_PROBE_PASSES", "2").toInt
 
-  /** Bench's canary fold — per-leg host-window stamp. */
-  private def canary(s: SparkSession): Double = {
-    val t0 = System.nanoTime()
-    s.range(0L, 200000000L, 1L, 64)
-      .selectExpr(
-        "sum(((id % 1000003) * 2654435761 + shiftright(id, 13)) % 999983)")
-      .collect()
-    (System.nanoTime() - t0) / 1e9
-  }
-
   /** Operator-shape fingerprint: counts of physical node names in the
     * formatted plan, partition numbers stripped — two legs whose maps
     * match run the same plan, only sized differently.
@@ -88,7 +78,7 @@ object DispatchProbe {
       try {
         // JIT/codegen warm (first leg pays it; later legs confirm warmth)
         s.range(1000).selectExpr("sum(id * 2)").collect()
-        val c0 = canary(s)
+        val c0 = Bench.canary(s)
         val walls = subset.map { name =>
           val q = SparkEntry.queries(name)
           def once(): Double = {
@@ -101,7 +91,7 @@ object DispatchProbe {
           Memo.reset(s); System.gc()
           name -> w
         }
-        val c1 = canary(s)
+        val c1 = Bench.canary(s)
         val total = walls.map(_._2).sum
         val qs = walls.map { case (k, v) => f""""$k":$v%.3f""" }
           .mkString("{", ",", "}")

@@ -67,6 +67,20 @@ object Quantizer {
       .agg(sum(col("bit")).as("sketch"))
   }
 
+  /** Multi-probe keys: every `sketch` of `queries` XORed with each of the
+    * `nPlanes`-bit masks of popcount ≤ `radius` — the Hamming-`radius`
+    * ball around the query's bucket, enumerated as literals (a
+    * config-bounded probe set, never a corpus-sized structure). Returns
+    * (sketch, carry…).
+    */
+  def probeRing(queries: DataFrame, radius: Int, nPlanes: Int, carry: String*): DataFrame = {
+    val masks = (0 until (1 << nPlanes)).filter(m => Integer.bitCount(m) <= radius)
+    queries
+      .select((explode(array(masks.map(m => lit(m.toLong)): _*)).as("mask") +:
+        col("sketch") +: carry.map(col)): _*)
+      .select((col("sketch").bitwiseXOR(col("mask")).as("sketch") +: carry.map(col)): _*)
+  }
+
   /** The first `k` rows of every `by` group in draw order, ranked 1..k in
     * `rankCol`.
     */

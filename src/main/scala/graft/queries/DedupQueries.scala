@@ -176,16 +176,42 @@ object DedupQueries {
     * (key, int, 32-char fp) — the window-granular twin of the posting
     * table a 100 TB exact-substring pass keeps anyway.
     */
-  private[graft] def winFpTable(s: SparkSession, dir: String, w: Int): org.apache.spark.sql.DataFrame = {
+  private[graft] def winFpTable(s: SparkSession, dir: String, w: Int): org.apache.spark.sql.DataFrame =
     graft.sources.MatView.of(s, dir, s"winfp$w", "doc_id", PairBuckets) {
-      t(s, dir, "documents")
-        .select(col("doc_id"), Text.tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= w)
-        .select(col("doc_id"),
-          explode(sequence(lit(0), size(col("t")) - w)).as("p"), col("t"))
-        .select(col("doc_id"), col("p"),
-          md5(concat_ws(" ", slice(col("t"), col("p") + 1, lit(w)))).as("fp"))
+      windowFps(t(s, dir, "documents"), w)
     }
+
+  /** The stride-1 w-token window fingerprints (doc_id, p, fp) of any
+    * (doc_id, text) frame: `fp` is the md5 of tokens p..p+w-1, and a
+    * document shorter than w tokens has no window. [[winFpTable]] stores
+    * it for the corpus; the span ingest gate derives it per epoch.
+    */
+  private[graft] def windowFps(docs: org.apache.spark.sql.DataFrame, w: Int): org.apache.spark.sql.DataFrame =
+    docs
+      .select(col("doc_id"), Text.tokens(col("text")).as("t"))
+      .filter(size(col("t")) >= w)
+      .select(col("doc_id"),
+        explode(sequence(lit(0), size(col("t")) - w)).as("p"), col("t"))
+      .select(col("doc_id"), col("p"),
+        md5(concat_ws(" ", slice(col("t"), col("p") + 1, lit(w)))).as("fp"))
+
+  /** Per-doc coverage of duplicated w-token windows (doc_id, p): `nDup`
+    * counts the windows and `cov` the tokens their [p, p+w) intervals
+    * cover, as an exact interval union — a per-doc running max of the
+    * previous window's end (gaps-and-islands), never a w-fold position
+    * explode. Shared by d10 and the span ingest gate.
+    */
+  private[graft] def spanCoverage(dup: org.apache.spark.sql.DataFrame, w: Int,
+      nDup: String, cov: String): org.apache.spark.sql.DataFrame = {
+    val prior = org.apache.spark.sql.expressions.Window
+      .partitionBy("doc_id").orderBy("p")
+      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    dup
+      .withColumn("prev_end", coalesce(max(col("p") + (w - 1)).over(prior), lit(-1)))
+      .withColumn("contrib",
+        greatest(lit(0), col("p") + (w - 1) - greatest(col("p") - 1, col("prev_end"))))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as(nDup), sum(col("contrib").cast("long")).as(cov))
   }
 
   /** The corpus's WIDE token-signature table `(doc_id, sim1, sim2)` —
@@ -203,25 +229,31 @@ object DedupQueries {
     * O(docs) rows of (key, two longs) — far smaller than the posting
     * tables already materialized.
     */
-  private[graft] def dualSimsTable(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def dualSimsTable(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
     graft.sources.MatView.of(s, dir, "dualsims", "doc_id", PairBuckets) {
-      t(s, dir, "documents")
-        .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
-        .select(col("doc_id"),
-          Text.tokenHash60(col("tok")).as("h1"),
-          Text.seededHash64(lit(2), col("tok")).as("h2"),
-          // d4's 32-bit signature (r12): same tokenHash32 → simhashAgg
-          // derivation verbatim, so d4 reads the shared view instead of
-          // re-running the token explode + vote aggregate per query —
-          // the r11 d21/d22 treatment extended to the third signature
-          // this corpus maintains. One explode serves all three legs.
-          Text.tokenHash32(col("tok")).as("h3"))
-        .groupBy("doc_id")
-        .agg(Text.simhashAgg(col("h1"), 60).as("sim1"),
-          Text.simhashAgg(col("h2"), 60).as("sim2"),
-          Text.simhashAgg(col("h3")).as("sim32"))
+      dualSims(t(s, dir, "documents"))
     }
-  }
+
+  /** [[dualSimsTable]]'s derivation over any (doc_id, text) frame. A
+    * caller that selects one signature gets only its hash and vote
+    * aggregate: column pruning drops the other legs.
+    */
+  private[graft] def dualSims(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    docs
+      .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
+      .select(col("doc_id"),
+        Text.tokenHash60(col("tok")).as("h1"),
+        Text.seededHash64(lit(2), col("tok")).as("h2"),
+        // d4's 32-bit signature (r12): same tokenHash32 → simhashAgg
+        // derivation verbatim, so d4 reads the shared view instead of
+        // re-running the token explode + vote aggregate per query —
+        // the r11 d21/d22 treatment extended to the third signature
+        // this corpus maintains. One explode serves all three legs.
+        Text.tokenHash32(col("tok")).as("h3"))
+      .groupBy("doc_id")
+      .agg(Text.simhashAgg(col("h1"), 60).as("sim1"),
+        Text.simhashAgg(col("h2"), 60).as("sim2"),
+        Text.simhashAgg(col("h3")).as("sim32"))
 
   private[graft] def d3Pairs(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     graft.sources.MatView.of(s, dir, "d3_pairs", "a", PairBuckets) {
@@ -614,15 +646,7 @@ object DedupQueries {
       val wins = winFpTable(s, dir, w)
       val census = wins.groupBy("fp").agg(count(lit(1)).as("c"))
       val dup = wins.join(census, Seq("fp")).filter(col("c") > 1).select("doc_id", "p")
-      val prior = org.apache.spark.sql.expressions.Window
-        .partitionBy("doc_id").orderBy("p")
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
-      val cov = dup
-        .withColumn("prev_end", coalesce(max(col("p") + (w - 1)).over(prior), lit(-1)))
-        .withColumn("contrib",
-          greatest(lit(0), col("p") + (w - 1) - greatest(col("p") - 1, col("prev_end"))))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_dup_windows"), sum(col("contrib").cast("long")).as("covered"))
+      val cov = spanCoverage(dup, w, "n_dup_windows", "covered")
       val wstats = wins.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
       docsT
         .join(wstats, Seq("doc_id"), "left")

@@ -2708,16 +2708,7 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val sketches = Quantizer.signSketch(emb, nPlanes)
-      // Probe keys: every XOR mask of popcount ≤ radius applied to the
-      // query's bucket — the Hamming-R ball, enumerated as literals
-      // (the ball is a config-bounded probe set, never a corpus-sized
-      // structure).
-      val masks = (0 until (1 << nPlanes)).filter(m => Integer.bitCount(m) <= radius)
-      val probeKeys = sketches
-        .filter(col("vec_id") === 0)
-        .select(explode(array(masks.map(m => lit(m.toLong)): _*)).as("mask"),
-          col("sketch"))
-        .select(col("sketch").bitwiseXOR(col("mask")).as("sketch"))
+      val probeKeys = Quantizer.probeRing(sketches.filter(col("vec_id") === 0), radius, nPlanes)
       val qv = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
       sketches
         .join(broadcast(probeKeys), Seq("sketch"), "left_semi")

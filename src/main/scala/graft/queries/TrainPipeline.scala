@@ -564,9 +564,7 @@ object TrainPipeline {
     * under corpus inflation.
     */
   def curriculumPlan(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val q20d = (1L << 20).toDouble
-    val scored = TextAnalysis.quality(docs)
-      .select(col("doc_id"), round(col("quality") * q20d).cast("long").as("qq"))
+    val scored = qualityBuckets(docs)
     // the census is ≤ 2^20 rows: persist it so the cum window, the total,
     // and nothing else re-runs the tokenizing quality scan (scored itself
     // is scanned once here and once in the join-back below)
@@ -587,6 +585,14 @@ object TrainPipeline {
       .withColumn("pos", row_number().over(w).cast("long"))
       .select("phase", "shard", "pos", "doc_id", "qq")
   }
+
+  /** c10's quality score bucket per document (doc_id, qq): x3's quality
+    * quantized to 2^-20. Its distinct `qq` values are the census the
+    * quartile window runs over.
+    */
+  private[graft] def qualityBuckets(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
+    TextAnalysis.quality(docs)
+      .select(col("doc_id"), round(col("quality") * (1L << 20).toDouble).cast("long").as("qq"))
 
   val c10Curriculum: Q = Q(
     "c10_curriculum",

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.functions.Text
+import graft.queries.DedupQueries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -19,7 +20,9 @@ import org.apache.spark.sql.types._
   * Every gate below keeps only its admission logic: the stream, its
   * census compaction and every sink write and census probe go through
   * [[Epoch]], whose `batch_id=` protocol makes at-least-once replays
-  * rewrite rather than duplicate.
+  * rewrite rather than duplicate. Each gate persists what it admits before
+  * writing it to the corpus and the census, so an epoch probes the stored
+  * census once, not once per write.
   */
 object CorpusIngest {
 
@@ -96,9 +99,10 @@ object CorpusIngest {
         maxCensusParts) { (raw, batchId) =>
       val batch = firstPer(raw.withColumn("fp", prefixFp), "fp", col("doc_id"))
       val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch)(census =>
-        batch.join(census.select("fp"), Seq("fp"), "left_anti"))
+        batch.join(census.select("fp"), Seq("fp"), "left_anti")).persist()
       Epoch.write(admitted, corpusDir, batchId)
       Epoch.write(admitted.select("fp"), censusDir, batchId)
+      admitted.unpersist()
     }
 
   /** The admitted corpus as one DataFrame (all epochs). */
@@ -153,10 +157,11 @@ object CorpusIngest {
         batch
           .join(exactHit, Seq("fp"), "left_anti")
           .join(fuzzyHit, Seq("doc_id"), "left_anti")
-      }
+      }.persist()
       Epoch.write(admitted, corpusDir, batchId)
       Epoch.write(bands.join(admitted.select("doc_id"), Seq("doc_id"))
         .select(col("fp"), col("band"), col("bkey")), censusDir, batchId)
+      admitted.unpersist()
       batch.unpersist()
     }
 
@@ -216,13 +221,7 @@ object CorpusIngest {
         size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
       // One tokenize+window pass, scanned by the within-batch census,
       // the census probe and the per-doc stats (d10's persist pattern).
-      val wins = batch
-        .select(col("doc_id"), Text.tokens(col("text")).as("t"))
-        .filter(size(col("t")) >= w)
-        .select(col("doc_id"),
-          explode(sequence(lit(0), size(col("t")) - w)).as("p"), col("t"))
-        .select(col("doc_id"), col("p"),
-          md5(concat_ws(" ", slice(col("t"), col("p") + 1, lit(w)))).as("fp"))
+      val wins = DedupQueries.windowFps(batch, w)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       wins.count()
       val batchCensus = wins.groupBy("fp").agg(count(lit(1)).as("c"))
@@ -242,23 +241,11 @@ object CorpusIngest {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       flagged.count()
 
-      val prior = Window.partitionBy("doc_id").orderBy("p")
-        .rowsBetween(Window.unboundedPreceding, -1)
-      def coverage(dup: DataFrame, nDup: String, cov: String): DataFrame =
-        dup
-          .withColumn("prev_end",
-            coalesce(max(col("p") + (w - 1)).over(prior), lit(-1)))
-          .withColumn("contrib", greatest(lit(0),
-            col("p") + (w - 1) - greatest(col("p") - 1, col("prev_end"))))
-          .groupBy("doc_id")
-          .agg(count(lit(1)).as(nDup),
-            sum(col("contrib").cast("long")).as(cov))
-
-      val covAny = coverage(
-        flagged.filter(col("dup_any")).select("doc_id", "p"),
+      val covAny = DedupQueries.spanCoverage(
+        flagged.filter(col("dup_any")).select("doc_id", "p"), w,
         "n_dup_windows", "covered")
-      val covCross = coverage(
-        flagged.filter(col("dup_cross")).select("doc_id", "p"),
+      val covCross = DedupQueries.spanCoverage(
+        flagged.filter(col("dup_cross")).select("doc_id", "p"), w,
         "n_cross_windows", "cross_covered")
       val wstats = wins.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
       val stats = docsT
@@ -287,11 +274,13 @@ object CorpusIngest {
       Epoch.write(batch
         .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id")),
         corpusDir, batchId)
+      Epoch.write(stats, statsDir, batchId)
+      // Last: a write re-caches every cached plan that reads its path, so
+      // any write after this one would rebuild `flagged` and re-probe.
       Epoch.write(wins
         .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id"),
           "left_semi")
         .select("fp").distinct(), censusDir, batchId)
-      Epoch.write(stats, statsDir, batchId)
       stats.unpersist(); flagged.unpersist(); wins.unpersist()
       batch.unpersist()
     }
@@ -404,13 +393,14 @@ object CorpusIngest {
             .filter(expr(s"bit_count(sketch ^ stored_sketch) <= $maxHamming"))
             .select("vec_id").distinct()
           batch.join(rejected, Seq("vec_id"), "left_anti")
-      }
-      Epoch.write(admitted.select(col("vec_id"), col("embedding"), col("label")),
-        corpusDir, batchId)
-      Epoch.write(bands
-        .join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
-        .select(col("k"), col("val"), col("sketch")), censusDir, batchId)
-      sketches.unpersist()
+        }.persist()
+        Epoch.write(admitted.select(col("vec_id"), col("embedding"), col("label")),
+          corpusDir, batchId)
+        Epoch.write(bands
+          .join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
+          .select(col("k"), col("val"), col("sketch")), censusDir, batchId)
+        admitted.unpersist()
+        sketches.unpersist()
       }
       batch.unpersist()
     }
@@ -494,7 +484,7 @@ object CorpusIngest {
         batch
           .join(exactHit, Seq("fp"), "left_anti")
           .join(fuzzyHit, Seq("doc_id"), "left_anti")
-      }
+      }.persist()
       Epoch.write(admitted, corpusDir, batchId)
       // census delta: band rows for framed payloads + one k = -1 row per
       // admitted doc so empty payloads still hit the exact gate
@@ -503,6 +493,7 @@ object CorpusIngest {
         .select(col("fp"), col("k"), col("byte"), col("simhash"))
         .unionByName(admitted.select(col("fp"), lit(-1).as("k"),
           lit(-1L).as("byte"), lit(0L).as("simhash"))), censusDir, batchId)
+      admitted.unpersist()
       sims.unpersist()
       batch.unpersist()
     }

@@ -74,6 +74,65 @@ class CorpusIngestReplaySpec extends SparkSpec {
   private def dataFiles(dir: String): Set[String] =
     new File(dir).list().filter(_.startsWith("part-")).toSet
 
+  /** Query executions during `body` that ran a scan of the parquet sink at
+    * `dir`. Cached plans are walked too, and a scan counts only in the
+    * execution that moved its row metric, so a cache read is no scan.
+    */
+  private def scansRun(dir: String)(body: => Unit): Int = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val root = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+    val fence = s"fence-${System.nanoTime()}"
+    val rows = scala.collection.mutable.Map.empty[Long, Long]
+    val runs = new java.util.concurrent.atomic.AtomicInteger()
+    @volatile var fenced = false
+    val listener = new QueryExecutionListener with AdaptiveSparkPlanHelper {
+      private def scans(p: SparkPlan): Seq[FileSourceScanExec] = collect(p) {
+        case s: FileSourceScanExec => Seq(s)
+        case c: InMemoryTableScanExec => scans(c.relation.cachedPlan)
+      }.flatten
+      // the listener bus delivers one event at a time, in order
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.toString.contains(fence)) fenced = true
+        else {
+          val moved = scans(qe.executedPlan)
+            .filter(_.relation.location.rootPaths.exists(_.toUri.getPath == root))
+            .map(_.metrics("numOutputRows"))
+            .count { m =>
+              val before = rows.getOrElse(m.id, 0L)
+              rows(m.id) = m.value
+              m.value > before
+            }
+          if (moved > 0) runs.incrementAndGet()
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // registered before the start, so the stream's cloned session has it too
+    spark.listenerManager.register(listener)
+    try {
+      body
+      spark.sql(s"SELECT '$fence' AS fence").collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!fenced && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(fenced, "listener never saw the fence query")
+      runs.get
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  gates.foreach { g =>
+    test(s"${g.name} gate: an epoch probes the stored census once") {
+      val root = Files.createTempDirectory(s"probe-${g.name}").toString
+      Files.createDirectories(Paths.get(s"$root/in"))
+      g.epochs.head(s"$root/in")
+      g.start(root).awaitTermination(180000)
+      g.epochs(1)(s"$root/in")
+      val probes = scansRun(s"$root/census")(g.start(root).awaitTermination(180000))
+      assert(probes == 1, s"epoch 1 scanned the census in $probes queries")
+    }
+  }
+
   gates.foreach { g =>
     test(s"${g.name} gate: a replayed epoch rewrites its own partitions and every " +
       "sink equals the clean run") {

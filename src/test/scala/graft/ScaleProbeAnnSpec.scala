@@ -23,7 +23,7 @@ class ScaleProbeAnnSpec extends SparkSpec {
   }
 
   test("annBalancedProbe completes for every factor") {
-    assertLegs(probeLines(ScaleProbe.annBalancedProbe(spark, sf)), "annbal")
+    assertLegs(probeLines(ScaleProbe.annBalancedProbe(spark, sf)), "annbal", "annbal_nosplit")
   }
 
   test("annClusteredProbe completes in both cap modes for every factor") {
