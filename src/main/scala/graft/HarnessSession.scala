@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the measurement and verification mains
-  * (Bench, Verify, PlanDump, DispatchProbe, ScaleProbe): `local[cpus]`
-  * with `cpus` shuffle partitions, UTC, and the settings below. `extra`
-  * is applied last, so it may override any of them.
+  * (Bench, Verify, Plans, ScaleProbe): `local[cpus]` with `cpus` shuffle
+  * partitions, UTC, and the settings below. `extra` is applied last, so
+  * it may override any of them. ScaleProbe's dispatch leg varies runtime
+  * SQL confs on `newSession()`s of one such session.
   */
 object HarnessSession {
 

@@ -1,30 +1,49 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
 
-/** Plan-evidence dump: executes the annotated queries at sf0.001 and
-  * writes each POST-AQE physical plan (the plan that actually ran, not the
-  * initial estimate) to PLANS.md, annotated with the property the plan is
-  * expected to exhibit. Regenerate with:
+import graft.plans.AsOfJoinExec
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning,
+  RoundRobinPartitioning, SinglePartition}
+import org.apache.spark.sql.execution.{CollectLimitExec, CollectTailExec, FileSourceScanExec,
+  FormattedMode, GenerateExec, GlobalLimitExec, LocalLimitExec, SortExec, SparkPlan,
+  TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec,
+  ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec}
+
+/** The one plan record and the one plan-dump entry point.
   *
-  *   sbt "runMain graft.Plans"
+  * The record is [[signature]]: the executed plan's node census, one
+  * sorted `Node=count` list per query. `PLANS.md` holds one signature line
+  * for every registry query, taken at sf0.001, and RegistrySpec recomputes
+  * each one in the test named after its query, so a plan change shows up
+  * as a failing test and, once regenerated, as a one-line diff.
   *
-  * SELECTION RULE (round 7, closing the r6 "plan-evidence lags the
-  * registry" gap): the annotated set is exactly every registry query
-  * whose 100 TB scale claim rests on a PLAN property — operationally,
-  * every query PlanSpec asserts a physical/optimized-plan property for,
-  * plus family representatives. A registry query with NO annotation is
-  * excluded by rule, not by omission: its scale argument is value-level
-  * (exact integer arithmetic, bounded output, reuse of an annotated
-  * family member's shape) and a plan dump would add no evidence —
-  * RegistrySpec mechanically asserts the rule (every PlanSpec-referenced
-  * query name must appear here), so the annotated set cannot silently
-  * fall behind the asserted set again.
+  *   sbt "runMain graft.Plans"                                  # PLANS.md
+  *   sbt "runMain graft.Plans <sfDir> <outDir> <suffix> <name,...>"
   *
-  * The same properties are ASSERTED (not just displayed) in PlanSpec; this
-  * artifact exists so a reviewer can read the actual operator trees.
+  * The second form writes `explain("formatted")` of each named query,
+  * before execution and through [[canonical]], to
+  * `<outDir>/<name>_<suffix>.txt` (the `plans/r{N}/<name>_{before,after}.txt`
+  * evidence of an optimization round), on `SPARK_GRAFT_CPUS` cores
+  * (default 32). An unknown name exits 1 before anything runs.
+  *
+  * SELECTION RULE for the notes: every registry query whose 100 TB scale
+  * claim rests on a PLAN property carries one in [[annotated]], printed
+  * under its signature line — operationally, every query PlanSpec asserts
+  * a physical/optimized-plan property for, plus family representatives.
+  * RegistrySpec scrapes PlanSpec and requires each of those queries here.
+  * A query without a note is excluded by rule, not by omission: its scale
+  * argument is value-level (exact integer arithmetic, bounded output,
+  * reuse of an annotated family member's shape).
   */
-object Plans {
+object Plans extends AdaptiveSparkPlanHelper {
 
   /** query → the scale property a reader should verify in its plan. */
   val annotated: Seq[(String, String)] = Seq(
@@ -413,41 +432,122 @@ object Plans {
       .replaceAll("""QueryStage \d+""", "QueryStage _")
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sb = new StringBuilder
-    sb.append("# PLANS — post-AQE physical plans of representative queries\n\n")
-    sb.append(s"Generated by `graft.Plans` at `$sfDir`. Each plan below is the\n")
-    sb.append("final adaptive plan of the executed query; the stated property is\n")
-    sb.append("asserted mechanically in `PlanSpec`.\n\n")
-    sb.append("SELECTION RULE: every registry query whose 100 TB scale claim\n")
-    sb.append("rests on a PLAN property (operationally: every query PlanSpec\n")
-    sb.append("asserts a plan property for, plus family representatives) is\n")
-    sb.append("annotated here — RegistrySpec mechanically enforces that\n")
-    sb.append("coverage. A registry query absent from this file is excluded by\n")
-    sb.append("rule: its scale argument is value-level (exact integer\n")
-    sb.append("arithmetic, bounded output, or reuse of an annotated family\n")
-    sb.append("member's plan shape), and a dump would add no evidence.\n")
-    annotated.foreach { case (name, note) =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.collect() // finalize AQE
-      val s = canonical(df.queryExecution.executedPlan.toString)
-      val cut = s.indexOf("== Initial Plan ==")
-      val plan = (if (cut >= 0) s.substring(0, cut) else s).linesIterator
-        .take(48).mkString("\n")
-      sb.append(s"\n## $name\n\n$note\n\n```\n$plan\n```\n")
+  /** Counted node kinds: exchanges by partitioning, sorts, windows
+    * (unpartitioned apart), joins and aggregates by operator, generates,
+    * limits, cached scans and file scans. A reused exchange and a cached
+    * scan are leaves: the exchange it reuses and the cached plan are not
+    * walked.
+    */
+  private val kind: PartialFunction[SparkPlan, String] = {
+    case e: ShuffleExchangeLike => "Exchange." + (e.outputPartitioning match {
+      case _: HashPartitioning => "hash"
+      case _: RangePartitioning => "range"
+      case SinglePartition => "single"
+      case _: RoundRobinPartitioning => "roundrobin"
+      case p => p.getClass.getSimpleName
+    })
+    case _: BroadcastExchangeLike => "Exchange.broadcast"
+    case _: ReusedExchangeExec => "ReusedExchange"
+    case _: SortExec => "Sort"
+    case w: WindowExec => if (w.partitionSpec.isEmpty) "Window.unpartitioned" else "Window"
+    case p @ (_: BaseJoinExec | _: AsOfJoinExec | _: BaseAggregateExec | _: GenerateExec |
+        _: TakeOrderedAndProjectExec | _: CollectLimitExec | _: CollectTailExec |
+        _: GlobalLimitExec | _: LocalLimitExec | _: WindowGroupLimitExec) => p.nodeName
+    case _: InMemoryTableScanExec => "InMemoryTableScan"
+    case _: FileSourceScanExec => "FileScan"
+  }
+
+  /** `plan`'s node census as a sorted `Node=count` list, walked through
+    * adaptive plans, query stages and subqueries. It keeps no order,
+    * expression or partition count, so it reads the same for two plans
+    * that differ only in child order or in AQE's coalescing.
+    */
+  def signature(plan: SparkPlan): String =
+    collectWithSubqueries(plan)(kind).groupBy(identity).toSeq
+      .map { case (k, v) => s"$k=${v.size}" }.sorted.mkString(" ")
+
+  /** `df`'s executed plan, after a `collect()`: AQE finalizes a frame's
+    * own plan only when that frame runs (`head()` or `count()` run a
+    * derived plan and leave it at the initial one).
+    */
+  def executed(df: DataFrame): SparkPlan = {
+    df.collect()
+    df.queryExecution.executedPlan
+  }
+
+  def main(args: Array[String]): Unit = args match {
+    case Array() => writePlansMd()
+    case Array(sfDir, outDir, suffix, names) =>
+      dump(sfDir, outDir, suffix, names.split(",").map(_.trim).toSeq)
+    case _ =>
+      System.err.println("usage: graft.Plans [<sfDir> <outDir> <suffix> <name,...>]")
+      sys.exit(2)
+  }
+
+  /** Regenerates PLANS.md: every registry query runs from a clean slate
+    * at sf0.001, as in RegistrySpec.
+    */
+  private def writePlansMd(): Unit = {
+    val sfDir = "/root/testdata/sf0.001"
+    val spark = HarnessSession("4")
+    val notes = annotated.toMap
+    val sb = new StringBuilder(
+      """# PLANS — one plan signature per registry query
+        |
+        |Generated by `sbt "runMain graft.Plans"` at sf0.001. RegistrySpec's
+        |`<name> executes at sf0.001` test recomputes each line and fails on
+        |any difference, so a plan change shows up as a one-line diff here.
+        |
+        |SIGNATURE: the executed (post-AQE) plan's node census, `Node=count`
+        |sorted by node, walked through adaptive plans, query stages and
+        |subqueries. It counts exchanges by partitioning (`Exchange.hash`,
+        |`.range`, `.single`, `.roundrobin`, `.broadcast`) and reused
+        |exchanges, sorts, windows (`Window.unpartitioned` apart), joins and
+        |aggregates by operator, generates, limits (`TakeOrderedAndProject`,
+        |`CollectLimit`, `GlobalLimit`, `LocalLimit`, `WindowGroupLimit`),
+        |cached scans (`InMemoryTableScan`, its cached plan not walked) and
+        |file scans (`FileScan`).
+        |
+        |SELECTION RULE for the notes: every registry query whose 100 TB
+        |scale claim rests on a PLAN property (operationally: every query
+        |PlanSpec asserts a plan property for, plus family representatives)
+        |carries a note under its line, and PlanSpec asserts the property.
+        |A query without a note is excluded by rule: its scale argument is
+        |value-level (exact integer arithmetic, bounded output, or reuse of
+        |an annotated family member's plan shape).
+        |
+        |""".stripMargin)
+    SparkEntry.registry.foreach { q =>
+      Memo.reset(spark)
+      sb.append(s"- ${q.name}: ${signature(executed(q.fn(spark, sfDir)))}\n")
+      notes.get(q.name).foreach(n => sb.append(s"  $n\n"))
     }
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("PLANS.md"), sb.toString)
-    println(s"wrote PLANS.md (${annotated.size} plans)")
+    Files.writeString(Paths.get("PLANS.md"), sb.toString)
+    println(s"wrote PLANS.md (${SparkEntry.registry.size} signatures, ${notes.size} notes)")
+    spark.stop()
+  }
+
+  private def dump(sfDir: String, outDir: String, suffix: String, names: Seq[String]): Unit = {
+    // A misspelled name must not silently produce no plan file: missing
+    // before/after evidence then goes unnoticed.
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    if (unknown.nonEmpty) {
+      System.err.println(s"[plans] ERROR: not in SparkEntry.queries: ${unknown.mkString(", ")}")
+      sys.exit(1)
+    }
+    val spark = HarnessSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { name =>
+      try {
+        val txt = SparkEntry.queries(name)(spark, sfDir).queryExecution.explainString(FormattedMode)
+        Files.writeString(Paths.get(outDir, s"${name}_$suffix.txt"),
+          canonical(s"== $name @ $sfDir ==\n$txt"))
+        System.err.println(s"[plans] wrote $name")
+      } catch { case e: Throwable =>
+        System.err.println(s"[plans] $name failed: ${e.getMessage}")
+      }
+      Memo.reset(spark)
+    }
     spark.stop()
   }
 }

@@ -22,8 +22,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * saturation), mvrefresh (MatView append refresh and compaction), skew
   * (planted hot key), cc (d5's two CC strategies), sn (d4 sorted
   * neighborhood), span (d10 window census), cur (c10 quality census),
-  * graph (g4 label propagation), interval (j12 chunked range join) and
-  * lev (banded levenshtein).
+  * graph (g4 label propagation), interval (j12 chunked range join), lev
+  * (banded levenshtein) and dispatch (the dispatch floor under four
+  * partitioning/AQE postures).
   *
   * Every measurement prints one machine-readable line ([[report]]; the
   * committed PROBES artifacts collect them, SURVEY.md §6 discusses them).
@@ -53,7 +54,8 @@ object ScaleProbe {
     ("mvrefresh", mvRefreshProbe), ("skew", (s, _) => skewProbe(s)),
     ("cc", ccProbe), ("sn", snProbe), ("span", spanProbe),
     ("cur", curriculumProbe), ("graph", graphProbe),
-    ("interval", intervalProbe), ("lev", (s, _) => levProbe(s)))
+    ("interval", intervalProbe), ("lev", (s, _) => levProbe(s)),
+    ("dispatch", dispatchProbe))
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -220,6 +222,57 @@ object ScaleProbe {
       pairs.unpersist()
       report("lev", len, n, matches, banded,
         "builtin_sec" -> builtin, "speedup" -> f"${builtin / banded}%.1f")
+    }
+  }
+
+  /** The dispatch floor (at sf0.1 the 8-core bench leg beat the 32-core
+    * leg on most sub-second rows): a fixed non-view-backed subset
+    * (driver-looped, join-heavy and window paths) under four runtime-conf
+    * postures, each on its own `newSession()` of `spark`:
+    *  - base: the session's own conf (Bench's, under `main`);
+    *  - init256: AQE coalescing from 256 initial partitions, the cluster
+    *    posture (flat walls and equal signatures show the shipped conf is
+    *    not a local tuning artifact);
+    *  - shuf256: the same posture through `spark.sql.shuffle.partitions`;
+    *  - aqe_off: AQE's per-stage replanning priced on small queries.
+    *
+    * Two interleaved passes, because the first pass's first posture pays
+    * residual JIT and codegen warmup for every query class. Each query
+    * takes the best of two clean-slate runs to its executed plan. One line
+    * per pass and posture: probe `dispatch_<posture>`, factor = pass,
+    * n = queries, aux = queries whose [[Plans.signature]] differs from the
+    * pass's base, sec = summed walls, then each query's wall (`queries`)
+    * and signature (`plan_shape`).
+    */
+  def dispatchProbe(spark: SparkSession, sfDir: String): Unit = {
+    val subset = Seq("q01_pricing_summary", "h16_parkinson_vol", "e27_range_search",
+      "m4_media_dedup", "x23_bpe_train", "x11_bigram_surprisal", "x33_bpe_vocab",
+      "q15_sql_recursive", "e25_ivf_balanced", "x34_bpe_encode")
+    val postures = Seq(
+      "base" -> Map.empty[String, String],
+      "init256" -> Map("spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "256"),
+      "shuf256" -> Map("spark.sql.shuffle.partitions" -> "256"),
+      "aqe_off" -> Map("spark.sql.adaptive.enabled" -> "false"))
+    for (pass <- 1 to 2) {
+      var base = Map.empty[String, String]
+      postures.foreach { case (posture, conf) =>
+        val s = spark.newSession()
+        conf.foreach { case (k, v) => s.conf.set(k, v) }
+        val c0 = Bench.canary(s)
+        val runs = subset.map { name =>
+          name -> best(Memo.reset(s))(timed(
+            Plans.signature(Plans.executed(SparkEntry.queries(name)(s, sfDir)))))
+        }
+        val c1 = Bench.canary(s)
+        Memo.reset(s)
+        val sigs = runs.map { case (name, (_, sig)) => name -> sig }.toMap
+        if (posture == "base") base = sigs
+        def obj(field: ((Double, String)) => String) =
+          runs.map { case (name, run) => s""""$name":${field(run)}""" }.mkString("{", ",", "}")
+        report(s"dispatch_$posture", pass, subset.size, sigs.count { case (k, v) => base(k) != v },
+          runs.map(_._2._1).sum, "canary_first_sec" -> f"$c0%.3f", "canary_last_sec" -> f"$c1%.3f",
+          "queries" -> obj(r => f"${r._1}%.3f"), "plan_shape" -> obj(r => s""""${r._2}""""))
+      }
     }
   }
 

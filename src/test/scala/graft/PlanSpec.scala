@@ -1988,4 +1988,41 @@ class PlanSpec extends SparkSpec {
       }
     }
   }
+
+  test("rank and total windows (e16, v20): e16's two unpartitioned rank " +
+    "windows sit directly above a limit of 20, and v20's census-total " +
+    "window receives at most the 16 buckets of `sketch & 15`") {
+    val e16 = executedTree("e16_hybrid_rrf")
+    val ranks = unpartitionedWindows(e16).filter(_.orderSpec.headOption.exists(
+      _.child.references.exists(a => a.name == "bm25" || a.name == "sim")))
+    assert(ranks.size == 2, s"e16: expected 2 rank windows, found ${ranks.size}\n$e16")
+    ranks.foreach { w =>
+      var n = w.child
+      while (passThrough(n) && kids(n).size == 1) n = kids(n).head
+      val limit = n match {
+        case t: TakeOrderedAndProjectExec => t.limit
+        case g: GlobalLimitExec => g.limit
+        case other => fail(s"e16: a rank window reads ${other.nodeName}, not a limit:\n$e16")
+      }
+      assert(limit == 20, s"e16: rank window above a limit of $limit, expected 20")
+    }
+
+    val v20 = executedTree("v20_embedding_drift")
+    val totals = unpartitionedWindows(v20).filter(_.orderSpec.isEmpty)
+    assert(totals.nonEmpty, s"v20: no census-total window\n$v20")
+    totals.foreach { w =>
+      var n = w.child
+      while (!n.metrics.contains("numOutputRows") && passThrough(n) && kids(n).size == 1)
+        n = kids(n).head
+      n match {
+        case a: org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+            if a.groupingExpressions.map(_.name) == Seq("bucket") =>
+        case other => fail(s"v20: the total window reads ${other.nodeName}, " +
+          s"not the bucket census:\n$v20")
+      }
+      val rows = n.metrics("numOutputRows").value
+      assert(rows > 0 && rows <= 16,
+        s"v20: the census-total window received $rows rows, more than 16 buckets\n$v20")
+    }
+  }
 }

@@ -7,6 +7,14 @@ class RegistrySpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** PLANS.md's signature lines (`- <name>: <signature>`), in file order. */
+  private lazy val committed: Seq[(String, String)] = {
+    val line = """^- ([a-z0-9_]+): ?(.*)$""".r
+    scala.io.Source.fromFile("PLANS.md", "UTF-8").getLines().collect {
+      case line(name, sig) => name -> sig
+    }.toSeq
+  }
+
   test("registry names are unique and oracle keys ⊆ query names") {
     val names = SparkEntry.registry.map(_.name)
     assert(names.distinct.size == names.size)
@@ -29,6 +37,55 @@ class RegistrySpec extends SparkSpec {
     assert(a.contains("/tmp/graft-mv-*/s0/graft_co_adj_x"), a)
     assert(a != Plans.canonical(plan(1, 1128, 45, 3, "7a50b5f7", "ccbde225")
       .replace("w#1131L, 4", "v#1135L, 4")), "distinct ids must stay distinct")
+  }
+
+  test("Plans.signature counts nodes inside query stages and subqueries, " +
+    "counts a cached scan once, and ignores child order") {
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    // A scalar subquery (global aggregate: single exchange) over an
+    // adaptive outer aggregate (hash exchange): both exchanges sit in
+    // query stages, the subquery's in its own adaptive plan.
+    val staged = spark.sql("SELECT id % 3 AS k, count(*) AS n FROM range(100) " +
+      "WHERE id > (SELECT max(id) FROM range(10)) GROUP BY id % 3")
+    val plan = Plans.executed(staged)
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec], plan)
+    assert(Plans.signature(plan) ==
+      "Exchange.hash=1 Exchange.single=1 HashAggregate=4", plan)
+
+    val cached = spark.range(1000).groupBy((col("id") % 7).as("k"))
+      .agg(count(lit(1)).as("n")).persist()
+    try {
+      cached.count()
+      assert(Plans.signature(Plans.executed(cached.filter(col("n") > 0))) ==
+        "InMemoryTableScan=1")
+      assert(Plans.signature(Plans.executed(cached.union(cached))) ==
+        "InMemoryTableScan=2")
+    } finally cached.unpersist()
+
+    val agg = spark.range(50).groupBy((col("id") % 5).as("k")).count()
+      .select(col("k"), col("count"))
+    val ranked = spark.range(50).select((col("id") % 5).as("k"),
+      max(col("id")).over(Window.partitionBy(col("id") % 5)).as("count"))
+    val ab = Plans.executed(agg.union(ranked))
+    val ba = Plans.executed(ranked.union(agg))
+    assert(ab.toString != ba.toString, "the two unions must differ in child order")
+    assert(Plans.signature(ab) == Plans.signature(ba))
+    assert(Plans.signature(ab) == "Exchange.hash=2 HashAggregate=2 Sort=1 Window=1", ab)
+  }
+
+  test("PLANS.md holds exactly one signature line per registry query and " +
+    "no stray lines") {
+    val names = SparkEntry.registry.map(_.name)
+    val lines = committed.map(_._1)
+    val dup = lines.diff(lines.distinct).distinct
+    assert(dup.isEmpty, s"queries with more than one PLANS.md line: $dup")
+    val missing = names.filterNot(lines.toSet)
+    assert(missing.isEmpty,
+      s"registry queries without a PLANS.md line (run `sbt \"runMain graft.Plans\"`): $missing")
+    val stray = lines.filterNot(names.toSet)
+    assert(stray.isEmpty, s"PLANS.md lines for unknown queries: $stray")
   }
 
   test("entry (flagship) returns rows on sf0.001") {
@@ -63,11 +120,21 @@ class RegistrySpec extends SparkSpec {
     assert(stray.isEmpty, s"annotations for unknown queries: $stray")
   }
 
+  /** Each query runs from a clean slate, as in `graft.Plans`, so its
+    * signature does not depend on what an earlier query left cached.
+    */
   SparkEntry.registry.foreach { q =>
     test(s"${q.name} executes at sf0.001") {
+      Memo.reset(spark)
       val df = q.fn(spark, sf)
       assert(df.columns.nonEmpty)
-      assert(df.count() >= 0)
+      val sig = Plans.signature(Plans.executed(df))
+      val want = committed.find(_._1 == q.name).map(_._2)
+      assert(want.contains(sig),
+        s"${q.name}: the executed plan's signature is not PLANS.md's line\n" +
+          s"  PLANS.md: ${want.getOrElse("(none)")}\n  executed: $sig\n" +
+          "If the plan change is intended, regenerate with `sbt \"runMain graft.Plans\"` " +
+          "and review the diff.")
     }
   }
 

@@ -30,7 +30,9 @@ class ScaleProbeSpec extends SparkSpec {
       "cur" -> Map("cur" -> f),
       "graph" -> Map("graph" -> f),
       "interval" -> Map("interval" -> f),
-      "lev" -> Map("lev" -> Seq(60, 250, 1000, 4000)))
+      "lev" -> Map("lev" -> Seq(60, 250, 1000, 4000)),
+      "dispatch" -> Seq("base", "init256", "shuf256", "aqe_off")
+        .map(p => s"dispatch_$p" -> Seq(1, 2)).toMap)
   }
 
   private val common =
