@@ -144,7 +144,7 @@ object Plans extends AdaptiveSparkPlanHelper {
     "q29_sql_cust_dist" ->
       "TPC-H Q13 shape: the priority predicate lives in the LEFT OUTER join's ON side, so the join stays outer and the zero-order customer group survives (count(o_orderkey) null semantics); per-customer counts and the c_count histogram both map-side combine.",
     "g4_label_prop" ->
-      "Synchronous label propagation: every round joins the SYMMETRIC adjacency on its bucket key `a` (r9 flip — zero Exchange on the edge side, asserted tree-level in PlanSpec) and groups neighbor labels by `b` through a two-level aggregation (first level map-side combinable); each round is persisted and lineage-truncated, so the final census reads a single ExistingRDD leaf — never a re-derivation from the raw scan — and rounds exit early at the label fixed point.",
+      "Synchronous label propagation: every round joins the SYMMETRIC adjacency on its bucket key `a` (r9 flip — zero Exchange on the edge side, asserted tree-level in PlanSpec) and groups neighbor labels by `b` through a two-level aggregation (first level map-side combinable); each round is a frame-owned pin (one cached-relation leaf), so the final census reads a single InMemoryTableScan — never a re-derivation from the raw scan — and rounds exit early at the label fixed point.",
     "q13_sql_min_cost" ->
       "TPC-H Q2 shape: the correlated per-part scalar min decorrelates into an aggregate + equi-join; supplier/nation dims broadcast; the p_size range pushes to the parquet scan.",
     "e25_ivf_balanced" ->
@@ -166,7 +166,7 @@ object Plans extends AdaptiveSparkPlanHelper {
     "x23_bpe_train" ->
       "BPE training: the corpus appears in exactly ONE map-side-combined word-census aggregate; all 4 merge rounds run on the vocab-bounded census, each round's argmax pair is a 1-row broadcast into a narrow codegen replace projection.",
     "g5_bfs_hops" ->
-      "Frontier BFS: each round is one semi-join of the adjacency against the new-nodes-only frontier plus one anti-join against visited — O(E) total edge touches across all rounds; state persists/truncates per round so the final hop census reads a single ExistingRDD leaf, and the loop exits on the first empty frontier.",
+      "Frontier BFS: each round is one semi-join of the adjacency against the new-nodes-only frontier plus one anti-join against visited — O(E) total edge touches across all rounds; each round's state is a frame-owned pin, so the final hop census reads a single InMemoryTableScan leaf, and the loop exits on the first empty frontier.",
     "a23_transitions" ->
       "Markov transitions: ONE lead window hash-partitioned on user_id, then a map-side-combined census on the ≤|types|² matrix cells; the row-total window orders only those bounded rows — the event stream shuffles once.",
     "p15_zorder_layout" ->
@@ -254,7 +254,7 @@ object Plans extends AdaptiveSparkPlanHelper {
     "a30_kmv_distinct" ->
       "Bottom-k sketch (TypedImperativeAggregate): ObjectHashAggregate with partial_graft_bottomk before the exchange and merge_graft_bottomk after — the <=k-long buffer combines map-side exactly like a builtin, and the distinct-count arm shares the plan.",
     "g10_hits" ->
-      "HITS fixed point: the returned plan reads the lineage-truncated persisted score table (ExistingRDD leaf, no fact rescan) through a TakeOrdered — all 2K half-rounds ran as map-side-combinable keyed sums whose 1-row rescale divisor is driver-held and inlined as a literal (narrow map, no broadcast subtree).",
+      "HITS fixed point: the returned plan reads the score table's frame-owned pin (one InMemoryTableScan leaf, no fact rescan) through a TakeOrdered — all 2K half-rounds ran as map-side-combinable keyed sums whose 1-row rescale divisor is driver-held and inlined as a literal (narrow map, no broadcast subtree).",
     "q19_sql_shipping_priority" ->
       "TPC-H Q3 shape: both date cuts in PushedFilters, segment-filtered customers broadcast, top-10 revenue via TakeOrderedAndProject over the grouped aggregate — never a global sort.",
     "q20_sql_supplier_census" ->
@@ -316,7 +316,7 @@ object Plans extends AdaptiveSparkPlanHelper {
     "g2_triangle_count" ->
       "Triangle counting: wedge and closing joins are equi-joins over the CACHED oriented edge table — no cartesian, three reads of one cache.",
     "g3_kcore" ->
-      "k-core peel: the final census reads the last peel round's LINEAGE-TRUNCATED edge set — an O(1)-deep ExistingRDD scan, never a parquet re-derivation; round 0 scans the bucketed adjacency table.",
+      "k-core peel: the final census reads the last peel round's pinned edge set — an O(1)-deep InMemoryTableScan that keeps the round's `a` partitioning (no Exchange before the census aggregate), never a parquet re-derivation; round 0 scans the bucketed adjacency table.",
     "g9_knn_graph" ->
       "kNN graph: candidates come from the band equi-join — no all-pairs operator anywhere, and the per-src top-5 rank window group-limits.",
     "h10_rolling_corr" ->
@@ -338,7 +338,7 @@ object Plans extends AdaptiveSparkPlanHelper {
     "q11_sql_nested_in" ->
       "Nested IN: IN decorrelates to a semi join and the correlated scalar sum becomes a grouped aggregate — no per-row rescan, no cartesian.",
     "q12_sql_top_supplier" ->
-      "Top supplier (TPC-H Q15 shape): the revenue aggregate's exchange is planned once and reused between the join input and the scalar max; shipdate range reaches the scan.",
+      "Top supplier (TPC-H Q15 shape): the revenue aggregate runs twice, once for the join input and once inside the scalar max (no ReusedExchange: lineitem is scanned twice, supplier once); shipdate range reaches the scan.",
     "q14_sql_window" ->
       "SQL window front door: the rank filter infers the same WindowGroupLimit as the DataFrame form (w3).",
     "q16_sql_disjunctive" ->

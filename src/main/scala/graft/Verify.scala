@@ -28,14 +28,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // Cache hygiene between queries (Bench's clean-slate discipline):
-      // per-query persists whose consumers live INSIDE the returned plan
-      // (d17's docs projection, e22's proj, c15's census, …) are done once
-      // the parquet write above materialized the result, but nothing
-      // unpersists them — over the full-registry session the
-      // MEMORY_AND_DISK entries accumulate and evict each other. Cleared
-      // by `Memo.reset`, which drops the memos together with the cache so
-      // no memoized plan silently recomputes through a dropped persist.
+      // Bench's clean-slate discipline: drop the shared Memo cells and
+      // their persisted tables, so each query runs as it would alone.
+      // Per-query pins need no reset: each is released by its builder
+      // or freed with the frame it belongs to.
       Memo.reset(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -40,13 +40,6 @@ object Text {
   def prefixFingerprint(toks: Column, n: Int): Column =
     md5(concat_ws(" ", slice(toks, 1, n)))
 
-  /** Seeded shingle hash for MinHash: md5("<seed>|<shingle>"). Lexicographic
-    * MIN over these hex strings is the signature — string min is total and
-    * engine-independent, unlike float or modular arithmetic.
-    */
-  def seededHash(seed: Column, shingle: Column): Column =
-    md5(concat(seed.cast("string"), lit("|"), shingle))
-
   /** 60-bit NUMERIC seeded hash: the first 15 hex chars of the md5, parsed
     * as a long. Numerically equal on every engine (DuckDB:
     * `CAST('0x' || substr(md5(...), 1, 15) AS BIGINT)`), and — the point —

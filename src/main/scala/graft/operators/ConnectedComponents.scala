@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Pin
 
 /** Distributed connected components by frontier-based min-label propagation
   * with pointer jumping — the Pregel shape for clustering duplicate graphs
@@ -18,14 +18,15 @@ import org.apache.spark.storage.StorageLevel
   *      O(diameter);
   *   3. the convergence test is FUSED into the label update: the new label
   *      table carries a `chg` flag and the round's single `count` both
-  *      materializes the persisted table and returns the changed-row count —
-  *      no separate `isEmpty` job re-running the join.
+  *      fills the round's pin and returns the changed-row count — no
+  *      separate `isEmpty` job re-running the join.
   *
-  * Lineage is truncated with a RELIABLE disk checkpoint every
-  * `checkpointEvery` rounds (fault-tolerant on a real cluster, unlike
-  * `localCheckpoint` whose blocks die with an executor), and each superseded
-  * label table is unpersisted as soon as its successor is materialized, so
-  * at most one round's blocks are pinned at a time.
+  * Each round is a frame-owned pin ([[graft.Pin.owned]]: O(1) plan, same
+  * recompute path), and the RDD lineage is cut with a RELIABLE disk
+  * checkpoint every `checkpointEvery` rounds (fault-tolerant on a real
+  * cluster, unlike `localCheckpoint` whose blocks die with an executor).
+  * The returned frame owns the pins since its last checkpoint; the edge
+  * list is a scoped pin, released when this call returns.
   *
   * Exactness: labels only decrease and only take node-id values reachable in
   * the component; on termination every (symmetric) edge is relaxed in both
@@ -70,87 +71,80 @@ object ConnectedComponents {
       sc.setCheckpointDir(
         System.getProperty("java.io.tmpdir") + "/graft-cc-checkpoint")
 
-    val trace = sys.env.contains("SPARK_GRAFT_CC_TRACE")
-    def timed[T](name: String)(f: => T): T = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (trace) System.err.println(
-        f"[cc] $name%-24s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
-      r
+    Pin.scoped { pin =>
+      val edges = pin(pairs.select(col("a"), col("b"))
+        .union(pairs.select(col("b").as("a"), col("a").as("b")))
+        .distinct())
+      // Materialize eagerly: the first round scans `edges` from several plan
+      // subtrees at once, and concurrent scans of a not-yet-cached relation
+      // each recompute the (expensive) upstream pair generation instead of
+      // sharing one pass. The count doubles as the strategy pick below.
+      val nEdges = timed("edges materialize")(edges.count())
+      if (nEdges <= smallGraphMaxEdges) driverLabels(edges)
+      else rounds(edges, maxRounds, checkpointEvery)
     }
+  }
 
-    val edges = pairs.select(col("a"), col("b"))
-      .union(pairs.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Materialize eagerly: the first round scans `edges` from several plan
-    // subtrees at once, and concurrent scans of a not-yet-cached relation
-    // each recompute the (expensive) upstream pair generation instead of
-    // sharing one pass. The count doubles as the strategy pick below.
-    val nEdges = timed("edges materialize")(edges.count())
+  private val trace = sys.env.contains("SPARK_GRAFT_CC_TRACE")
 
-    if (nEdges <= smallGraphMaxEdges) {
-      val out = timed("driver union-find") {
-        val es = edges.select(col("a").cast("long"), col("b").cast("long"))
-          .collect()
-        edges.unpersist()
-        // parent doubles as the node registry (every endpoint is entered
-        // with parent(x)=x on first sight) — no boxed node Set alongside
-        // the Row array; LongMap is primitive-key specialized.
-        val parent = scala.collection.mutable.LongMap.empty[Long]
-        def find(x0: Long): Long = {
-          var x = x0
-          var p = parent(x)
-          while (p != x) { // path halving
-            val gp = parent(p)
-            parent.update(x, gp)
-            x = gp
-            p = parent(x)
-          }
-          x
+  private def timed[T](name: String)(f: => T): T = {
+    val t0 = System.nanoTime()
+    val r = f
+    if (trace) System.err.println(
+      f"[cc] $name%-24s ${(System.nanoTime() - t0) / 1e9}%7.3f s")
+    r
+  }
+
+  /** Union-find on the driver over the collected (materialized) edges. */
+  private def driverLabels(edges: DataFrame): DataFrame = {
+    val out = timed("driver union-find") {
+      val es = edges.select(col("a").cast("long"), col("b").cast("long"))
+        .collect()
+      // parent doubles as the node registry (every endpoint is entered
+      // with parent(x)=x on first sight) — no boxed node Set alongside
+      // the Row array; LongMap is primitive-key specialized.
+      val parent = scala.collection.mutable.LongMap.empty[Long]
+      def find(x0: Long): Long = {
+        var x = x0
+        var p = parent(x)
+        while (p != x) { // path halving
+          val gp = parent(p)
+          parent.update(x, gp)
+          x = gp
+          p = parent(x)
         }
-        es.foreach { r =>
-          val a = r.getLong(0); val b = r.getLong(1)
-          if (!parent.contains(a)) parent.update(a, a)
-          if (!parent.contains(b)) parent.update(b, b)
-          val (ra, rb) = (find(a), find(b))
-          // union-by-min: the larger root links under the smaller, so every
-          // root IS its component's minimum id and no relabel pass is needed
-          // (path halving keeps chains near-flat despite the skewed linking)
-          if (ra < rb) parent.update(rb, ra)
-          else if (rb < ra) parent.update(ra, rb)
-        }
-        parent.keysIterator.map(id => (id, find(id))).toSeq
+        x
       }
-      val sess = pairs.sparkSession
-      import sess.implicits._
-      return out.toDF("id", "lbl")
+      es.foreach { r =>
+        val a = r.getLong(0); val b = r.getLong(1)
+        if (!parent.contains(a)) parent.update(a, a)
+        if (!parent.contains(b)) parent.update(b, b)
+        val (ra, rb) = (find(a), find(b))
+        // union-by-min: the larger root links under the smaller, so every
+        // root IS its component's minimum id and no relabel pass is needed
+        // (path halving keeps chains near-flat despite the skewed linking)
+        if (ra < rb) parent.update(rb, ra)
+        else if (rb < ra) parent.update(ra, rb)
+      }
+      parent.keysIterator.map(id => (id, find(id))).toSeq
     }
+    val sess = edges.sparkSession
+    import sess.implicits._
+    out.toDF("id", "lbl")
+  }
 
-    // Logical-plan truncation for the iterative loop: without it, each
-    // round's DataFrame embeds every previous round's logical plan PLUS the
-    // full edge lineage (for LSH-derived graphs, the whole shingle→band→
-    // verify pipeline), so per-action Catalyst analysis grows with rounds —
-    // measured ~2.6 s PER ACTION on d3's 640-edge graph, where execution
-    // itself is milliseconds. Wrapping the materialized cache's RDD in a
-    // fresh LogicalRDD keeps every round's plan O(1) while preserving both
-    // the cached blocks and the recompute path (an RDD cache miss still
-    // falls back through the captured physical plan); the every-N-rounds
-    // reliable checkpoint below still truncates the RDD lineage itself.
-    val edgesT = Lineage.truncate(edges)
-
+  /** The frontier Pregel loop over the materialized symmetric `edges`. */
+  private def rounds(edges: DataFrame, maxRounds: Int, checkpointEvery: Int): DataFrame = {
     // No eager count here: init derives from the ALREADY-materialized edges
-    // cache, so the concurrent-first-scan recompute risk that forces
+    // pin, so the concurrent-first-scan recompute risk that forces
     // edges.count() above costs only a distinct over cached rows — not worth
     // a whole extra job (each action is ~seconds of fixed overhead on an
     // oversubscribed host, and round 1 materializes init anyway).
-    val init = edgesT.select(col("a").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val init = Pin.owned(edges.select(col("a").as("id")).distinct()
+      .withColumn("lbl", col("id")))
 
     var labels = init
     var frontier = init // round 1 considers every node changed
-    var superseded: Option[DataFrame] = Some(init)
     var changed = 1L
     var round = 0
     while (changed > 0 && round < maxRounds) {
@@ -161,7 +155,7 @@ object ConnectedComponents {
         throw new InterruptedException("ConnectedComponents cancelled")
       round += 1
       // Best label reachable over one edge from a node that moved last round.
-      val cand = edgesT
+      val cand = edges
         .join(frontier.select(col("id").as("b"), col("lbl").as("blbl")), Seq("b"))
         .groupBy("a")
         .agg(min(col("blbl")).as("cmin"))
@@ -179,23 +173,17 @@ object ConnectedComponents {
           (least(col("l1"), coalesce(col("l2"), col("l1"))) =!= col("lbl")).as("chg"))
       val next =
         if (round % checkpointEvery == 0) next0.checkpoint() // eager, on disk
-        else next0.persist(StorageLevel.MEMORY_AND_DISK)
+        else Pin.owned(next0)
       changed = timed(s"round $round") {
         next.filter(col("chg")).count() // the round's ONE action
       }
       if (trace) System.err.println(s"[cc] round $round changed=$changed")
-      superseded.foreach(_.unpersist())
-      superseded = Some(next)
-      // checkpoint() already returns a truncated plan; only persisted
-      // rounds need the LogicalRDD wrap.
-      val nextT = if (round % checkpointEvery == 0) next else Lineage.truncate(next)
-      labels = nextT.select("id", "lbl")
-      frontier = nextT.filter(col("chg")).select("id", "lbl")
+      labels = next.select("id", "lbl")
+      frontier = next.filter(col("chg")).select("id", "lbl")
     }
     if (changed > 0)
       org.slf4j.LoggerFactory.getLogger(getClass).warn(
         s"ConnectedComponents: round cap $maxRounds hit with $changed labels still moving")
-    edges.unpersist()
     if (trace) timed("final labels re-count")(labels.count())
     labels
   }

@@ -1,10 +1,10 @@
 package graft.operators
 
+import graft.Pin
 import graft.functions.Text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** MinHash + banded LSH near-duplicate detection (north star: dedup at
   * 100 TB). The classic shingle → minhash → band → bucket-join pipeline,
@@ -341,8 +341,7 @@ object MinHashLSH {
     // (signatures ×2 via the band self-join, both verify sides, both count
     // sides) — persist it so the scan runs once, not six times. ~tens of MB
     // per 10k docs; evicted LRU, never pinned past memory pressure.
-    val sh = shingleTable(docs, idCol, textCol, shingleN)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = Pin.owned(shingleTable(docs, idCol, textCol, shingleN))
     // Materialize eagerly: the returned plan's FIRST action scans `sh` from
     // several subtrees at once, and concurrent scans of a not-yet-cached
     // relation can each recompute the shingle window pipeline instead of

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.Pin
 
 /** Distributed PageRank by synchronous power iteration over an edge list —
   * the graph-importance primitive a corpus pipeline uses for link-graph
@@ -20,20 +20,18 @@ import org.apache.spark.storage.StorageLevel
   * lesson applied to an iterative computation).
   *
   * Scale shape (the 100 TB story):
-  *   - the edge list and out-degree table are computed once, persisted, and
+  *   - the edge list and out-degree table are computed once, pinned, and
   *     reused by every iteration — each round is ONE keyed shuffle
   *     (`groupBy(dst)` with map-side partial sums) plus co-keyed joins on
   *     the source id;
-  *   - every THIRD round (and the last) is materialized and wrapped in a
-  *     fresh `LogicalRDD` (the ConnectedComponents lineage-truncation
-  *     pattern, `ConnectedComponents.scala:120-135`); rounds in between
+  *   - every THIRD round (and the last) is materialized as a frame-owned
+  *     pin ([[graft.Pin.owned]], a one-leaf plan); rounds in between
   *     chain lazily, so plan depth stays ≤ 3 rounds, Catalyst analysis is
   *     O(1) per round, and the fixed-round loop pays a job-submission
   *     barrier only at the materialize points (rounds are fixed — nothing
   *     reads a per-round count, so per-round barriers bought nothing);
-  *   - superseded materialized rank tables are unpersisted as soon as
-  *     their successor is materialized, so at most one checkpoint's
-  *     blocks are pinned, and failure recompute is bounded at
+  *   - the returned frame owns every pin: they are freed together once
+  *     the caller drops it, and failure recompute is bounded at
   *     `materializeEvery` rounds.
   *
   * Contract: `edges` is a directed edge list with integral columns `a`
@@ -53,35 +51,30 @@ object PageRank {
       edges: DataFrame,
       iterations: Int,
       totalMass: Long = 1000000000000L): DataFrame = {
-    val e = edges.select(col("a"), col("b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // Eager materialize: round 1 scans `e` from two subtrees at once (the
-    // outdeg join and the edge join), and concurrent first scans of a
-    // not-yet-cached relation each recompute the upstream derivation
-    // (the d2/d10 concurrent-first-scan trap).
+    // Frame-owned pins, each filled by its count: round 1 scans `e` from
+    // two subtrees at once (the outdeg join and the edge join), and
+    // concurrent first scans of a not-yet-filled pin each recompute the
+    // upstream derivation (the d2/d10 concurrent-first-scan trap).
+    val e = Pin.owned(edges.select(col("a"), col("b")))
     e.count()
-    val eT = Lineage.truncate(e)
 
     // Out-degree is JOINED ONTO the edge list once, up front: each round's
     // contribution then needs a single (ranks ⋈ edged) join instead of
     // (ranks ⋈ outdeg ⋈ edges) — one hash join per round saved, and the
     // per-edge degree is read straight off the cached row.
-    val outdeg = eT.groupBy("a").agg(count(lit(1)).as("d"))
-    val edged = eT.join(outdeg, Seq("a"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val outdeg = e.groupBy("a").agg(count(lit(1)).as("d"))
+    val edged = Pin.owned(e.join(outdeg, Seq("a")))
     edged.count()
-    val edgedT = Lineage.truncate(edged)
-    val nodes = eT.select(col("a").as("id")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = nodes.count() // one job: materializes the persist AND sizes the mass
-    core(edgedT, Lineage.truncate(nodes), n, iterations, totalMass)
+    val nodes = Pin.owned(e.select(col("a").as("id")).distinct())
+    val n = nodes.count() // one job: fills the pin AND sizes the mass
+    core(edged, nodes, n, iterations, totalMass)
   }
 
   /** The power-iteration core over PRE-MATERIALIZED inputs: `edged` is the
     * degree-joined edge list (`a`, `b`, `d`) and `nodes` the node set
     * (`id`), both assumed cheap to rescan (a bucketed table or a persisted
     * frame — the r7 graph materialized views). Skips [[ranks]]' three
-    * persist+count barriers, which dominate an ISOLATED query's wall when
+    * pin+count barriers, which dominate an ISOLATED query's wall when
     * the derivation already lives in the warehouse; when `edged` is
     * bucketed on `a`, each round's contribution join plans with no
     * Exchange on the edge side.
@@ -107,18 +100,17 @@ object PageRank {
     val teleport = (15L * base) / 100L
 
     var ranks = nodes.withColumn("r", lit(base))
-    var prev: Option[DataFrame] = None
     // Rounds are FIXED (no convergence test reads a per-round count), so a
     // synchronous materialize per round buys nothing semantically — it
     // only bounds the failure-recompute window and pays one job-submission
     // barrier per round. Materialize every third round (and the last):
-    // intermediate rounds chain lazily through `Lineage.truncate` (each
-    // round's plan still reads the previous round's RDD, so Catalyst
-    // analysis stays O(1) per round), then execute as ONE job whose
-    // stages pipeline without driver round-trips. Each round's output has
-    // exactly one consumer (the next round's contribution join), so the
-    // unmaterialized rounds are never double-computed. On a cluster the
-    // materialize points are where you'd also checkpoint.
+    // intermediate rounds chain lazily from the last frame-owned pin
+    // (each round's plan still reads that pin, so Catalyst analysis stays
+    // O(1) per round), then execute as ONE job whose stages pipeline
+    // without driver round-trips. Each round's output has exactly one
+    // consumer (the next round's contribution join), so the unmaterialized
+    // rounds are never double-computed. On a cluster the materialize
+    // points are where you'd also checkpoint.
     val materializeEvery = 3
     for (i <- 1 to iterations) {
       // Cooperative cancellation under Bench's per-query watchdog (the
@@ -134,16 +126,11 @@ object PageRank {
         .select(col("id"),
           (lit(teleport) + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
       if (i % materializeEvery == 0 || i == iterations) {
-        val p = next.persist(StorageLevel.MEMORY_AND_DISK)
-        p.count()
-        prev.foreach(_.unpersist())
-        prev = Some(p)
-        ranks = Lineage.truncate(p)
+        ranks = Pin.owned(next)
+        ranks.count()
       } else {
-        // No truncate between materialize points: plan depth is bounded
-        // (≤ materializeEvery rounds past the last LogicalRDD), and a
-        // truncate here would insert a Row ser/de boundary into the
-        // executed chain for no analysis benefit.
+        // No pin between materialize points: plan depth is bounded
+        // (≤ materializeEvery rounds past the last pin).
         ranks = next
       }
     }

@@ -79,14 +79,13 @@ object Skew {
     require(buckets > 0, "buckets must be positive")
     require(hotShare > 0 && hotShare <= 1, "hotShare must be in (0, 1]")
     val kcols = keys.map(col)
-    val census = big.groupBy(kcols: _*).agg(count(lit(1)).as("_cnt"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val total = census.agg(coalesce(sum(col("_cnt")), lit(0L))).head().getLong(0)
-    // Bounded driver collect: > hotShare of total each → at most
-    // ⌊1/hotShare⌋ rows can qualify, whatever the key cardinality.
-    val hotRows = census.filter(col("_cnt") > total * hotShare)
-      .select(kcols: _*).collect()
-    census.unpersist()
+    val hotRows = graft.Pin.scoped { pin =>
+      val census = pin(big.groupBy(kcols: _*).agg(count(lit(1)).as("_cnt")))
+      val total = census.agg(coalesce(sum(col("_cnt")), lit(0L))).head().getLong(0)
+      // Bounded driver collect: > hotShare of total each → at most
+      // ⌊1/hotShare⌋ rows can qualify, whatever the key cardinality.
+      census.filter(col("_cnt") > total * hotShare).select(kcols: _*).collect()
+    }
     if (hotRows.isEmpty) return big.join(small, keys)
     val hot = big.sparkSession
       .createDataFrame(java.util.Arrays.asList(hotRows: _*),

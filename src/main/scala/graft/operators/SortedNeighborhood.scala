@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,11 +56,10 @@ object SortedNeighborhood {
       .withColumn("sn_blk", expr(s"shiftright(sn_rk, ${bits - prefixBits})"))
     val census = blocks.groupBy("sn_r", "sn_blk").agg(count(lit(1)).as("sn_cnt"))
       .withColumn("sn_bi", row_number().over(Window.partitionBy("sn_r").orderBy("sn_blk")))
-    val ranked = blocks.join(broadcast(census), Seq("sn_r", "sn_blk"))
+    val ranked = Pin.owned(blocks.join(broadcast(census), Seq("sn_r", "sn_blk"))
       .withColumn("sn_rn", row_number().over(
         Window.partitionBy("sn_r", "sn_bi").orderBy(col("sn_rk"), col("sn_id"))))
-      .select("sn_id", "sn_r", "sn_bi", "sn_cnt", "sn_rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select("sn_id", "sn_r", "sn_bi", "sn_cnt", "sn_rn"))
     ranked.count() // scanned by the within-join (both sides) and both boundary sides
     val within = ranked
       .withColumn("sn_w", explode(sequence(lit(1), lit(window))))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.operators.Merge
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
@@ -357,9 +357,8 @@ object Aggregates {
       graft.functions.FastVec.register(s) // graft_md5_60 (idempotent)
       import graft.functions.Text
       val seeds = 0 to 3
-      val toks = Tables.table(s, dir, "documents")
-        .select(explode(Text.tokens(col("text"))).as("tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val toks = Pin.owned(Tables.table(s, dir, "documents")
+        .select(explode(Text.tokens(col("text"))).as("tok")))
       toks.count() // eager: census + sketch both scan it
       val cms = toks
         .select(explode(array(seeds.map(i =>

@@ -1440,7 +1440,6 @@ object AnalyticsExtras {
     (s, dir) => {
       val cents = expr("cast(round(value * 100) as bigint)")
       val split = lit("2024-01-15").cast("timestamp")
-      val wDim = Window.partitionBy("dimension")
       Tables.table(s, dir, "events")
         .select(col("event_type"), cents.as("cents"),
           (col("ts") < split).as("p1"),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.Text
 import graft.operators.MinHashLSH
 import org.apache.spark.sql.{Column, SparkSession}
@@ -289,12 +289,7 @@ object DedupQueries {
     * [[graft.Memo.reset]].
     */
   private def sh5Persisted(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame =
-    graft.Memo(s, s"sh5Persisted:$dir") {
-      val sh = shTable(s, dir, 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      sh.count()
-      sh
-    }
+    graft.Memo(s, s"sh5Persisted:$dir")(Pin.shared(shTable(s, dir, 5)))
 
   /** d9's verified containment pair table (asymmetric prefix filter at
     * t = 4/5, exact-verified ≥ 0.8) as a write-once bucketed view — same
@@ -380,9 +375,8 @@ object DedupQueries {
     "d12_oph_minhash",
     (s, dir) => {
       // Signature agg, both verify sides and both count sides scan this
-      // one table: persist + eager count (d2's pattern).
-      val sh = shTable(s, dir, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // one table: pin + eager count (d2's pattern).
+      val sh = Pin.owned(shTable(s, dir, 3))
       sh.count()
       val cand = MinHashLSH.candidatePairs(
         MinHashLSH.ophSignatures(sh, "doc_id", 8), "doc_id", 8, 4)
@@ -445,8 +439,7 @@ object DedupQueries {
   val d13OphDense: Q = Q(
     "d13_oph_dense",
     (s, dir) => {
-      val sh = shTable(s, dir, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = Pin.owned(shTable(s, dir, 3))
       sh.count()
       val cand = MinHashLSH.candidatePairs(
         MinHashLSH.ophDensifiedSignatures(sh, "doc_id", 8), "doc_id", 8, 4)
@@ -559,9 +552,8 @@ object DedupQueries {
     (s, dir) => {
       val fp = Text.prefixFingerprint(Text.tokens(col("text")), 8)
       // Two-column projection scanned by BOTH sides of the anti-join:
-      // persist + eager count so scan+tokenize+md5 runs once, not twice.
-      val docs = t(s, dir, "documents").select(col("doc_id"), fp.as("fp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // pin + eager count so scan+tokenize+md5 runs once, not twice.
+      val docs = Pin.owned(t(s, dir, "documents").select(col("doc_id"), fp.as("fp")))
       docs.count()
       val census = docs.filter(col("doc_id") < 400).select("fp").distinct()
       docs.filter(col("doc_id") >= 400)
@@ -778,10 +770,9 @@ object DedupQueries {
         .partitionBy("doc_id").orderBy("p")
       // Duplicated windows with their island (span) key — persisted: the
       // span extent, the partner join and the final join-back scan it.
-      val dup = wins.join(census, Seq("fp")).filter(col("c") > 1)
+      val dup = Pin.owned(wins.join(census, Seq("fp")).filter(col("c") > 1)
         .select(col("doc_id"), col("p"), col("fp"))
-        .withColumn("grp", col("p") - row_number().over(byDoc))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("grp", col("p") - row_number().over(byDoc)))
       dup.count()
       val spans = dup.groupBy("doc_id", "grp")
         .agg(min(col("p")).cast("long").as("span_start"),
@@ -858,9 +849,8 @@ object DedupQueries {
     "d11_lsh_recall",
     (s, dir) => {
       // The inter self-join and both count sides scan this one table:
-      // persist + eager count (d2's pattern).
-      val sh = shTable(s, dir, 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // pin + eager count (d2's pattern).
+      val sh = Pin.owned(shTable(s, dir, 3))
       sh.count()
       val truth = MinHashLSH.jaccardAllPairs(sh, "doc_id")
         .filter(col("jaccard") >= 0.3)
@@ -911,7 +901,7 @@ object DedupQueries {
   val d14CdcChunks: Q = Q(
     "d14_cdc_chunks",
     (s, dir) => {
-      val chunks = t(s, dir, "documents")
+      val chunks = Pin.owned(t(s, dir, "documents")
         .select(col("doc_id"), Text.tokens(col("text")).as("t"))
         .withColumn("cuts", expr(
           """CASE WHEN size(t) >= 3 THEN
@@ -929,8 +919,7 @@ object DedupQueries {
                    'fp', md5(concat_ws(' ', slice(t, st + 1, en - st))),
                    'ln', cast(en - st AS bigint))),
                  c -> c.ln > 0)""")).as("c"))
-        .select(col("doc_id"), col("n_tokens"), col("c.fp").as("fp"), col("c.ln").as("ln"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("doc_id"), col("n_tokens"), col("c.fp").as("fp"), col("c.ln").as("ln")))
       chunks.count() // eager: the fp census and the join-back both scan it
       val census = chunks.groupBy("fp").agg(count(lit(1)).as("n"))
       chunks.join(census, Seq("fp"))
@@ -1075,31 +1064,23 @@ object DedupQueries {
     "d16_tfidf_dedup",
     (s, dir) => {
       val dec = org.apache.spark.sql.types.DecimalType(38, 0)
-      val sh = shTable(s, dir, 5)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = Pin.owned(shTable(s, dir, 5))
       sh.count() // eager: df census, norms, index and verify all scan it
       val nDocs = t(s, dir, "documents").agg(count(lit(1)).as("n_docs"))
-      val wsq = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
+      val wsq = Pin.owned(sh.groupBy("shingle").agg(count(lit(1)).as("df"))
         .crossJoin(broadcast(nDocs))
         .select(col("shingle"), col("df"),
           {
             val qidf = round((log(col("n_docs").cast("double")) -
               log(col("df").cast("double"))) * 1024).cast("long")
             (qidf * qidf).as("wsq")
-          })
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          }))
       wsq.count() // eager: norms + verify share it
-      // Persisted (r12): four subtrees consume this join (norms, the rare
-      // index, and BOTH sides of the dot) — unpersisted, each re-ran the
-      // sh⋈wsq shuffle join; cached, the join runs once.
-      // LIFETIME (r12 advice): sh/wsq/weighted CANNOT be unpersisted here
-      // — the returned frame is lazy and still references all three; they
-      // are reclaimed by the session's cache hygiene (Bench/Verify
-      // clearSlate between queries; spark.catalog.clearCache in any
-      // long-lived host), the same contract as every memoized table in
-      // this file.
-      val weighted = sh.join(wsq, Seq("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // Pinned (r12): four subtrees consume this join (norms, the rare
+      // index, and BOTH sides of the dot) — unpinned, each re-ran the
+      // sh⋈wsq shuffle join; pinned, the join runs once. sh, wsq and
+      // weighted are frame-owned: the returned lazy frame reads them.
+      val weighted = Pin.owned(sh.join(wsq, Seq("shingle")))
       weighted.count() // eager: the four consumers scan it concurrently
       val norms = weighted.groupBy("doc_id").agg(sum(col("wsq")).as("nsq"))
       val rare = weighted.filter(col("df").between(2, 25))
@@ -1252,8 +1233,7 @@ object DedupQueries {
       "d17_bloom_admission",
       (s, dir) => {
         val fp = Text.prefixFingerprint(Text.tokens(col("text")), 8)
-        val docs = t(s, dir, "documents").select(col("doc_id"), fp.as("fp"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val docs = Pin.owned(t(s, dir, "documents").select(col("doc_id"), fp.as("fp")))
         docs.count()
         val corpus = docs.filter(col("doc_id") < 400)
         val batch = docs.filter(col("doc_id") >= 400)

@@ -1,10 +1,9 @@
 package graft.queries
 
-import graft.{Q, Tables}
-import graft.operators.{Lineage, PageRank}
+import graft.{Pin, Q, Tables}
+import graft.operators.PageRank
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Graph analytics over relation-derived graphs — the iterative-compute
   * family next to d5's connected components. The reference pipeline has no
@@ -179,7 +178,7 @@ object GraphQueries {
     * orderkey plus a distinct on the (cust, supp) pair; each of the K=6
     * rounds is one keyed shuffle with map-side partial sums, with the edge
     * and degree tables computed once and reused (see `PageRank.ranks` for
-    * the lineage-truncation and unpersist discipline). Integer-exact, so
+    * the frame-owned pin discipline). Integer-exact, so
     * the result is bit-identical regardless of partitioning or cluster
     * size.
     */
@@ -268,12 +267,11 @@ object GraphQueries {
         .select(col("u"), col("v"),
           (col("du") * 4294967296L + col("u")).as("ru"),
           (col("dv") * 4294967296L + col("v")).as("rv"))
-      val o = ranked.select(
+      // eager: the wedge join scans `o` from three subtrees at once
+      val o = Pin.shared(ranked.select(
           when(col("ru") < col("rv"), col("u")).otherwise(col("v")).as("a"),
           when(col("ru") < col("rv"), col("v")).otherwise(col("u")).as("b"),
-          greatest(col("ru"), col("rv")).as("rb"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      o.count() // eager: the wedge join scans `o` from three subtrees at once
+          greatest(col("ru"), col("rv")).as("rb")))
       val tri = o.select(col("a"), col("b").as("b1"), col("rb").as("rb1"))
         .join(o.select(col("a"), col("b").as("b2"), col("rb").as("rb2")), Seq("a"))
         .filter(col("rb1") < col("rb2"))
@@ -318,8 +316,8 @@ object GraphQueries {
     * plus two semi-joins of the edge list against the (strictly smaller)
     * survivor set — never an all-pairs product, never a driver collect.
     * Rounds are a fixed R (the oracle unrolls the identical R), each
-    * round's edge list is persisted and the predecessor unpersisted, so
-    * lineage stays O(1) deep exactly like `PageRank.ranks` /
+    * round's edge list is a frame-owned pin, so the plan stays O(1) deep
+    * exactly like `PageRank.ranks` /
     * `ConnectedComponents.minLabels`. Peeling strictly shrinks the edge
     * set, so round cost is monotonically decreasing; on a 100 TB graph the
     * degree agg shuffles only (node, count) pairs, not payloads.
@@ -330,17 +328,16 @@ object GraphQueries {
     (s, dir) => {
       // Round 0 reads the bucketed adjacency straight off disk (no persist
       // needed — the materialized table IS the cache, and its groupBy("a")
-      // plans with no Exchange on the edge side); later rounds persist
-      // their shrinking survivor sets as before.
+      // plans with no Exchange on the edge side); later rounds pin their
+      // shrinking survivor sets as frame-owned pins.
       val adj0 = coAdjDeg(s, dir)._1
       var m = adj0.count()
-      var persisted: DataFrame = null
       var adj = adj0
       // Peeling is monotone: if a round drops NO edge, every node kept
       // ≥ k neighbors, so all remaining rounds are identity — exit early
       // (the oracle's fixed R unrolled rounds compute the same result,
       // since identity rounds are free in SQL but cost a degree agg, two
-      // semi-joins, a persist and a count here).
+      // semi-joins, a pin and a count here).
       var round = 0
       var fixed = false
       while (round < KcoreRounds && !fixed) {
@@ -349,15 +346,11 @@ object GraphQueries {
         round += 1
         val keep = adj.groupBy("a").agg(count(lit(1)).as("d"))
           .filter(col("d") >= KcoreK).select("a")
-        val next = adj
+        adj = Pin.owned(adj
           .join(keep, Seq("a"), "left_semi")
           .join(keep.select(col("a").as("b")), Seq("b"), "left_semi")
-          .select("a", "b")
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val m2 = next.count()
-        if (persisted != null) persisted.unpersist()
-        persisted = next
-        adj = Lineage.truncate(next)
+          .select("a", "b"))
+        val m2 = adj.count()
         fixed = m2 == m
         m = m2
       }
@@ -415,8 +408,8 @@ object GraphQueries {
     * Scale: each round is ONE keyed equi-join of the adjacency against
     * the label table (both hash-partitioned on the join key) feeding a
     * two-level aggregation whose first level is map-side combinable;
-    * per-round state is persisted and the predecessor unpersisted, so
-    * lineage stays O(1) deep exactly like `PageRank.ranks`. Only
+    * per-round state is a frame-owned pin, so the plan stays O(1) deep
+    * exactly like `PageRank.ranks`. Only
     * (node, label, count) triples ever shuffle — payload-free at 100 TB.
     */
   /** The g4 core on an arbitrary undirected edge list (u, v) — also driven
@@ -425,16 +418,13 @@ object GraphQueries {
   private[graft] def labelPropagate(
       edges: DataFrame,
       rounds: Int): DataFrame = {
-    val adj = edges.select(col("u").as("a"), col("v").as("b"))
-      .unionAll(edges.select(col("v").as("a"), col("u").as("b")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val adj = Pin.owned(edges.select(col("u").as("a"), col("v").as("b"))
+      .unionAll(edges.select(col("v").as("a"), col("u").as("b"))))
     adj.count() // eager: scanned by l0 and every round's join
-    val out = labelAssign(Lineage.truncate(adj), rounds)
+    labelAssign(adj, rounds)
       .groupBy(col("lab").as("community"))
       .agg(count(lit(1)).as("size"))
       .orderBy(desc("size"), col("community"))
-    adj.unpersist()
-    out
   }
 
   /** The g4 loop's node → label assignment (id, lab), shared by g4's
@@ -447,8 +437,8 @@ object GraphQueries {
     * therefore genuinely needs no Exchange on the edge side (r9 fix: the
     * previous join-on-b form shuffled the fat side every round against
     * the `a` bucketing) and no persist (the materialized table is the
-    * cache). The returned frame is lineage-truncated over the final
-    * persisted round, so consumers never re-run the propagation.
+    * cache). The returned frame reads the final round's frame-owned pin
+    * (a one-leaf plan), so consumers never re-run the propagation.
     *
     * Input skew: this round IS the join-feeding-same-key-agg shape AQE's
     * skew splitter declines (PROBES `skew_label_aqe` — the groupBy reuses
@@ -463,17 +453,14 @@ object GraphQueries {
   private[graft] def labelAssign(
       adj: DataFrame,
       rounds: Int): DataFrame = {
-    val l0 = adj.select(col("a").as("id")).distinct()
-      .withColumn("lab", col("id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    l0.count()
-    var persisted = l0
-    var labels = Lineage.truncate(l0)
+    var labels = Pin.owned(adj.select(col("a").as("id")).distinct()
+      .withColumn("lab", col("id")))
+    labels.count()
     // Synchronous LPA reaches a fixed point when NO node flips its label;
     // from then on every round is identity, so exit early. The round's one
     // action doubles as the change detector: `next` carries a `chg` flag
-    // (new label ≠ old), and counting the flagged rows both materializes
-    // the persisted round and decides convergence — the
+    // (new label ≠ old), and counting the flagged rows both fills the
+    // round's pin and decides convergence — the
     // ConnectedComponents frontier pattern. The oracle's fixed R unrolled
     // rounds compute the same result (identity rounds are free in SQL).
     var round = 0
@@ -497,14 +484,11 @@ object GraphQueries {
         .agg(max(col("c") * LpPack + (lit(LpPack - 1) - col("lab"))).as("sc"))
         .select(col("b").as("id"),
           (lit(LpPack - 1) - col("sc") % LpPack).as("lab"))
-      val next = upd
+      val next = Pin.owned(upd
         .join(labels.select(col("id"), col("lab").as("old")), Seq("id"))
-        .select(col("id"), col("lab"), (col("lab") =!= col("old")).as("chg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .select(col("id"), col("lab"), (col("lab") =!= col("old")).as("chg")))
       changed = next.filter(col("chg")).count()
-      persisted.unpersist()
-      persisted = next
-      labels = Lineage.truncate(next.select("id", "lab"))
+      labels = next.select("id", "lab")
     }
     labels
   }
@@ -532,8 +516,8 @@ object GraphQueries {
     * the adjacency against the (strictly new) frontier plus one
     * anti-join against the visited set, both keyed equi-joins shuffling
     * only (id, hop) pairs; the frontier is new nodes only, so total work
-    * across all rounds is O(E) edge touches, not O(E·rounds). Rounds
-    * persist/truncate/unpersist exactly like `labelPropagate`, and the
+    * across all rounds is O(E) edge touches, not O(E·rounds). Rounds are
+    * frame-owned pins exactly like `labelPropagate`'s, and the
     * loop exits the moment a frontier comes back empty (the oracle's
     * bounded recursion computes the same result — a node's min hop is
     * its BFS distance, and distances beyond the bound appear in
@@ -548,15 +532,12 @@ object GraphQueries {
       adj: DataFrame,
       seedIds: DataFrame,
       rounds: Int): DataFrame = {
-    val seed = seedIds.select(col("id"), lit(0L).as("hop"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var visitedCount = seed.count()
-    var persisted = seed
-    var visited = Lineage.truncate(seed)
+    var visited = Pin.owned(seedIds.select(col("id"), lit(0L).as("hop")))
+    var visitedCount = visited.count()
     var frontier = visited
     var round = 0
     var fSize = visitedCount
-    // One materialize action per round: the round's ONLY persisted state is
+    // One materialize action per round: the round's ONLY pinned state is
     // visited ∪ frontier, its count doubles as the frontier-size detector
     // (the sets are disjoint by the anti-join), and the next frontier is a
     // narrow hop==round filter OVER that cache — never a recompute.
@@ -569,13 +550,10 @@ object GraphQueries {
         .select(col("b").as("id")).distinct()
         .join(visited.select("id"), Seq("id"), "left_anti")
         .select(col("id"), lit(round.toLong).as("hop"))
-      val nv = visited.unionAll(next).persist(StorageLevel.MEMORY_AND_DISK)
-      val c = nv.count()
+      visited = Pin.owned(visited.unionAll(next))
+      val c = visited.count()
       fSize = c - visitedCount
       visitedCount = c
-      persisted.unpersist()
-      persisted = nv
-      visited = Lineage.truncate(nv)
       frontier = visited.filter(col("hop") === round)
     }
     visited
@@ -842,8 +820,8 @@ object GraphQueries {
     * to in-degrees ~9·10¹² (headroom documented on [[hitsOracle]]), and
     * bit-identical across engines and partitionings.
     *
-    * Scale: the edge list is computed once, persisted, lineage-truncated,
-    * and reused by all 2K half-rounds; each half-round is one
+    * Scale: the edge list is computed once, pinned for the call (a
+    * one-leaf plan), and reused by all 2K half-rounds; each half-round is one
     * map-side-combinable sum keyed on one side's ids plus a broadcast of
     * the 1-row max — never a collect, never a float. Score tables are
     * node-sized, edges are scanned 2K times from cache.
@@ -855,18 +833,18 @@ object GraphQueries {
       // (coPair), but the 2K lazy half-rounds each reference their
       // predecessor TWICE (rescale join + broadcast-max subtree), so the
       // pair scan is re-entered ~2^(2K) times unless the duplicated
-      // subtrees dedup. With the r7 in-memory pair (persist + lineage
-      // truncate → LogicalRDD) ReuseExchange collapsed them; the r8 switch
+      // subtrees dedup. With the r7 in-memory pair (a one-leaf cached
+      // plan) ReuseExchange collapsed them; the r8 switch
       // to a raw table scan broke that under AQE and g10 regressed
       // 2.0 → 4.6 s (CPU-bound, eff 4.2). Restore the r7 inner design ON
-      // TOP of the view: one cheap pass persists the node-pair table
+      // TOP of the view: one cheap pass pins the node-pair table
       // (|E| rows, far smaller than the fact join it replaced), the loop
-      // chains lazily against the truncated in-memory scan. Measured r9
+      // chains lazily against the pinned in-memory scan. Measured r9
       // isolated sf0.1: lazy-over-table 4.6 s, per-half-round persists
       // 5.8 s (12 count barriers, eff 1.5), this form 2.1 s.
-      val pairP = coPair(s, dir).persist(StorageLevel.MEMORY_AND_DISK)
-      pairP.count()
-      val pairT = Lineage.truncate(pairP)
+      Pin.scoped { pin =>
+      val pairT = pin(coPair(s, dir))
+      pairT.count()
 
       // Driver-held rescale divisor (e20/e21's iterate pattern — r9
       // verdict #6): each half-round rescales by a ONE-ROW statistic
@@ -875,12 +853,11 @@ object GraphQueries {
       // map instead of a crossJoin(broadcast(max)) subtree, and the chain
       // executes as 2K cache-backed jobs (one collect each) instead of one
       // lazy tree whose duplicated predecessor subtrees AQE re-plans per
-      // stage. Raw score tables are persisted (each is read by BOTH its
-      // max-collect and the next half-round's join) — node-sized cache,
-      // released together after the final materialization.
+      // stage. Raw score tables are pinned (each is read by BOTH its
+      // max-collect and the next half-round's join) — node-sized pins,
+      // released with the pair pin when this builder returns.
       var hub = pairT.select("ck").distinct().withColumn("h", lit(HitsMass))
       var auth: DataFrame = null
-      val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
       // max(score) over an EMPTY half-round table is SQL NULL (a filtered-
       // empty or degenerate graph): read it nullable and default the
       // divisor to 1 so the chain degrades to empty results like the old
@@ -890,28 +867,24 @@ object GraphQueries {
           .map(_.longValue).getOrElse(1L)
       var r = 1
       while (r <= HitsRounds) {
-        val aRaw = pairT.join(hub, Seq("ck")).groupBy("sk").agg(sum("h").as("ar"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        cached += aRaw
+        val aRaw = pin(pairT.join(hub, Seq("ck")).groupBy("sk").agg(sum("h").as("ar")))
         val aDiv = math.max(maxOr1(aRaw, "ar") / HitsMass, 1L)
         auth = aRaw.select(col("sk"), expr(s"ar div ${aDiv}L").as("a"))
-        val hRaw = pairT.join(auth, Seq("sk")).groupBy("ck").agg(sum("a").as("hr"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        cached += hRaw
+        val hRaw = pin(pairT.join(auth, Seq("sk")).groupBy("ck").agg(sum("a").as("hr")))
         val hDiv = math.max(maxOr1(hRaw, "hr") / HitsMass, 1L)
         hub = hRaw.select(col("ck"), expr(s"hr div ${hDiv}L").as("h"))
         r += 1
       }
       // Materialize the final (supplier-sized) score table — the returned
-      // plan reads the persisted scores, and a rare cache miss recomputes
+      // plan reads its frame-owned pin, and a rare cache miss recomputes
       // through the captured physical plan (the g4 end-of-loop discipline).
-      val authP = auth.persist(StorageLevel.MEMORY_AND_DISK)
+      val authP = Pin.owned(auth)
       authP.count()
-      cached.foreach(_.unpersist())
-      Lineage.truncate(authP)
+      authP
         .select(col("sk").as("s_suppkey"), col("a").as("authority"))
         .orderBy(desc("authority"), col("s_suppkey"))
         .limit(20)
+      }
     },
     Some(hitsOracle(HitsRounds))
   )

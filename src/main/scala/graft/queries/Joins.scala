@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.plans.{AsOfForward, AsOfNearest, NativeAsOf}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -325,10 +325,9 @@ object Joins {
       val pairs = r1Pairs(s, dir)
         .select(col("id_a").as("a"), col("id_b").as("b"))
       val clusters = graft.operators.ConnectedComponents.minLabels(pairs)
-      val mem = clusters
+      val mem = Pin.owned(clusters
         .join(t(s, dir, "documents"), col("id") === col("doc_id"))
-        .select(col("lbl"), col("doc_id"), col("lang"), col("source"), col("n_chars"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("lbl"), col("doc_id"), col("lang"), col("source"), col("n_chars")))
       mem.count() // eager: three downstream subtrees scan it
       val wCanon = Window.partitionBy("lbl")
         .orderBy(desc("n_chars"), col("doc_id"))

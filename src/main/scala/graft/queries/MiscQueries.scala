@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -265,12 +265,11 @@ object MiscQueries {
     "v5_source_overlap",
     (s, dir) => {
       import graft.functions.Text
-      val fpsrc = t(s, dir, "documents")
+      val fpsrc = Pin.owned(t(s, dir, "documents")
         .select(col("source"),
           Text.prefixFingerprint(Text.tokens(col("text")), 8).as("fp"))
         .groupBy("fp", "source")
-        .agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("c")))
       fpsrc.count() // eager: both self-join sides scan this one census
       val a = fpsrc.select(col("fp"), col("source").as("src_a"), col("c").as("ca"))
       val b = fpsrc.select(col("fp"), col("source").as("src_b"), col("c").as("cb"))
@@ -308,12 +307,11 @@ object MiscQueries {
     "v6_shard_skew",
     (s, dir) => {
       import graft.functions.Text
-      val perShard = t(s, dir, "documents")
+      val perShard = Pin.owned(t(s, dir, "documents")
         .select(pmod(col("doc_id"), lit(8)).cast("int").as("shard"),
           size(Text.tokens(col("text"))).as("n_tokens"))
         .groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("shard_tokens"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("n_docs"), sum(col("n_tokens")).as("shard_tokens")))
       perShard.count() // totals and the final select both scan it
       val tot = perShard.agg(sum(col("shard_tokens")).as("total"),
         count(lit(1)).as("n_shards"))
@@ -795,10 +793,9 @@ object MiscQueries {
       "p18_layout_cost",
       (s, dir) => {
         import s.implicits._
-        val base = t(s, dir, "lineitem")
+        val base = Pin.owned(t(s, dir, "lineitem")
           .select((col("l_partkey") % 256).as("px"), (col("l_suppkey") % 256).as("sy"))
-          .withColumn("z", zInterleave8(col("px"), col("sy")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .withColumn("z", zInterleave8(col("px"), col("sy"))))
         val nTotal = base.count() // eager: three manifests + the total
         def manifest(layout: String, bucket: org.apache.spark.sql.Column) = base
           .select(lit(layout).as("layout"), bucket.as("b"), col("px"), col("sy"))
@@ -926,12 +923,11 @@ object MiscQueries {
       (s, dir) => {
         import s.implicits._
         graft.functions.FastVec.register(s)
-        val base = t(s, dir, "lineitem")
+        val base = Pin.owned(t(s, dir, "lineitem")
           .select((col("l_partkey") % 256).as("px"), (col("l_suppkey") % 256).as("sy"))
           .withColumn("z", zInterleave8(col("px"), col("sy")))
           .withColumn("h",
-            graft.functions.FastCurve.hilbert(col("px"), col("sy"), 8))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            graft.functions.FastCurve.hilbert(col("px"), col("sy"), 8)))
         base.count() // eager: both manifests scan it
         def manifest(layout: String, bucket: org.apache.spark.sql.Column) = base
           .select(lit(layout).as("layout"), bucket.as("b"), col("px"), col("sy"))

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.Text
 import graft.operators.MinHashLSH
 import org.apache.spark.sql.SparkSession
@@ -148,16 +148,14 @@ object MixtureQueries {
         .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
       // Narrow codegen bigram stream (r12) — same rewrite as x25: the
       // lead-window spelling cost a corpus-wide Exchange(doc_id) + sort.
-      val bigrams = t(s, dir, "documents")
+      val bigrams = Pin.owned(t(s, dir, "documents")
         .select(col("doc_id"),
           explode(graft.functions.FastText.ngrams(col("text"), 2)).as("bg"))
         .select(col("doc_id"),
           split(col("bg"), " ", 2).getItem(0).as("w1"),
-          split(col("bg"), " ", 2).getItem(1).as("w2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          split(col("bg"), " ", 2).getItem(1).as("w2")))
       bigrams.count() // eager: census + join-back both scan it
-      val uni = toks.groupBy("tok").agg(count(lit(1)).as("c1"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val uni = Pin.owned(toks.groupBy("tok").agg(count(lit(1)).as("c1")))
       uni.count()
       val total = uni.agg(sum(col("c1")).as("n_total"))
       val bi = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
@@ -213,12 +211,10 @@ object MixtureQueries {
     "d8_incremental_neardup",
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val shNew = MinHashLSH
-        .shingleTable(docs.filter(col("source") === "src19"), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val shOld = MinHashLSH
-        .shingleTable(docs.filter(col("source") =!= "src19"), "doc_id", "text", 3)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val shNew = Pin.owned(MinHashLSH
+        .shingleTable(docs.filter(col("source") === "src19"), "doc_id", "text", 3))
+      val shOld = Pin.owned(MinHashLSH
+        .shingleTable(docs.filter(col("source") =!= "src19"), "doc_id", "text", 3))
       shNew.count(); shOld.count() // eager: bands + verify + counts all rescan
       def bands(sh: org.apache.spark.sql.DataFrame) =
         MinHashLSH.bandKeys(MinHashLSH.signatures(sh, "doc_id", 8), "doc_id", 8, 4)
@@ -372,16 +368,14 @@ object MixtureQueries {
     "c8_dsir_admission",
     (s, dir) => {
       val q40 = 1L << 40
-      val toks = t(s, dir, "documents")
+      val toks = Pin.owned(t(s, dir, "documents")
         .select(col("doc_id"),
           when(substring(col("source"), 4, 10).cast("int") <= 9, "web")
             .when(substring(col("source"), 4, 10).cast("int") <= 14, "books")
             .otherwise("code").as("domain"),
-          explode(Text.tokens(col("text"))).as("tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          explode(Text.tokens(col("text"))).as("tok")))
       toks.count() // raw census, target census and join-back all scan it
-      val raw = toks.groupBy("tok").agg(count(lit(1)).as("cr"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val raw = Pin.owned(toks.groupBy("tok").agg(count(lit(1)).as("cr")))
       raw.count()
       val tgt = toks.filter(col("domain") === "books")
         .groupBy("tok").agg(count(lit(1)).as("ct"))
@@ -571,13 +565,6 @@ object MixtureQueries {
   private[graft] def splitOf(slot: org.apache.spark.sql.Column) =
     when(slot < 96, "train").when(slot < 98, "val").otherwise("test")
 
-  /** The DuckDB spelling of [[splitSlot]]/[[splitOf]], shared by both
-    * oracles for the same reason.
-    */
-  private[graft] val sqlSplit =
-    """CAST('0x' || substr(md5('14|' || CAST(doc_id AS VARCHAR)), 1, 15)
-               AS BIGINT) % 100"""
-
   val p14SplitAssign: Q = Q(
     "p14_split_assign",
     (s, dir) => {
@@ -664,16 +651,14 @@ object MixtureQueries {
       // emits the same position-ordered multiset with zero exchanges
       // (see NgramArray; the one-space split is exact because tokens
       // cannot contain the separator).
-      val bigrams = t(s, dir, "documents")
+      val bigrams = Pin.owned(t(s, dir, "documents")
         .select(col("doc_id"),
           explode(graft.functions.FastText.ngrams(col("text"), 2)).as("bg"))
         .select(col("doc_id"),
           split(col("bg"), " ", 2).getItem(0).as("w1"),
-          split(col("bg"), " ", 2).getItem(1).as("w2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          split(col("bg"), " ", 2).getItem(1).as("w2")))
       bigrams.count() // eager: type census + join-back both scan it
-      val bi = bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val bi = Pin.owned(bigrams.groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
       bi.count() // eager: successor/predecessor censuses + totals + join-back
       val uni = toks.groupBy("tok").agg(count(lit(1)).as("c1"))
       val fwd = bi.groupBy("w1").agg(count(lit(1)).as("f1"))   // N₁₊(w₁·)
@@ -803,8 +788,7 @@ object MixtureQueries {
     (s, dir) => {
       val toks = t(s, dir, "documents")
         .select(col("source"), explode(Text.tokens(col("text"))).as("tok"))
-      val census = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val census = Pin.owned(toks.groupBy("tok").agg(count(lit(1)).as("c")))
       census.count()
       val total = census.agg(sum(col("c")).as("n_total"))
       val dom = toks

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.operators.MinHashLSH
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
@@ -365,9 +365,8 @@ object PipelineExtras {
       // (operators/Multimodal.frameSimhash) the streaming admission twin
       // (startIngestFrames) also uses — frame size and hash cannot drift
       // between the batch dedup and the stream gate.
-      val sims = graft.operators.Multimodal
-        .frameSimhash(t(s, dir, "documents"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sims = Pin.owned(graft.operators.Multimodal
+        .frameSimhash(t(s, dir, "documents")))
       sims.count() // eager: byte-block explode + both verify sides rescan
       val bytes = graft.operators.Multimodal.simhashBands(sims)
         .select("doc_id", "k", "byte")
@@ -748,10 +747,9 @@ object PipelineExtras {
           val dot = graft.functions.FastVec.ldot(col("p"), typedLit(w(j).toSeq))
           when(dot > 0, lit(1L << j)).otherwise(lit(0L))
         }.reduce(_ + _)
-        val sigs = docsF
+        val sigs = Pin.owned(docsF
           .select(col("doc_id"), pArr.as("p"))
-          .select(col("doc_id"), sigCol.as("sig"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col("doc_id"), sigCol.as("sig")))
         sigs.count() // eager: band explode + both verify sides rescan
         val bands = sigs
           .withColumn("b", explode(sequence(lit(0), lit(3))))
@@ -846,7 +844,7 @@ object PipelineExtras {
       val dfCap = 50
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("a", "b").orderBy(col("votes").desc, col("offset"))
-      val frames = t(s, dir, "documents")
+      val frames = Pin.owned(t(s, dir, "documents")
         .filter(length(col("text")) > 0)
         .withColumn("n_frames", expr("(length(text) + 63) div 64"))
         .select(col("doc_id"), col("text"),
@@ -855,18 +853,16 @@ object PipelineExtras {
         .withColumn("f",
           pmod(graft.functions.Text.seededHash64(lit("cfp"),
             expr("substr(text, t * 64 + 1, 64)")), lit(1024L)))
-        .select(col("doc_id"), col("t"), col("f"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("doc_id"), col("t"), col("f")))
       frames.count() // eager: anchor and target sides + census scan it
-      val landmarks = frames
+      val landmarks = Pin.owned(frames
         .select(col("doc_id"), col("t").as("t1"), col("f").as("f1"),
           explode(sequence(lit(1), lit(Z))).as("dt"))
         .withColumn("t", col("t1") + col("dt"))
         .join(frames.select(col("doc_id"), col("t"), col("f").as("f2")),
           Seq("doc_id", "t"))
         .select(col("doc_id"), col("t1"),
-          (col("f1") * lit(8192L) + col("f2") * lit(8L) + col("dt")).as("h"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (col("f1") * lit(8192L) + col("f2") * lit(8L) + col("dt")).as("h")))
       landmarks.count() // eager: census + both match sides scan it
       val rare = landmarks.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") <= dfCap).select("h")

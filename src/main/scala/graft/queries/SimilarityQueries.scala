@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.{FastVec, Vectors}
 import graft.operators.Quantizer
 import org.apache.spark.sql.SparkSession
@@ -540,10 +540,10 @@ object SimilarityQueries {
     *
     * Memoized per (session, dir, normalize, M, K) the [[pcaModel]] way
     * (r11 advice: e8 + e29 + e9's composite each persisted a fresh
-    * `subv` lineage that was never unpersisted): the build persists its
-    * per-subspace table only for its own duration, materializes the
-    * n-row result, unpersists the intermediate, and hands every later
-    * caller the same persisted result. A [[graft.Memo]] entry, so
+    * `subv` lineage that was never released): the build pins its
+    * per-subspace table only for its own duration (a scoped pin),
+    * materializes the n-row result, and hands every later caller the
+    * same shared pin. A [[graft.Memo]] entry, so
     * racing callers (e9's leg pool) share one build; cleared by
     * [[graft.Memo.reset]].
     */
@@ -567,29 +567,27 @@ object SimilarityQueries {
             when(col("nrm") === 0.0, col("v"))
               .otherwise(transform(col("v"), x => x / col("nrm"))).as("v"))
       // One row per (vector, subspace); scanned by seed pick, both argmin
-      // passes, and the query slice — persist + eager count (the usual
+      // passes, and the query slice — pin + eager count (the usual
       // concurrent-first-scan trap).
-      val subv = emb
-        .select(col("vec_id"), explode(sequence(lit(0), lit(M - 1))).as("m"), col("v"))
-        .select(col("vec_id"), col("m"), expr(s"slice(v, m * $sub + 1, $sub)").as("sv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      subv.count()
-      val (cent, enc) = Quantizer.pq(subv, emb, K)
-      val qsub = subv.filter(col("vec_id") === 0).select(col("m"), col("sv").as("qsv"))
-      val adc = cent.join(broadcast(qsub), Seq("m"))
-        .select(col("m"), col("cid"),
-          round(FastVec.l2sq(col("qsv"), col("cv")) * Quantizer.Q20).cast("long").as("qd"))
-      val out = enc.join(broadcast(adc), Seq("m", "cid"))
-        .groupBy("vec_id")
-        .agg(sum(col("qd")).as("qdist"))
-        .filter(col("vec_id") =!= 0)
-        .join(emb.select("vec_id", "label"), Seq("vec_id"))
-        .select(col("vec_id"), col("label"),
-          (col("qdist").cast("double") / lit(Quantizer.Q20)).as("adc_dist"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      out.count() // materialize BEFORE dropping subv — out's lineage reads it
-      subv.unpersist()
-      out
+      Pin.scoped { pin =>
+        val subv = pin(emb
+          .select(col("vec_id"), explode(sequence(lit(0), lit(M - 1))).as("m"), col("v"))
+          .select(col("vec_id"), col("m"), expr(s"slice(v, m * $sub + 1, $sub)").as("sv")))
+        subv.count()
+        val (cent, enc) = Quantizer.pq(subv, emb, K)
+        val qsub = subv.filter(col("vec_id") === 0).select(col("m"), col("sv").as("qsv"))
+        val adc = cent.join(broadcast(qsub), Seq("m"))
+          .select(col("m"), col("cid"),
+            round(FastVec.l2sq(col("qsv"), col("cv")) * Quantizer.Q20).cast("long").as("qd"))
+        // Shared, materialized BEFORE the scope drops subv — out's lineage reads it
+        Pin.shared(enc.join(broadcast(adc), Seq("m", "cid"))
+          .groupBy("vec_id")
+          .agg(sum(col("qd")).as("qdist"))
+          .filter(col("vec_id") =!= 0)
+          .join(emb.select("vec_id", "label"), Seq("vec_id"))
+          .select(col("vec_id"), col("label"),
+            (col("qdist").cast("double") / lit(Quantizer.Q20)).as("adc_dist")))
+      }
   }
 
   /** Oracle mirror of [[pqAdcDists]] with a parameterized cut — e8 takes
@@ -988,26 +986,26 @@ object SimilarityQueries {
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
       val qv = emb.filter(col("vec_id") === 0).select(col("v").as("qv"))
-      val cand = emb
-        .crossJoin(broadcast(qv))
-        .filter(col("vec_id") =!= 0)
-        .select(col("vec_id"), col("v"),
-          round(FastVec.cosine(col("v"), col("qv")) * q20d).cast("long").as("qrel"))
-        .orderBy(col("qrel").desc, col("vec_id"))
-        .limit(24)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      cand.count() // eager: the rel collect and the pairwise join both read it
-      val a = cand.select(col("vec_id").as("ai"), col("v").as("va"))
-      val b = cand.select(col("vec_id").as("bi"), col("v").as("vb"))
-      val pairSims = a.crossJoin(b).filter(col("ai") =!= col("bi"))
-        .select(col("ai"), col("bi"),
-          round(FastVec.cosine(col("va"), col("vb")) * q20d).cast("long").as("qsim"))
       // BOUNDED collects: C rows + C·(C−1) pair sims, constant in corpus size.
-      val rels = cand.select("vec_id", "qrel").collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val sims = pairSims.collect()
-        .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-      cand.unpersist()
+      val (rels, sims) = Pin.scoped { pin =>
+        val cand = pin(emb
+          .crossJoin(broadcast(qv))
+          .filter(col("vec_id") =!= 0)
+          .select(col("vec_id"), col("v"),
+            round(FastVec.cosine(col("v"), col("qv")) * q20d).cast("long").as("qrel"))
+          .orderBy(col("qrel").desc, col("vec_id"))
+          .limit(24))
+        cand.count() // eager: the rel collect and the pairwise join both read it
+        val a = cand.select(col("vec_id").as("ai"), col("v").as("va"))
+        val b = cand.select(col("vec_id").as("bi"), col("v").as("vb"))
+        val pairSims = a.crossJoin(b).filter(col("ai") =!= col("bi"))
+          .select(col("ai"), col("bi"),
+            round(FastVec.cosine(col("va"), col("vb")) * q20d).cast("long").as("qsim"))
+        (cand.select("vec_id", "qrel").collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap,
+          pairSims.collect()
+            .map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap)
+      }
       val pickedIds = scala.collection.mutable.ArrayBuffer.empty[Long]
       // k capped by the pool: a short candidate table yields a short
       // result, matching the recursive oracle's natural termination
@@ -1128,9 +1126,8 @@ object SimilarityQueries {
       FastVec.register(s)
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), col("label"), Vectors.toDoubleVec(col("embedding")).as("v"))
-      val comp = emb
-        .select(col("vec_id"), posexplode(col("v")).as(Seq("i", "x")))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val comp = Pin.owned(emb
+        .select(col("vec_id"), posexplode(col("v")).as(Seq("i", "x"))))
       comp.count() // eager: scale census + quantize pass both scan it
       val scales = comp.groupBy("i").agg(max(abs(col("x"))).as("s"))
       val qcomp = comp.join(broadcast(scales), Seq("i"))
@@ -1218,12 +1215,11 @@ object SimilarityQueries {
           FastVec.l2sq(col("v"), col("ccv")).as("d2")), "ccid")
         .select(col("vec_id"), col("ccid"),
           zip_with(col("v"), col("ccv"), (x, y) => x - y).as("r"))
-      val subv = res
+      val subv = Pin.owned(res
         .select(col("vec_id"), col("ccid"),
           explode(sequence(lit(0), lit(M - 1))).as("m"), col("r"))
         .select(col("vec_id"), col("ccid"), col("m"),
-          expr(s"slice(r, m * $sub + 1, $sub)").as("sv"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          expr(s"slice(r, m * $sub + 1, $sub)").as("sv")))
       subv.count() // eager: seed pick, both argmins and encode scan it
       val (cent, enc) = Quantizer.pq(subv, emb, K, carry = Seq("ccid"))
       // Query-side: nprobe cells ranked over the 8-row broadcast codebook —
@@ -1366,8 +1362,7 @@ object SimilarityQueries {
     "e15_nprobe_sweep",
     (s, dir) => {
       val (d1, assign) = ivfModel(s, dir)
-      val assignP = assign
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val assignP = Pin.owned(assign)
       assignP.count() // eager: four probes + nothing else rebuilds the model
       val emb = t(s, dir, "embeddings")
         .select(col("vec_id"), Vectors.toDoubleVec(col("embedding")).as("v"))
@@ -1380,8 +1375,7 @@ object SimilarityQueries {
       // lineage is the FULL codebook training (comp→cent over all
       // vectors) — without this persist each of the 4 probes re-ran the
       // whole model build (round-5 advice: e15 at ~2.4 s vs e4's 0.8 s).
-      val qd = d1.filter(col("vec_id") === 0).select(col("cid"), col("d2"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val qd = Pin.owned(d1.filter(col("vec_id") === 0).select(col("cid"), col("d2")))
       qd.count() // eager: all four probe branches scan it concurrently
       val wq = Window.partitionBy().orderBy(col("d2"), col("cid"))
       val out = Seq(1, 2, 4, 8).map { k =>
@@ -1912,9 +1906,7 @@ object SimilarityQueries {
       // Read the view into RAM before the rounds reference it from six
       // subtrees (the g10 lesson: lazy re-entry of a table scan re-plans
       // per query stage; an InMemoryRelation is reused outright).
-      val x = pcaMatrix(s, dir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      x.count() // round 1 scans x from two subtrees (the g1 eager rule)
+      val x = Pin.shared(pcaMatrix(s, dir)) // round 1 scans x from two subtrees (the g1 eager rule)
       var w: org.apache.spark.sql.DataFrame = s.range(64)
         .select(col("id").as("i"), lit(1048576L).as("w"))
       for (_ <- 1 to 3) {
@@ -2074,15 +2066,14 @@ object SimilarityQueries {
           .select(col("vec_id"), col("i"),
             round(col("x").cast("double") * 1000).cast("long").as("q"))
         // ±1 sign from md5(k|i): regenerated per row, never materialized.
-        val proj = dims
+        val proj = Pin.owned(dims
           .select(col("vec_id"), col("q"), col("i"),
             explode(sequence(lit(0), lit(K - 1))).as("k"))
           .withColumn("s",
             when(Text.seededHash64(col("k"), col("i").cast("string")) % 2 === 0,
               lit(1L)).otherwise(lit(-1L)))
           .groupBy("vec_id", "k")
-          .agg(sum(col("s") * col("q")).as("p"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .agg(sum(col("s") * col("q")).as("p")))
         val qdims = dims.filter(col("vec_id") === 0)
           .select(col("i"), col("q").as("qq"))
         val exact = dims.filter(col("vec_id") =!= 0)
@@ -2255,15 +2246,14 @@ object SimilarityQueries {
     // Exchange(vec_id)+Sort; at real scale that is n×√n rows shuffled,
     // where this shape broadcasts C centroids and writes n×assignTop.
     val centArr = cent.agg(collect_list(struct(col("cid"), col("cv"))).as("cents"))
-    val a1 = emb
+    val a1 = Pin.owned(emb
       .crossJoin(broadcast(centArr))
       .select(col("vec_id"),
         posexplode(slice(array_sort(transform(col("cents"), c =>
           struct(FastVec.l2sq(col("v"), c("cv")).as("d2"), c("cid").as("cid")))),
           1, assignTop)))
       .select(col("vec_id"), col("col.cid").as("cid"),
-        (col("pos") + 1).cast("int").as("arank"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        (col("pos") + 1).cast("int").as("arank")))
     // O(C) census, and the action that materializes the a1 cache for the
     // sub-draw, sub-assign and unsplit arms. When NO cell exceeds the cap
     // — the common balanced case — the entire level-2 subtree (6 jobs of

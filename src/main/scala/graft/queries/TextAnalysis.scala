@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.Text
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -202,8 +202,7 @@ object TextAnalysis {
       val q20d = (1L << 20).toDouble
       val toks = t(s, dir, "documents")
         .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
-      val dl = toks.groupBy("doc_id").agg(count(lit(1)).as("dl"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val dl = Pin.owned(toks.groupBy("doc_id").agg(count(lit(1)).as("dl")))
       dl.count() // eager: stats + the contribution join both scan it
       val stats = dl.agg(count(lit(1)).as("n_docs"),
         (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
@@ -378,9 +377,8 @@ object TextAnalysis {
   val x17VocabGrowth: Q = Q(
     "x17_vocab_growth",
     (s, dir) => {
-      val toks = t(s, dir, "documents")
-        .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val toks = Pin.owned(t(s, dir, "documents")
+        .select(col("doc_id"), explode(Text.tokens(col("text"))).as("tok")))
       toks.count() // the type census and the per-doc counts both scan it
       val nDocs = t(s, dir, "documents").agg(count(lit(1)).as("n"))
       val firstDocs = toks.groupBy("tok").agg(min(col("doc_id")).as("first_doc"))
@@ -612,10 +610,9 @@ object TextAnalysis {
     "x21_ngram_novelty",
     (s, dir) => {
       graft.functions.FastVec.register(s) // graft_shingles (idempotent)
-      val sh = t(s, dir, "documents")
+      val sh = Pin.owned(t(s, dir, "documents")
         .select(col("doc_id"),
-          explode(graft.functions.FastText.shingles(col("text"), 3)).as("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          explode(graft.functions.FastText.shingles(col("text"), 3)).as("shingle")))
       sh.count() // eager: census + join-back both scan it
       val first = sh.groupBy("shingle").agg(min(col("doc_id")).as("first_doc"))
       val out = sh.join(first, Seq("shingle"))
@@ -727,25 +724,15 @@ object TextAnalysis {
     */
   /** The chr(31)-framed per-word character census (c, seq) both BPE
     * trainers start from — the ONLY corpus-sized aggregate either runs
-    * (map-side combinable); returned persisted and eagerly counted.
+    * (map-side combinable); the caller pins it.
     */
-  /** `eager = false` (r12) skips the materializing count when the caller's
-    * own FIRST action on the census (x33/x34's v0 distinct-symbol count)
-    * fills the cache instead — one action saved per training run; the
-    * single-consumer-at-a-time access pattern keeps the concurrent-
-    * first-scan trap out of reach.
-    */
-  private def bpeCharCensus(s: SparkSession, dir: String,
-      eager: Boolean = true): org.apache.spark.sql.DataFrame = {
+  private def bpeCharCensus(s: SparkSession, dir: String): org.apache.spark.sql.DataFrame = {
     val charSeq = "concat(chr(31), array_join(transform(" +
       "sequence(1, length(word)), i -> substr(word, i, 1)), chr(31)), chr(31))"
-    val census = t(s, dir, "documents")
+    t(s, dir, "documents")
       .select(explode(Text.tokens(col("text"))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("c"))
       .select(col("c"), expr(charSeq).as("seq"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    if (eager) census.count()
-    census
   }
 
   /** One BPE training round over the census: (pair counts, best pair).
@@ -803,15 +790,14 @@ object TextAnalysis {
     * LAZY (r12 optimization): the rule pair is driver-known, so it is
     * inlined as string LITERALS into one narrow codegen projection —
     * no 1-row broadcast, no crossJoin, and crucially NO eager count.
-    * The returned frame is persisted but materialized by whatever reads
-    * it next (the next round's argmax, or the encoder's final pass), so
+    * The caller pins the returned frame, and whatever reads it next (the
+    * next round's argmax, or the encoder's final pass) fills the pin, so
     * each training round costs ONE Spark action instead of three
-    * (broadcast build + merge count + argmax collect). The caller owns
-    * unpersisting the PREDECESSOR census only after an action has
-    * materialized this one (the merge is a narrow map over the cached
-    * predecessor — dropping it early would silently recompute the whole
-    * chain from the corpus scan). Carries every column except `seq`
-    * through, so x34's `word` survives.
+    * (broadcast build + merge count + argmax collect). The predecessor
+    * stays pinned until the caller's pins are released (the merge is a
+    * narrow map over the cached predecessor — dropping it early would
+    * silently recompute the whole chain from the corpus scan). Carries
+    * every column except `seq` through, so x34's `word` survives.
     */
   private def bpeMerge(census: org.apache.spark.sql.DataFrame,
       c1: String, c2: String): org.apache.spark.sql.DataFrame = {
@@ -821,7 +807,6 @@ object TextAnalysis {
       .select(others :+
         replace(col("seq"), lit(f + c1 + f + c2 + f), lit(f + c1 + c2 + f))
           .as("seq"): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
   }
 
   /** The toks/wc/s0 CTE prelude of the BPE oracles (DuckDB). wc and s0
@@ -865,30 +850,28 @@ object TextAnalysis {
       "x23_bpe_train",
       (s, dir) => {
         import s.implicits._
-        var census = bpeCharCensus(s, dir)
         // Each round's argmax is ONE row — collected to the driver
-        // (bounded by construction, the e10 pattern) so every cached
-        // frame can be released eagerly and the K-rule result is a local
-        // table, not a K-way union whose lineage spans all rounds.
+        // (bounded by construction, the e10 pattern) so every census pin
+        // is scoped to this call and the K-rule result is a local table,
+        // not a K-way union whose lineage spans all rounds.
         // ONE action per round (r12): the lazy [[bpeMerge]] is
-        // materialized by the NEXT round's argmax collect; the superseded
-        // census is unpersisted only after that collect returns.
-        var rules = Vector.empty[(Int, String, String, Long)]
-        var prev: Option[org.apache.spark.sql.DataFrame] = None
-        // Rounds run on the vocab-bounded census — see [[withAqeOff]].
-        withAqeOff(s) {
-          for (r <- 1 to K) {
-            val best = bpeBestPair(census).get // K=4 < pair depth at any SF
-            prev.foreach(_.unpersist()); prev = None
-            rules = rules :+
-              ((r, best.getString(0), best.getString(1), best.getLong(2)))
-            if (r < K) { // the final round's merge has no reader — skip it
-              prev = Some(census)
-              census = bpeMerge(census, best.getString(0), best.getString(1))
-            } else census.unpersist()
+        // materialized by the NEXT round's argmax collect.
+        Pin.scoped { pin =>
+          var census = pin(bpeCharCensus(s, dir))
+          census.count()
+          var rules = Vector.empty[(Int, String, String, Long)]
+          // Rounds run on the vocab-bounded census — see [[withAqeOff]].
+          withAqeOff(s) {
+            for (r <- 1 to K) {
+              val best = bpeBestPair(census).get // K=4 < pair depth at any SF
+              rules = rules :+
+                ((r, best.getString(0), best.getString(1), best.getLong(2)))
+              // the final round's merge has no reader — skip it
+              if (r < K) census = pin(bpeMerge(census, best.getString(0), best.getString(1)))
+            }
           }
+          rules.toDF("round", "c1", "c2", "freq").orderBy("round")
         }
-        rules.toDF("round", "c1", "c2", "freq").orderBy("round")
       },
       Some {
         val union = (1 to K)
@@ -946,42 +929,37 @@ object TextAnalysis {
       "x33_bpe_vocab",
       (s, dir) => {
         import s.implicits._
-        // eager=false: the v0 head() below is the census's first action
-        // and fills the persist — one materializing count saved (r12).
-        var census = bpeCharCensus(s, dir, eager = false)
-        val v0 = census
-          .select(explode(expr("filter(split(seq, chr(31)), x -> x <> '')")).as("sym"))
-          .agg(countDistinct(col("sym")))
-          .head().getLong(0)
-        val m = math.min(math.max(0L, TargetVocab - v0), RMax.toLong)
-        var rules = Vector.empty[(Int, String, String, Long, Long)]
-        // ONE action per round (r12): lazy merges are materialized by the
-        // next argmax collect; the superseded census is unpersisted only
-        // after that collect returns (see [[bpeMerge]]).
-        var prev: Option[org.apache.spark.sql.DataFrame] = None
-        var r = 1
-        var stop = m < 1
-        // Rounds run on the vocab-bounded census — see [[withAqeOff]].
-        withAqeOff(s) {
-          while (!stop) {
-            val best = bpeBestPair(census)
-            prev.foreach(_.unpersist()); prev = None
-            best match {
-              case Some(best) if best.getLong(2) >= MinCount =>
-                rules = rules :+ ((r, best.getString(0), best.getString(1),
-                  best.getLong(2), v0 + r))
-                if (r < m) {
-                  prev = Some(census)
-                  census = bpeMerge(census, best.getString(0), best.getString(1))
-                }
-                r += 1
-                stop = r > m
-              case _ => stop = true // pairs exhausted or best below MinCount
+        Pin.scoped { pin =>
+          // The v0 head() below is the census pin's first action and
+          // fills it — one materializing count saved (r12).
+          var census = pin(bpeCharCensus(s, dir))
+          val v0 = census
+            .select(explode(expr("filter(split(seq, chr(31)), x -> x <> '')")).as("sym"))
+            .agg(countDistinct(col("sym")))
+            .head().getLong(0)
+          val m = math.min(math.max(0L, TargetVocab - v0), RMax.toLong)
+          var rules = Vector.empty[(Int, String, String, Long, Long)]
+          // ONE action per round (r12): lazy merges are materialized by
+          // the next argmax collect (see [[bpeMerge]]).
+          var r = 1
+          var stop = m < 1
+          // Rounds run on the vocab-bounded census — see [[withAqeOff]].
+          withAqeOff(s) {
+            while (!stop) {
+              bpeBestPair(census) match {
+                case Some(best) if best.getLong(2) >= MinCount =>
+                  rules = rules :+ ((r, best.getString(0), best.getString(1),
+                    best.getLong(2), v0 + r))
+                  if (r < m)
+                    census = pin(bpeMerge(census, best.getString(0), best.getString(1)))
+                  r += 1
+                  stop = r > m
+                case _ => stop = true // pairs exhausted or best below MinCount
+              }
             }
           }
+          rules.toDF("round", "c1", "c2", "freq", "vocab_size").orderBy("round")
         }
-        census.unpersist()
-        rules.toDF("round", "c1", "c2", "freq", "vocab_size").orderBy("round")
       },
       Some {
         val union = (1 to RMax)
@@ -1043,13 +1021,14 @@ object TextAnalysis {
         import s.implicits._
         val charSeq = "concat(chr(31), array_join(transform(" +
           "sequence(1, length(word)), i -> substr(word, i, 1)), chr(31)), chr(31))"
-        var census = t(s, dir, "documents")
+        // Every census is a frame-owned pin: the returned encode reads the
+        // final one, and through its recompute path the earlier rounds.
+        var census = Pin.owned(t(s, dir, "documents")
           .select(explode(Text.tokens(col("text"))).as("word"))
           .groupBy("word").agg(count(lit(1)).as("c"))
-          .select(col("word"), col("c"), expr(charSeq).as("seq"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .select(col("word"), col("c"), expr(charSeq).as("seq")))
         // the v0 head() below is the census's first action and fills the
-        // persist — one materializing count saved (r12, the x33 shape)
+        // pin — one materializing count saved (r12, the x33 shape)
         val v0 = census
           .select(explode(expr("filter(split(seq, chr(31)), x -> x <> '')")).as("sym"))
           .agg(countDistinct(col("sym")))
@@ -1058,29 +1037,22 @@ object TextAnalysis {
         // ONE action per round (r12): lazy merges are materialized by the
         // next argmax collect (see [[bpeMerge]], word column carried
         // through). Unlike x33, EVERY executed rule is applied — the
-        // final census IS the encoder's output — so a merge still lazy
-        // when the loop exits is materialized once below before its
-        // predecessor is released.
-        var prev: Option[org.apache.spark.sql.DataFrame] = None
+        // final census IS the encoder's output, and a merge still lazy
+        // when the loop exits is filled by the encode's first action.
         var r = 1
         var stop = m < 1
-        // Rounds (and the trailing merge materialization) run on the
-        // vocab-bounded census — see [[withAqeOff]]; the encode join below
-        // is corpus-sized and stays under AQE.
+        // Rounds run on the vocab-bounded census — see [[withAqeOff]]; the
+        // encode join below is corpus-sized and stays under AQE.
         withAqeOff(s) {
           while (!stop) {
-            val best = bpeBestPair(census)
-            prev.foreach(_.unpersist()); prev = None
-            best match {
+            bpeBestPair(census) match {
               case Some(best) if best.getLong(2) >= MinCount =>
-                prev = Some(census)
-                census = bpeMerge(census, best.getString(0), best.getString(1))
+                census = Pin.owned(bpeMerge(census, best.getString(0), best.getString(1)))
                 r += 1
                 stop = r > m
               case _ => stop = true
             }
           }
-          prev.foreach { p => census.count(); p.unpersist() }
         }
         val wt = census.select(col("word"),
           size(expr("filter(split(seq, chr(31)), x -> x <> '')")).as("n_sym"))
@@ -1162,10 +1134,9 @@ object TextAnalysis {
     (s, dir) => {
       graft.functions.FastVec.register(s) // graft_shingles (idempotent)
       val docs = t(s, dir, "documents")
-      val sh = docs
+      val sh = Pin.owned(docs
         .select(col("doc_id"),
-          explode(graft.functions.FastText.shingles(col("text"), 3)).as("shingle"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          explode(graft.functions.FastText.shingles(col("text"), 3)).as("shingle")))
       sh.count() // eager: census + join-back both scan it
       val df = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
       val nn = docs.agg(count(lit(1)).as("n_docs"))
@@ -1397,10 +1368,9 @@ object TextAnalysis {
     "x29_kl_divergence",
     (s, dir) => {
       val q20d = (1L << 20).toDouble
-      val sc = t(s, dir, "documents")
+      val sc = Pin.owned(t(s, dir, "documents")
         .select(col("source"), explode(Text.tokens(col("text"))).as("tok"))
-        .groupBy("source", "tok").agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy("source", "tok").agg(count(lit(1)).as("c")))
       sc.count()
       val cc = sc.groupBy("tok").agg(sum(col("c")).as("cc"))
       val st = sc.groupBy("source").agg(sum(col("c")).as("n"))

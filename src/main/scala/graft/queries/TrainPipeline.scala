@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Q, Tables}
+import graft.{Pin, Q, Tables}
 import graft.functions.Text
 import graft.operators.MinHashLSH
 import org.apache.spark.sql.SparkSession
@@ -42,9 +42,8 @@ object TrainPipeline {
     (s, dir) => {
       val docs = t(s, dir, "documents")
       val src = docs.select(col("doc_id"), col("source"))
-      val sh = MinHashLSH.shingleTable(docs, "doc_id", "text", 5)
-        .join(src, Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = Pin.owned(MinHashLSH.shingleTable(docs, "doc_id", "text", 5)
+        .join(src, Seq("doc_id")))
       sh.count() // eager: both join sides scan this one table
       val ev = sh.filter(col("source") === "src0")
         .select(col("doc_id").as("eval_doc"), col("shingle"))
@@ -222,11 +221,10 @@ object TrainPipeline {
       val base = t(s, dir, "documents")
         .select(col("doc_id"), Text.tokens(col("text")).as("t"))
         .withColumn("nseg", ceil(size(col("t")) / lit(10.0)).cast("int"))
-      val segs = base
+      val segs = Pin.owned(base
         .select(col("doc_id"), explode(sequence(lit(0), col("nseg") - 1)).as("seg"), col("t"))
         .select(col("doc_id"), col("seg"),
-          md5(concat_ws(" ", slice(col("t"), col("seg") * 10 + 1, lit(10)))).as("fp"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          md5(concat_ws(" ", slice(col("t"), col("seg") * 10 + 1, lit(10)))).as("fp")))
       segs.count() // eager: the fp census and the join-back both scan it
       val fpc = segs.groupBy("fp").agg(count(lit(1)).as("c"))
       segs.join(fpc, Seq("fp"))
@@ -320,8 +318,7 @@ object TrainPipeline {
       // aggregate): persist + eager count so the tokenize→census pass runs
       // once, not once per subtree. The census is the RIGHT thing to cache
       // at 100 TB too — it is bounded by vocabulary, not corpus.
-      val census = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val census = Pin.owned(toks.groupBy("tok").agg(count(lit(1)).as("c")))
       census.count()
       val total = census.agg(sum(col("c")).as("n_total"))
       val q20 = (1L << 20).toDouble
@@ -456,9 +453,8 @@ object TrainPipeline {
       val src = docs.select(col("doc_id"), col("source"))
       // Both the eval and train sides scan this one shingle table:
       // persist + eager count (the concurrent-first-scan trap, see c1).
-      val sh = MinHashLSH.shingleTable(docs, "doc_id", "text", 8)
-        .join(src, Seq("doc_id"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val sh = Pin.owned(MinHashLSH.shingleTable(docs, "doc_id", "text", 8)
+        .join(src, Seq("doc_id")))
       sh.count()
       val ev = sh.filter(col("source") === "src0")
         .select(col("doc_id").as("eval_doc"), col("shingle"))
@@ -568,8 +564,7 @@ object TrainPipeline {
     // the census is ≤ 2^20 rows: persist it so the cum window, the total,
     // and nothing else re-runs the tokenizing quality scan (scored itself
     // is scanned once here and once in the join-back below)
-    val census = scored.groupBy("qq").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val census = Pin.owned(scored.groupBy("qq").agg(count(lit(1)).as("c")))
     census.count() // eager: window + total both read it
     val wc = Window.orderBy("qq") // census window: ≤ 2^20 rows by construction
     val phased = census
@@ -651,8 +646,7 @@ object TrainPipeline {
       val q20d = (1L << 20).toDouble
       val toks = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), explode(Text.tokens(col("text"))).as("tok"))
-      val census = toks.groupBy("tok").agg(count(lit(1)).as("c"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val census = Pin.owned(toks.groupBy("tok").agg(count(lit(1)).as("c")))
       census.count() // vocab-bounded; the probability join and total share it
       val total = census.agg(sum(col("c")).as("n_total"))
       val per = toks

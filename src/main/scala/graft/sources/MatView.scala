@@ -155,19 +155,21 @@ object MatView {
       require(s.catalog.tableExists(table),
         s"append-refresh target $table does not exist — build it with of() first")
       val t0 = System.nanoTime()
-      // Persist before count+write: the staleness-log count and the bucketed
+      // Pin before count+write: the staleness-log count and the bucketed
       // write otherwise each execute the full delta plan, so the logged
       // refresh seconds (the numerator of the O(delta) claim) would include
       // a redundant recomputation of the delta derivation.
-      val deltaP = delta.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = deltaP.count()
-      deltaP.write
-        .format("parquet")
-        .mode(SaveMode.Append)
-        .bucketBy(buckets, key)
-        .sortBy(key)
-        .saveAsTable(table)
-      deltaP.unpersist()
+      val n = graft.Pin.scoped { pin =>
+        val deltaP = pin(delta)
+        val n = deltaP.count()
+        deltaP.write
+          .format("parquet")
+          .mode(SaveMode.Append)
+          .bucketBy(buckets, key)
+          .sortBy(key)
+          .saveAsTable(table)
+        n
+      }
       val (c, r, sec) = refreshLog.getOrElse(table, (0L, 0L, 0.0))
       refreshLog.put(table,
         (c + 1, r + n, sec + (System.nanoTime() - t0) / 1e9))

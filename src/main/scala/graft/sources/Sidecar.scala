@@ -34,15 +34,16 @@ object Sidecar {
     */
   def add(spark: SparkSession, dir: String, symbols: Dataset[String]): Unit = {
     import spark.implicits._
-    val merged = read(spark, dir)
-      .union(symbols.map(_.trim).filter(_.nonEmpty))
-      .distinct()
-      .orderBy("value")
-      .coalesce(1)
-      .cache()
-    merged.count() // materialize BEFORE overwriting the directory we read
-    merged.write.mode("overwrite").text(dir)
-    merged.unpersist()
+    graft.Pin.scoped { pin =>
+      val merged = pin(read(spark, dir)
+        .union(symbols.map(_.trim).filter(_.nonEmpty))
+        .distinct()
+        .orderBy("value")
+        .coalesce(1)
+        .toDF())
+      merged.count() // materialize BEFORE overwriting the directory we read
+      merged.write.mode("overwrite").text(dir)
+    }
   }
 
   /** Anti-membership filter (`download_historical_price.py:385-401`):

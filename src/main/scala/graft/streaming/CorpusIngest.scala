@@ -20,9 +20,10 @@ import org.apache.spark.sql.types._
   * Every gate below keeps only its admission logic: the stream, its
   * census compaction and every sink write and census probe go through
   * [[Epoch]], whose `batch_id=` protocol makes at-least-once replays
-  * rewrite rather than duplicate. Each gate persists what it admits before
-  * writing it to the corpus and the census, so an epoch probes the stored
-  * census once, not once per write.
+  * rewrite rather than duplicate. Each gate pins what it admits, through
+  * the epoch's [[graft.Pin.Scope]], before writing it to the corpus and
+  * the census, so an epoch probes the stored census once, not once per
+  * write; [[Epoch.run]] releases the pins when the gate returns or fails.
   */
 object CorpusIngest {
 
@@ -96,13 +97,12 @@ object CorpusIngest {
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
-        maxCensusParts) { (raw, batchId) =>
+        maxCensusParts) { (raw, batchId, pin) =>
       val batch = firstPer(raw.withColumn("fp", prefixFp), "fp", col("doc_id"))
-      val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch)(census =>
-        batch.join(census.select("fp"), Seq("fp"), "left_anti")).persist()
+      val admitted = pin(Epoch.committed(spark, censusDir, batchId).fold(batch)(census =>
+        batch.join(census.select("fp"), Seq("fp"), "left_anti")))
       Epoch.write(admitted, corpusDir, batchId)
       Epoch.write(admitted.select("fp"), censusDir, batchId)
-      admitted.unpersist()
     }
 
   /** The admitted corpus as one DataFrame (all epochs). */
@@ -138,15 +138,14 @@ object CorpusIngest {
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
-        maxCensusParts) { (raw, batchId) =>
-      val batch = firstPer(raw.withColumn("fp", prefixFp), "fp", col("doc_id"))
-        .persist()
+        maxCensusParts) { (raw, batchId, pin) =>
+      val batch = pin(firstPer(raw.withColumn("fp", prefixFp), "fp", col("doc_id")))
       val sh = graft.operators.MinHashLSH
         .shingleTable(batch, "doc_id", "text", 3)
       val bands = graft.operators.MinHashLSH.bandKeys(
         graft.operators.MinHashLSH.signatures(sh, "doc_id", 8), "doc_id", 8, 4)
         .join(batch.select("doc_id", "fp"), Seq("doc_id"))
-      val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
+      val admitted = pin(Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
         // exact gate: stored fingerprint match
         val exactHit = census.select("fp").distinct()
         // fuzzy gate: any LSH band collision with a stored signature
@@ -157,12 +156,10 @@ object CorpusIngest {
         batch
           .join(exactHit, Seq("fp"), "left_anti")
           .join(fuzzyHit, Seq("doc_id"), "left_anti")
-      }.persist()
+      })
       Epoch.write(admitted, corpusDir, batchId)
       Epoch.write(bands.join(admitted.select("doc_id"), Seq("doc_id"))
         .select(col("fp"), col("band"), col("bkey")), censusDir, batchId)
-      admitted.unpersist()
-      batch.unpersist()
     }
 
   /** Start the SPAN-LEVEL admission stream — the streaming twin of d10's
@@ -215,21 +212,20 @@ object CorpusIngest {
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
-        maxCensusParts) { (raw, batchId) =>
-      val batch = raw.persist()
+        maxCensusParts) { (raw, batchId, pin) =>
+      val batch = pin(raw)
       val docsT = batch.select(col("doc_id"),
         size(Text.tokens(col("text"))).cast("long").as("n_tokens"))
       // One tokenize+window pass, scanned by the within-batch census,
-      // the census probe and the per-doc stats (d10's persist pattern).
-      val wins = DedupQueries.windowFps(batch, w)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // the census probe and the per-doc stats (d10's pin pattern).
+      val wins = pin(DedupQueries.windowFps(batch, w))
       wins.count()
       val batchCensus = wins.groupBy("fp").agg(count(lit(1)).as("c"))
       val counted = wins.join(batchCensus, Seq("fp"))
-      // Persisted: covAny and covCross both scan it — without the
-      // persist the stored-census probe (which grows with the corpus)
-      // and the within-batch census would each run twice per epoch.
-      val flagged = Epoch.committed(spark, censusDir, batchId)
+      // Pinned: covAny and covCross both scan it — without the pin the
+      // stored-census probe (which grows with the corpus) and the
+      // within-batch census would each run twice per epoch.
+      val flagged = pin(Epoch.committed(spark, censusDir, batchId)
         .fold(counted.withColumn("in_census", lit(false))) { census =>
           val hits = wins.join(census.select("fp"), Seq("fp"), "left_semi")
             .select(col("doc_id"), col("p"), lit(true).as("in_census"))
@@ -237,8 +233,7 @@ object CorpusIngest {
         }
         .select(col("doc_id"), col("p"),
           (col("c") > 1 || col("in_census")).as("dup_any"),
-          coalesce(col("in_census"), lit(false)).as("dup_cross"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          coalesce(col("in_census"), lit(false)).as("dup_cross")))
       flagged.count()
 
       val covAny = DedupQueries.spanCoverage(
@@ -248,7 +243,7 @@ object CorpusIngest {
         flagged.filter(col("dup_cross")).select("doc_id", "p"), w,
         "n_cross_windows", "cross_covered")
       val wstats = wins.groupBy("doc_id").agg(count(lit(1)).as("n_windows"))
-      val stats = docsT
+      val stats = pin(docsT
         .join(wstats, Seq("doc_id"), "left")
         .join(covAny, Seq("doc_id"), "left")
         .join(covCross, Seq("doc_id"), "left")
@@ -267,22 +262,17 @@ object CorpusIngest {
         // on, so it is ADMITTED (verdict true, never null), mirroring
         // batch d10 which emits the row rather than dropping it.
         .withColumn("admitted",
-          coalesce(col("cross_token_frac") <= maxDupFrac, lit(true)))
-        .persist()
+          coalesce(col("cross_token_frac") <= maxDupFrac, lit(true))))
       stats.count()
 
       Epoch.write(batch
         .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id")),
         corpusDir, batchId)
       Epoch.write(stats, statsDir, batchId)
-      // Last: a write re-caches every cached plan that reads its path, so
-      // any write after this one would rebuild `flagged` and re-probe.
       Epoch.write(wins
         .join(stats.filter(col("admitted")).select("doc_id"), Seq("doc_id"),
           "left_semi")
         .select("fp").distinct(), censusDir, batchId)
-      stats.unpersist(); flagged.unpersist(); wins.unpersist()
-      batch.unpersist()
     }
 
   /** Incoming candidate-vector shape (mirrors the `embeddings` table's
@@ -337,15 +327,14 @@ object CorpusIngest {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming must be in [0, 3] (4x4 banding guarantees a shared " +
         s"band only up to Hamming 3), got $maxHamming")
-    val pin = () => pinMaxHamming(spark, censusDir, maxHamming)
+    val pinRadius = () => pinMaxHamming(spark, censusDir, maxHamming)
     Epoch.run(Epoch.readJson(spark, vecSchema, inputDir), checkpointDir, trigger,
-        censusDir, maxCensusParts, pin) { (raw, batchId) =>
+        censusDir, maxCensusParts, pinRadius) { (raw, batchId, pin) =>
       // Deterministic within-batch dedup on vec_id: duplicate rows
       // would SUM their plane bits (bit 0 twice = bit 1), corrupting
       // the stored sketch for every future probe.
-      val batch = firstPer(raw, "vec_id", col("embedding"), col("label"))
-        .withColumn("v", graft.functions.Vectors.toDoubleVec(col("embedding")))
-        .persist()
+      val batch = pin(firstPer(raw, "vec_id", col("embedding"), col("label"))
+        .withColumn("v", graft.functions.Vectors.toDoubleVec(col("embedding"))))
       // An empty epoch (replayed/no files) must not reach the plane
       // derivation: it has no dimension to draw the planes from.
       if (batch.count() > 0) {
@@ -367,7 +356,7 @@ object CorpusIngest {
             Epoch.write(drawn, planesDir, batchId)
             drawn
           }
-        val sketches = batch
+        val sketches = pin(batch
           .crossJoin(broadcast(planes))
           // functions-based dot (zip_with), not the registered codegen
           // expression: foreachBatch plans run on a cloned session where
@@ -378,31 +367,27 @@ object CorpusIngest {
               expr("shiftleft(CAST(1 AS BIGINT), j)")).otherwise(lit(0L))
               .as("bit"))
           .groupBy("vec_id")
-          .agg(sum(col("bit")).as("sketch"))
-          .persist()
+          .agg(sum(col("bit")).as("sketch")))
         sketches.count()
         val bands = sketches
           .select(col("vec_id"), col("sketch"),
             explode(sequence(lit(0), lit(3))).as("k"))
           .select(col("vec_id"), col("k"),
             expr("shiftright(sketch, k * 4) & 15").as("val"), col("sketch"))
-        val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
+        val admitted = pin(Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
           val rejected = bands
             .join(census.select(col("k"), col("val"), col("sketch").as("stored_sketch")),
               Seq("k", "val"))
             .filter(expr(s"bit_count(sketch ^ stored_sketch) <= $maxHamming"))
             .select("vec_id").distinct()
           batch.join(rejected, Seq("vec_id"), "left_anti")
-        }.persist()
+        })
         Epoch.write(admitted.select(col("vec_id"), col("embedding"), col("label")),
           corpusDir, batchId)
         Epoch.write(bands
           .join(admitted.select("vec_id"), Seq("vec_id"), "left_semi")
           .select(col("k"), col("val"), col("sketch")), censusDir, batchId)
-        admitted.unpersist()
-        sketches.unpersist()
       }
-      batch.unpersist()
     }
   }
 
@@ -458,9 +443,8 @@ object CorpusIngest {
       maxCensusParts: Int = 64,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     Epoch.run(readDocs(spark, inputDir), checkpointDir, trigger, censusDir,
-        maxCensusParts, () => pinSigBits(spark, censusDir, sigBits)) { (raw, batchId) =>
-      val batch = firstPer(raw.withColumn("fp", md5(col("text"))), "fp", col("doc_id"))
-        .persist()
+        maxCensusParts, () => pinSigBits(spark, censusDir, sigBits)) { (raw, batchId, pin) =>
+      val batch = pin(firstPer(raw.withColumn("fp", md5(col("text"))), "fp", col("doc_id")))
       // m4's frame-signature pipeline via the ONE shared derivation
       // (operators/Multimodal.frameSimhash + simhashBands) — the batch
       // dedup and this gate cannot drift on frame size, hash, or band
@@ -468,11 +452,10 @@ object CorpusIngest {
       // `sigBits` defaults to the 60-bit production width (m10's batch
       // twin); 32 keeps byte-for-byte parity with batch m4 — see
       // Text.tokenHash60 for the saturation arithmetic.
-      val sims = graft.operators.Multimodal.frameSimhash(batch, sigBits)
-        .persist()
+      val sims = pin(graft.operators.Multimodal.frameSimhash(batch, sigBits))
       sims.count() // eager: banded probe + census delta both rescan
       val bands = graft.operators.Multimodal.simhashBands(sims, sigBits)
-      val admitted = Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
+      val admitted = pin(Epoch.committed(spark, censusDir, batchId).fold(batch) { census =>
         val exactHit = census.select("fp").distinct()
         val fuzzyHit = bands
           .join(census.filter(col("k") >= 0)
@@ -484,7 +467,7 @@ object CorpusIngest {
         batch
           .join(exactHit, Seq("fp"), "left_anti")
           .join(fuzzyHit, Seq("doc_id"), "left_anti")
-      }.persist()
+      })
       Epoch.write(admitted, corpusDir, batchId)
       // census delta: band rows for framed payloads + one k = -1 row per
       // admitted doc so empty payloads still hit the exact gate
@@ -493,8 +476,5 @@ object CorpusIngest {
         .select(col("fp"), col("k"), col("byte"), col("simhash"))
         .unionByName(admitted.select(col("fp"), lit(-1).as("k"),
           lit(-1L).as("byte"), lit(0L).as("simhash"))), censusDir, batchId)
-      admitted.unpersist()
-      sims.unpersist()
-      batch.unpersist()
     }
 }

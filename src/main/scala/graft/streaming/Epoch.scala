@@ -35,11 +35,13 @@ private[streaming] object Epoch {
       .option("maxFilesPerTrigger", 16)
       .json(dir)
 
-  /** Starts the append-mode stream that runs `gate(batch, batchId)` once
-    * per epoch of `input`. Before the gate, each epoch runs `pin` (a check
-    * of what the census's rows mean, which must fail before anything is
-    * rewritten), then compacts `censusDir` once it holds more than
-    * `maxCensusParts` partitions (0 disables compaction).
+  /** Starts the append-mode stream that runs `gate(batch, batchId, pin)`
+    * once per epoch of `input`. Before the gate, each epoch runs `pin` (a
+    * check of what the census's rows mean, which must fail before anything
+    * is rewritten), then compacts `censusDir` once it holds more than
+    * `maxCensusParts` partitions (0 disables compaction). The gate pins its
+    * intermediates through the epoch's [[graft.Pin.Scope]], released when
+    * the gate returns or throws (a failed [[write]] included).
     */
   def run(
       input: DataFrame,
@@ -48,7 +50,7 @@ private[streaming] object Epoch {
       censusDir: String,
       maxCensusParts: Int,
       pin: () => Unit = () => ())(
-      gate: (DataFrame, Long) => Unit): StreamingQuery = {
+      gate: (DataFrame, Long, graft.Pin.Scope) => Unit): StreamingQuery = {
     val spark = input.sparkSession
     input.writeStream
       .outputMode("append")
@@ -57,7 +59,7 @@ private[streaming] object Epoch {
       .foreachBatch { (raw: DataFrame, batchId: Long) =>
         pin()
         compactCensus(spark, censusDir, batchId, maxCensusParts)
-        gate(raw, batchId)
+        graft.Pin.scoped(scope => gate(raw, batchId, scope))
       }
       .start()
   }

@@ -205,13 +205,4 @@ object LiveFeed {
       }
     }
   }
-
-  /** Watermarked tumbling-window aggregate — the streaming twin of the
-    * batch `s1_tumbling_window` query (same expressions under `readStream`).
-    */
-  def windowedCounts(trades: DataFrame): DataFrame =
-    trades
-      .withWatermark("ts", "1 hour")
-      .groupBy(window(col("ts"), "1 day"), col("symbol"))
-      .agg(count(lit(1)).as("n_trades"), max_by(col("price"), col("ts")).as("last_price"))
 }

@@ -1,28 +1,66 @@
 package graft
 
-import graft.operators.Lineage
+import graft.operators.ConnectedComponents
 import graft.queries.GraphQueries
-import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 
-/** The iterative-graph discipline shared by g1–g4: lineage truncation
-  * keeps per-round plans O(1), and fixed-point early exit is semantics-
-  * preserving (extra synchronous rounds are identity, so the unrolled
-  * fixed-R oracles stay valid).
+/** The iterative-graph discipline shared by g1–g4: every round is a
+  * frame-owned pin whose plan is O(1), fixed-point early exit is
+  * semantics-preserving (extra synchronous rounds are identity, so the
+  * unrolled fixed-R oracles stay valid), and no call leaves a pin behind.
   */
 class GraphSpec extends SparkSpec {
 
-  test("Lineage.truncate preserves rows+schema and rebases the plan onto " +
-    "a single LogicalRDD node (O(1) analysis per round)") {
+  test("Pin.owned preserves rows+schema, rebases the plan onto a single " +
+    "cached relation (O(1) analysis per round) and is no cache-manager entry") {
     import spark.implicits._
     val df = (1 to 100).toDF("x")
       .join((1 to 100).toDF("x"), Seq("x"))
       .groupBy(($"x" % 7).as("k")).count()
-    val t = Lineage.truncate(df)
+    val t = Pin.owned(df)
     assert(t.schema == df.schema)
     assert(t.collect().map(_.toString).sorted
       .sameElements(df.collect().map(_.toString).sorted))
     // the whole upstream join+agg collapses to one leaf
-    assert(t.queryExecution.analyzed.isInstanceOf[LogicalRDD])
+    assert(t.queryExecution.analyzed.isInstanceOf[InMemoryRelation])
+    assert(df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
+  /** Runs `q` to its collected rows; the frame is dropped on return. */
+  private def collected(q: Q, sf: String): Int = q.fn(spark, sf).collect().length
+
+  test("g1, g3, g5 and g10 called twice in one session leave no pin " +
+    "behind once their frames are dropped") {
+    val sf = "/root/testdata/sf0.001"
+    val qs = Seq(GraphQueries.g1PageRank, GraphQueries.g3KCore,
+      GraphQueries.g5BfsHops, GraphQueries.g10Hits)
+    Memo.reset(spark)
+    qs.foreach(collected(_, sf)) // builds the shared views and cells
+    val before = unownedPersists()
+    assert(before.isEmpty, s"persisted RDDs no Memo cell owns: $before")
+    val listed = spark.sparkContext.getPersistentRDDs.size
+    for (_ <- 1 to 2; q <- qs) collected(q, sf)
+    assert(unownedPersists().isEmpty)
+    assert(spark.sparkContext.getPersistentRDDs.size <= listed,
+      "repeated calls must not grow the persisted RDDs")
+    Memo.reset(spark)
+  }
+
+  /** The distributed labels of a 12-node path (11 rounds to converge). */
+  private def pathLabels(): Set[(Long, Long)] = {
+    import spark.implicits._
+    val pairs = (1L until 12L).map(i => (i, i + 1)).toDF("a", "b")
+    ConnectedComponents.minLabels(pairs, checkpointEvery = 3, smallGraphMaxEdges = 0)
+      .as[(Long, Long)].collect().toSet
+  }
+
+  test("ConnectedComponents past a reliable checkpoint leaves no cache " +
+    "entry and no persisted RDD once its labels are dropped") {
+    Memo.reset(spark)
+    assert(pathLabels() == (1L to 12L).map(_ -> 1L).toSet)
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a round must not stay in the cache manager")
+    assert(unownedPersists().isEmpty)
   }
 
   test("the bucketed materialized views are SEMANTICALLY the derivations " +

@@ -261,12 +261,4 @@ class LiveFeedSpec extends SparkSpec {
     assert(dead.map(r => (r.getAs[String]("symbol"), r.getAs[Int]("batch_id"))) ==
       Seq(("BADP", 0), ("BADT", 0)))
   }
-
-  test("windowedCounts compiles against a streaming source") {
-    val root = Files.createTempDirectory("livefeed2").toString
-    Files.createDirectories(Paths.get(s"$root/in"))
-    val agg = LiveFeed.windowedCounts(LiveFeed.readTrades(spark, s"$root/in"))
-    assert(agg.isStreaming)
-    assert(agg.columns.contains("n_trades") && agg.columns.contains("last_price"))
-  }
 }

@@ -49,13 +49,12 @@ class PageRankSpec extends SparkSpec {
   }
 
   test("g1's final plan is lineage-truncated: no base-table scan survives") {
-    // The returned frame must be a LogicalRDD over the materialized final
-    // round — K rounds of joins must NOT accumulate in the analyzed plan
-    // (the ConnectedComponents O(1)-plan discipline).
+    // The returned frame must be the final round's frame-owned pin, one
+    // cached-relation leaf — K rounds of joins must NOT accumulate in the
+    // analyzed plan (the ConnectedComponents O(1)-plan discipline).
     val g = sym(Seq((1L, 2L), (2L, 3L)))
-    val plan = PageRank.ranks(g, iterations = 4)
-      .queryExecution.analyzed.toString
-    assert(plan.contains("LogicalRDD"))
-    assert(!plan.contains("Join"), s"per-round joins leaked into the plan:\n$plan")
+    val analyzed = PageRank.ranks(g, iterations = 4).queryExecution.analyzed
+    assert(analyzed.isInstanceOf[org.apache.spark.sql.execution.columnar.InMemoryRelation],
+      s"the ranks must be one pinned relation:\n$analyzed")
   }
 }

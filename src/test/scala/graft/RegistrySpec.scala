@@ -120,15 +120,27 @@ class RegistrySpec extends SparkSpec {
     assert(stray.isEmpty, s"annotations for unknown queries: $stray")
   }
 
+  /** The signature of `q`'s executed plan; the frame is dropped on return. */
+  private def executedSignature(q: Q): String = {
+    val df = q.fn(spark, sf)
+    assert(df.columns.nonEmpty)
+    Plans.signature(Plans.executed(df))
+  }
+
   /** Each query runs from a clean slate, as in `graft.Plans`, so its
     * signature does not depend on what an earlier query left cached.
+    * Once its result is collected and the frame dropped, every persisted
+    * RDD still listed must belong to a [[Memo]] cell: a pin no cell owns
+    * would outlive the query.
     */
   SparkEntry.registry.foreach { q =>
     test(s"${q.name} executes at sf0.001") {
       Memo.reset(spark)
-      val df = q.fn(spark, sf)
-      assert(df.columns.nonEmpty)
-      val sig = Plans.signature(Plans.executed(df))
+      val sig = executedSignature(q)
+      val leaked = unownedPersists()
+      assert(leaked.isEmpty, s"${q.name} left persisted RDDs that no Memo cell owns: " +
+        leaked.toSeq.sorted.map(id => spark.sparkContext.getPersistentRDDs.get(id)
+          .fold(s"$id")(_.toString.linesIterator.next())).mkString(", "))
       val want = committed.find(_._1 == q.name).map(_._2)
       assert(want.contains(sig),
         s"${q.name}: the executed plan's signature is not PLANS.md's line\n" +

@@ -44,6 +44,24 @@ trait SparkSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
+  /** The persisted RDDs of the context that no [[Memo]] cell owns. A
+    * frame-owned pin stays listed until a GC lets the `ContextCleaner`
+    * free it, so only when such an RDD is listed does this force GCs,
+    * for at most 20 seconds, until the list clears; a clean state costs
+    * nothing extra. Ids only: `getPersistentRDDs` holds the RDDs strongly.
+    */
+  protected def unownedPersists(): Set[Int] = {
+    def unowned = spark.sparkContext.getPersistentRDDs.keysIterator.toSet -- Memo.owned(spark)
+    val deadline = System.nanoTime() + 20L * 1000000000L
+    var left = unowned
+    while (left.nonEmpty && System.nanoTime() < deadline) {
+      System.gc()
+      Thread.sleep(200)
+      left = unowned
+    }
+    left
+  }
+
   /** Jobs launched by `body` on this thread. */
   protected def jobsLaunchedBy[T](body: => T): (T, Int) = {
     val sc = spark.sparkContext
