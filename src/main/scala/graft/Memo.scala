@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 /** The session's shared derived state, under one owner: every memoized
   * derivation a query shares with its siblings (the PQ/ADC table, the PCA
   * model, the triangle census, the g4 labels, the persisted 5-gram
-  * shingles) is a named entry here, and [[reset]] is the only way to drop
-  * them.
+  * shingles, and each corpus file's inferred schema, one cell per file
+  * version, see [[Tables]]) is a named entry here, and [[reset]] is the
+  * only way to drop them.
   *
   * Each entry is a one-shot lazy cell keyed by `(session, name)`.
   * `ConcurrentHashMap.computeIfAbsent` only allocates the cell (the build

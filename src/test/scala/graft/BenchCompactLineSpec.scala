@@ -1,11 +1,10 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The compact stdout line of [[Bench]]: slowest 15 plus the pinned
-  * comparator set, with failures visible rather than dropped.
+  * comparator set, with failures visible rather than dropped; and the
+  * per-row codegen figures beside it.
   */
-class BenchCompactLineSpec extends AnyFunSuite {
+class BenchCompactLineSpec extends SparkSpec {
 
   private val others = (1 to 20).map(i => f"q$i%02d" -> i.toDouble)
 
@@ -30,5 +29,14 @@ class BenchCompactLineSpec extends AnyFunSuite {
     val stray = (Bench.excluded.toSeq ++ Bench.pinned).filterNot(SparkEntry.queries.contains)
     assert(stray.isEmpty, s"names not in the registry: $stray")
     assert(Bench.pinned.forall(Bench.headline.contains))
+  }
+
+  test("Bench.Codegen counts each codegen compile and its compile seconds") {
+    val (n0, s0) = Bench.Codegen.read()
+    // A literal no earlier plan used makes new source: the codegen cache misses.
+    spark.range(10).selectExpr(s"id * ${System.nanoTime() % 1000003 + 7} AS v").collect()
+    val (n1, s1) = Bench.Codegen.read()
+    assert(n1 > n0, "the new plan must compile at least one class")
+    assert(s1 > s0, s"compile seconds must grow with the count ($s0 -> $s1)")
   }
 }

@@ -11,6 +11,10 @@ artifact shapes:
 
 Usage: python3 tools/benchdiff.py OLD.json NEW.json [threshold=1.5]
 
+When both artifacts carry `codegen_compiles` (the classes each reported
+run compiled), the per-query compile-count deltas are printed too; they
+never gate.
+
 Comparisons are only meaningful at equal host parallelism — round-5's
 BENCH_ALL was recorded at non-default CPUs and poisoned the diff; the tool
 warns (does not gate) when the wrappers carry differing `cpus`, and always
@@ -38,14 +42,14 @@ def load(path):
     return (raw.get("queries", {}) or {}, raw.get("value"), cpus,
             raw.get("cores_eff", {}) or {},
             (raw.get("canary_first_sec"), raw.get("canary_last_sec")),
-            raw.get("canary_last_raw_sec"))
+            raw.get("canary_last_raw_sec"), raw.get("codegen_compiles"))
 
 def main():
     if len(sys.argv) < 3:
         print(__doc__)
         return 2
-    old_q, old_total, old_cpus, old_eff, old_can, old_raw = load(sys.argv[1])
-    new_q, new_total, new_cpus, new_eff, new_can, new_raw = load(sys.argv[2])
+    old_q, old_total, old_cpus, old_eff, old_can, old_raw, old_cg = load(sys.argv[1])
+    new_q, new_total, new_cpus, new_eff, new_can, new_raw, new_cg = load(sys.argv[2])
     thr = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     # Sub-0.3s timings are dominated by scheduler noise at local[N]; a 1.5x
     # blip there is not a plan regression.
@@ -150,6 +154,19 @@ def main():
     for name, a, b in improved[:10]:
         print(f"improved  {name}: {a:.3f} -> {b:.3f} "
               f"({b/a:.2f}x raw, {b/a/med:.2f}x vs median)")
+    # Codegen compiles of each reported run (artifacts since the field
+    # exists): a plan change that compiles more classes shows here even
+    # when its wall is inside the noise. Informational, never gating.
+    if old_cg is not None and new_cg is not None:
+        both = sorted(set(old_cg) & set(new_cg))
+        moved = sorted(((n, int(old_cg[n]), int(new_cg[n])) for n in both
+                        if old_cg[n] != new_cg[n]),
+                       key=lambda r: (-abs(r[2] - r[1]), r[0]))
+        print(f"codegen compiles: {sum(int(old_cg[n]) for n in both)} -> "
+              f"{sum(int(new_cg[n]) for n in both)} over {len(both)} shared "
+              f"queries, {len(moved)} changed")
+        for name, a, b in moved:
+            print(f"codegen   {name}: {a} -> {b} compiles ({b - a:+d})")
     if died:
         print(f"FAIL: {len(died)} quer{'y' if len(died)==1 else 'ies'} "
               "went from passing to crash/timeout")
