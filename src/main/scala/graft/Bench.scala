@@ -71,43 +71,13 @@ object Bench {
 
   /** This JVM's codegen compilations so far: `(compiles, seconds)`. The
     * count is `CodegenMetrics.METRIC_COMPILATION_TIME`'s; that histogram
-    * keeps a sampled reservoir and no sum, so the seconds add up the
-    * compile time `CodeGenerator` logs beside each update, caught by an
-    * appender on that one logger (its INFO lines reach no console; its
-    * warnings still do).
+    * keeps a sampled reservoir and no sum, so the seconds are
+    * `CodeGenerator.compileTime`, the running total Spark adds each
+    * compile's time to beside the histogram update.
     */
-  private[graft] object Codegen {
-    private val logger = "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator"
-    private val Compiled = """Code generated in ([0-9.Ee+-]+) ms""".r
-    private val ms = new java.util.concurrent.atomic.DoubleAdder
-
-    private lazy val listening: Unit = {
-      import org.apache.logging.log4j.{Level, LogManager}
-      import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-      import org.apache.logging.log4j.core.appender.AbstractAppender
-      import org.apache.logging.log4j.core.config.{LoggerConfig, Property}
-      val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-      val conf = ctx.getConfiguration
-      val sink = new AbstractAppender("graft-codegen", null, null, true, Property.EMPTY_ARRAY) {
-        override def append(e: LogEvent): Unit = e.getMessage.getFormattedMessage match {
-          case Compiled(t) => ms.add(t.toDouble)
-          case _ => ()
-        }
-      }
-      sink.start()
-      val cfg = new LoggerConfig(logger, Level.INFO, false)
-      cfg.addAppender(sink, Level.INFO, null)
-      conf.getRootLogger.getAppenders.values.forEach(a => cfg.addAppender(a, Level.WARN, null))
-      conf.addLogger(logger, cfg)
-      ctx.updateLoggers()
-    }
-
-    def read(): (Long, Double) = {
-      listening
-      (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
-        ms.sum / 1e3)
-    }
-  }
+  private[graft] def codegen(): (Long, Double) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e9)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -183,7 +153,7 @@ object Bench {
     // columns prunable) is the same on both paths by construction.
     def materialize(df: org.apache.spark.sql.DataFrame): Unit = { df.count(); () }
     def once(name: String): (Boolean, Double, Double, (Long, Double)) = {
-      val (cg0, cgs0) = Codegen.read()
+      val (cg0, cgs0) = codegen()
       val task0 = taskMs.get()
       val t0 = System.nanoTime()
       @volatile var ok = false
@@ -222,7 +192,7 @@ object Bench {
         val cur = taskMs.get()
         if (cur == last) stable += 1 else { stable = 0; last = cur }
       }
-      val (cg1, cgs1) = Codegen.read()
+      val (cg1, cgs1) = codegen()
       (ok, wall, if (effTainted) -1.0 else (taskMs.get() - task0) / 1e3, (cg1 - cg0, cgs1 - cgs0))
     }
     // The container's 32 vCPUs deliver a host-dependent 7-30 cores of

@@ -31,11 +31,11 @@ class BenchCompactLineSpec extends SparkSpec {
     assert(Bench.pinned.forall(Bench.headline.contains))
   }
 
-  test("Bench.Codegen counts each codegen compile and its compile seconds") {
-    val (n0, s0) = Bench.Codegen.read()
+  test("Bench.codegen counts each codegen compile and its compile seconds") {
+    val (n0, s0) = Bench.codegen()
     // A literal no earlier plan used makes new source: the codegen cache misses.
     spark.range(10).selectExpr(s"id * ${System.nanoTime() % 1000003 + 7} AS v").collect()
-    val (n1, s1) = Bench.Codegen.read()
+    val (n1, s1) = Bench.codegen()
     assert(n1 > n0, "the new plan must compile at least one class")
     assert(s1 > s0, s"compile seconds must grow with the count ($s0 -> $s1)")
   }

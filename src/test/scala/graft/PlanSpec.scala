@@ -43,10 +43,6 @@ class PlanSpec extends SparkSpec {
   private def signature(name: String): String =
     Plans.signature(Plans.executed(SparkEntry.queries(name)(spark, sf)))
 
-  /** The file scans `Plans.signature` counts: live scans outside every pin. */
-  private def liveScans(plan: SparkPlan): Seq[FileSourceScanExec] =
-    Plans.collectWithSubqueries(plan) { case f: FileSourceScanExec => f }
-
   /** Every as-of plans through the native exec: an `AsOfJoin` node (the
     * rendered name drops "Exec"), no Window, and no cross product.
     */
@@ -1251,8 +1247,11 @@ class PlanSpec extends SparkSpec {
     val executed = Plans.executed(df)
     val plan = finalText(executed)
     // x25's bigram pass is computed once, inside its pin (one cached
-    // leaf); its unigram pass is the only live scan of text.
-    val textScans = liveScans(executed).count(_.requiredSchema.fieldNames.contains("text"))
+    // leaf); its unigram pass is the only live scan of text. These are
+    // the file scans `Plans.signature` counts, outside every pin.
+    val textScans = Plans.collectWithSubqueries(executed) {
+      case f: FileSourceScanExec if f.requiredSchema.fieldNames.contains("text") => f
+    }.size
     assert(textScans <= 1,
       s"gate must not re-scan text beyond x25's unigram pass, got $textScans:\n" +
         Plans.signature(executed))

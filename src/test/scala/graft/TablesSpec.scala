@@ -14,12 +14,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 class TablesSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
-  /** Jobs started, on any thread, while `body` runs. */
-  private def jobs[T](body: => T): (T, Int) = {
-    val (out, started) = jobsStartedDuring(body)
-    (out, started.size)
-  }
-
   /** Writes `df` as the single parquet file `target`, replacing it. */
   private def writeFile(df: DataFrame, target: Path): Unit = {
     val stage = Files.createTempDirectory("tables-spec-stage")
@@ -38,22 +32,22 @@ class TablesSpec extends SparkSpec {
 
   test("a second load of a table launches no Spark job; each session infers its own") {
     Memo.reset(spark)
-    val (first, j1) = jobs(Tables.table(spark, sf, "lineitem"))
+    val (first, j1) = jobsLaunchedBy(Tables.table(spark, sf, "lineitem"))
     assert(j1 == 1, s"the first load infers the schema in one job, launched $j1")
-    val (second, j2) = jobs(Tables.table(spark, sf, "lineitem"))
+    val (second, j2) = jobsLaunchedBy(Tables.table(spark, sf, "lineitem"))
     assert(j2 == 0, s"the second load must reuse the schema, launched $j2 jobs")
     assert(second.schema == first.schema)
     val other = spark.newSession()
-    val (_, j3) = jobs(Tables.table(other, sf, "lineitem"))
+    val (_, j3) = jobsLaunchedBy(Tables.table(other, sf, "lineitem"))
     assert(j3 == 1, s"a new session infers its own schema, launched $j3 jobs")
     Memo.reset(spark)
   }
 
   test("Memo.reset drops the schema: the next load infers it again") {
     Memo.reset(spark)
-    jobs(Tables.table(spark, sf, "orders"))
+    jobsLaunchedBy(Tables.table(spark, sf, "orders"))
     Memo.reset(spark)
-    val (_, n) = jobs(Tables.table(spark, sf, "orders"))
+    val (_, n) = jobsLaunchedBy(Tables.table(spark, sf, "orders"))
     assert(n == 1, s"after a reset the load must infer again, launched $n jobs")
     Memo.reset(spark)
   }
@@ -66,7 +60,7 @@ class TablesSpec extends SparkSpec {
       val dropped = before.columns.last
       val rows = before.count()
       writeFile(before.drop(dropped), file)
-      val (after, n) = jobs(Tables.table(spark, dir.toString, "lineitem"))
+      val (after, n) = jobsLaunchedBy(Tables.table(spark, dir.toString, "lineitem"))
       assert(n == 1, s"the rewritten file must be inferred again, launched $n jobs")
       assert(after.columns.toSeq == before.columns.toSeq.filterNot(_ == dropped))
       assert(after.count() == rows)
@@ -102,7 +96,7 @@ class TablesSpec extends SparkSpec {
     assert(picked.size == 57)
     Memo.reset(spark)
     def pass(): Map[String, Int] =
-      picked.map(q => q.name -> jobs(q.fn(spark, sf))._2).toMap
+      picked.map(q => q.name -> jobsLaunchedBy(q.fn(spark, sf))._2).toMap
     val first = pass()
     val second = pass()
     Memo.reset(spark)
